@@ -6,10 +6,11 @@ but FAIR is FIFO *inside* a pool — isolation needs each route family in
 its own pool (api/server._route_pool). This bench serves one synthetic
 store and measures light-route latency (node_info point lookups, mrca)
 while heavy clients hammer subtree extractions, three times in the same
-process (A/B/A): the A phases run with TREEMACHINE_SINGLE_POOL=1 — the
-shipped one-pool escape hatch, the pre-r12 behavior — both FIRST and
-LAST so JVM/JIT warm-order bias runs against the per-family pools, whose
-single B phase must still beat the better A phase. The per-family pools
+process (A/B/A): the A phases route every request family into one
+"shared" pool — the pre-r12 behavior, switched on here by patching
+api/server._route_pool for the phase — both FIRST and LAST so JVM/JIT
+warm-order bias runs against the per-family pools, whose single B phase
+must still beat the better A phase. The per-family pools
 should cut the light routes' p50/p95 under identical heavy load.
 
 Run: python bench_fair.py [n_tips] [light_reqs] [n_heavy] [n_light]
@@ -19,7 +20,6 @@ Prints one JSON line.
 from __future__ import annotations
 
 import json
-import os
 import random
 import sys
 import threading
@@ -94,7 +94,7 @@ def main() -> None:
     n_heavy = int(sys.argv[3]) if len(sys.argv) > 3 else 6
     n_light = int(sys.argv[4]) if len(sys.argv) > 4 else 4
 
-    from treemachine_spark.api.server import make_server
+    from treemachine_spark.api import server
     from treemachine_spark.session import get_spark
 
     spark = get_spark("bench-fair")
@@ -102,7 +102,7 @@ def main() -> None:
     internals = [f"n{i}" for i in range(1, 40)]  # depth-1/2 heavy roots
     # cache off: every request must hit the engine, or the light routes
     # would measure dict lookups instead of scheduler behavior
-    srv = make_server(store, host="127.0.0.1", port=0, cache_size=0)
+    srv = server.make_server(store, host="127.0.0.1", port=0, cache_size=0)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     base = f"http://127.0.0.1:{srv.server_address[1]}"
 
@@ -125,14 +125,14 @@ def main() -> None:
         return _phase(base, tips, internals, light_reqs, n_heavy, n_light)
 
     def run_single_pool_phase() -> dict:
-        # the SHIPPED escape hatch (api/server._route_pool reads it per
-        # call), not a monkeypatch — the bench exercises the code path a
-        # deployment would actually flip (r12 review)
-        os.environ["TREEMACHINE_SINGLE_POOL"] = "1"
+        # ServerCore._in_pool looks _route_pool up per request, so the
+        # patch collapses every route family into one pool for this phase
+        route_pool = server._route_pool
+        server._route_pool = lambda path: "shared"
         try:
             return run_phase()
         finally:
-            os.environ.pop("TREEMACHINE_SINGLE_POOL", None)
+            server._route_pool = route_pool
 
     # A/B/A: phase order warms the JVM in favor of whatever runs later,
     # so the single-pool baseline runs BOTH first and last and the

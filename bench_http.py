@@ -203,23 +203,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     store, tips, n_edges, build_sec = build_synth_store(spark, n_tips)
 
-    # optional r5 mode: serve request-scale closure fetches through the
-    # bucket-pruned warehouse layout instead of the cached-closure InSet
-    # scan (only the mrca requests below touch it — bench node_info has no
-    # lineage and subtree filters on ancestor_id)
-    pruned_table = None
-    layout_sec = None
-    if "pruned" in sys.argv[3:]:
-        from treemachine_spark.ingest import write_bucketed_closure
-
-        t1 = time.time()
-        write_bucketed_closure([store], table="bench_paths_bkt", buckets=256)
-        layout_sec = round(time.time() - t1, 2)
-        pruned_table = "bench_paths_bkt"
-
-    srv = make_server(
-        store, host="127.0.0.1", port=0, pruned_closure_table=pruned_table
-    )
+    srv = make_server(store, host="127.0.0.1", port=0)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     base = f"http://127.0.0.1:{srv.server_address[1]}"
 
@@ -283,8 +267,6 @@ def main() -> None:
                 "n_tips": n_tips,
                 "n_edges": n_edges,
                 "store_build_sec": build_sec,
-                "pruned_serving": pruned_table is not None,
-                "bucketed_layout_write_sec": layout_sec,
                 **results,
             }
         )

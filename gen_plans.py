@@ -132,76 +132,9 @@ def main() -> None:
         )
         plan = df._jdf.queryExecution().explainString(simple)
         out += [f"## {name}", "", note, "", "```", plan.rstrip(), "```", ""]
-    out += _bucketed_closure_section(spark)
     out += _cobucketed_facts_section(spark)
     Path(_REPO, "PLANS.md").write_text("\n".join(out))
     print("wrote PLANS.md")
-
-
-def _bucketed_closure_section(spark) -> list[str]:
-    """Bucketed closure layout (VERDICT r3 #10): partition pruning + the
-    Exchange-free co-bucketed closure⋈leaves join."""
-    from pyspark.sql import functions as F
-
-    from treemachine_spark.graph.closure import build_closure
-    from treemachine_spark.ingest import (
-        GraphStore,
-        write_bucketed_closure,
-        write_bucketed_leaves,
-    )
-    from treemachine_spark.sources.newick import newick_to_dataframes
-
-    def _store(tid, nwk):
-        nodes, edges = newick_to_dataframes(spark, nwk, tid)
-        return GraphStore(
-            tree_id=tid,
-            root_id="root",
-            nodes=nodes,
-            edges=edges,
-            paths=build_closure(edges.select("child_id", "parent_id")),
-            node_annotations=spark.createDataFrame([], "node_id string"),
-            source_map=spark.createDataFrame([], "source_id string"),
-            tree_meta={},
-        )
-
-    stores = [
-        _store("synthA", "((a1,a2)i1,(a3,a4)i2)root;"),
-        _store("synthB", "(((b1,b2)j1,b3)j2,b4)root;"),
-    ]
-    write_bucketed_closure(stores, table="plans_paths_bkt", buckets=4)
-    write_bucketed_leaves(stores, table="plans_leaves_bkt", buckets=4)
-    p = spark.table("plans_paths_bkt").where(F.col("synth_id") == "synthA")
-    l = (
-        spark.table("plans_leaves_bkt")
-        .where(F.col("synth_id") == "synthA")
-        .select("node_id")
-    )
-    joined = p.hint("merge").join(l.hint("merge"), "node_id")
-    simple = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    pruned_plan = p._jdf.queryExecution().explainString(simple)
-    join_plan = joined._jdf.queryExecution().explainString(simple)
-    spark.sql("DROP TABLE IF EXISTS plans_paths_bkt")
-    spark.sql("DROP TABLE IF EXISTS plans_leaves_bkt")
-    return [
-        "## bucketed closure layout (ingest.write_bucketed_closure)",
-        "",
-        "The persisted closure as a synth_id-partitioned, node_id-bucketed "
-        "warehouse table (SURVEY §4 optional optimization). Per-tree reads "
-        "partition-prune (PartitionFilters lists the synth_id predicate, "
-        "SelectedBucketsCount shows the bucketed scan); the co-bucketed "
-        "closure⋈leaves join — the tip_counts/A1 shape — runs with ZERO "
-        "Exchange: the shuffle happened once at ingest write, not per query. "
-        "Assertions: tests/test_bucketed_closure.py.",
-        "",
-        "```",
-        pruned_plan.rstrip(),
-        "```",
-        "",
-        "```",
-        join_plan.rstrip(),
-        "```",
-        "",
-    ]
 
 
 def _cobucketed_facts_section(spark) -> list[str]:

@@ -1783,60 +1783,3 @@ def test_stats_scatter_families_version_skew(spark, base_url, tmp_path):
         for srv in (old_a, old_b, srv_a, srv_b, srv_u):
             srv.shutdown()
             srv.server_close()
-
-
-def test_weighted_scheduler_pools_optin(spark):
-    """r12 (NOTES candidate #2): the packaged fairscheduler.xml gives the
-    serving route families weighted pools (interactive 4/8, index 2/4,
-    tree-heavy 1 FIFO) behind TREEMACHINE_SCHEDULER_XML=default — kept
-    OPT-IN because bench_fair measured it a wash vs the equal-weight
-    on-demand pools. The default session must NOT carry the file; the
-    opt-in is asserted against a LIVE scheduler in a subprocess (a fresh
-    JVM is the only place the conf can bind)."""
-    import subprocess
-    import sys
-    import xml.etree.ElementTree as ET
-    from pathlib import Path
-
-    import treemachine_spark
-
-    xml_path = Path(treemachine_spark.__file__).parent / "fairscheduler.xml"
-    assert xml_path.exists()
-    pools = {
-        p.get("name"): {c.tag: c.text for c in p}
-        for p in ET.parse(xml_path).getroot()
-    }
-    assert pools["interactive"]["weight"] == "4"
-    assert pools["interactive"]["minShare"] == "8"
-    assert pools["index"]["weight"] == "2"
-    assert pools["tree-heavy"]["schedulingMode"] == "FIFO"
-
-    # default: no allocation file on the shared test session
-    assert (
-        spark.sparkContext.getConf().get("spark.scheduler.allocation.file")
-        is None
-    )
-
-    probe = (
-        "import sys; sys.path.insert(0, {repo!r})\n"
-        "from treemachine_spark.session import get_spark\n"
-        "sc = get_spark('sched-xml-probe').sparkContext\n"
-        "p = sc._jsc.sc().getPoolForName('interactive')\n"
-        "assert p.isDefined() and p.get().weight() == 4, 'pool not loaded'\n"
-        "print('WEIGHTED_OK')\n"
-    ).format(repo=str(Path(treemachine_spark.__file__).parent.parent))
-    out = subprocess.run(
-        [sys.executable, "-c", probe],
-        env={
-            "PATH": "/usr/bin:/bin",
-            "HOME": "/root",
-            "JAVA_HOME": __import__("os").environ.get("JAVA_HOME", ""),
-            "TREEMACHINE_SCHEDULER_XML": "default",
-            "SPARK_GRAFT_CPUS": "2",
-            "SPARK_DRIVER_MEM": "1g",
-        },
-        capture_output=True,
-        text=True,
-        timeout=180,
-    )
-    assert "WEIGHTED_OK" in out.stdout, out.stderr[-2000:]

@@ -214,3 +214,34 @@ def test_induced_subtree_bad_ids(api):
 
     with pytest.raises(BadInputError):
         api.induced_subtree(ott_ids=[536234])
+
+
+def test_malformed_id_and_height_args_are_400(store):
+    """Request arguments of the wrong type are the caller's error: the
+    server answers 400 with a message, never a 500, and a bare string is
+    not read as a list of one-character ids."""
+    from treemachine_spark.api.server import ServerCore
+
+    core = ServerCore(store, cache_size=0)
+    for path, body in (
+        ("/v3/tree_of_life/mrca", {"ott_ids": ["abc"]}),
+        ("/v3/tree_of_life/mrca", {"ott_ids": [None]}),
+        ("/v3/tree_of_life/mrca", {"node_ids": "ott536234"}),
+        ("/v3/tree_of_life/mrca", {"ott_ids": 536234}),
+        ("/v3/tree_of_life/mrca", {"node_ids": [536234]}),
+        ("/v3/tree_of_life/induced_subtree", {"ott_ids": ["x", "y"]}),
+        ("/v3/tree_of_life/induced_subtree", {"node_ids": "ott536234,ott810751"}),
+        ("/v3/tree_of_life/node_info", {"ott_id": "abc"}),
+        ("/v3/tree_of_life/subtree", {"ott_id": "abc"}),
+        ("/v3/tree_of_life/subtree", {"ott_id": 81461, "height_limit": "2"}),
+        ("/v3/tree_of_life/subtree",
+         {"ott_id": 81461, "format": "arguson", "height_limit": "2"}),
+    ):
+        status, resp = core.handle(path, body)
+        assert status == 400, (path, body, status, resp)
+        assert resp["message"], (path, body)
+    # well-formed requests on the same core still answer
+    assert core.handle("/v3/tree_of_life/mrca", {"ott_ids": [536234, 810751]})[0] == 200
+    assert core.handle(
+        "/v3/tree_of_life/subtree", {"ott_id": 81461, "height_limit": 1}
+    )[0] == 200

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_CORRECT, SF_SMOKE
 from treemachine_spark.graph import traversal as T
+from treemachine_spark.graph.hierarchy import ROOT_ID
 from treemachine_spark.workload.queries import get_ctx
 
 
@@ -27,11 +28,21 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _mrca_raw(ctx, tips):
+    """The driver tier over the RAW closure (``paths=`` + ``root_id=``),
+    the form api.v3 serves mrca through: self rows are synthesized for
+    tips the scan proves valid, and for the root, which has no rows."""
+    return T.mrca(
+        ctx["paths_self"], list(tips), max_driver_tips=10**9,
+        paths=ctx["paths"], root_id=ROOT_ID,
+    )
+
+
 def test_mrca_paths_agree_small(spark, ctx):
     tips = ctx["induced_tips"]
     fast = T.mrca(ctx["paths_self"], list(tips), max_driver_tips=10**9)
     joined = T.mrca(ctx["paths_self"], list(tips), max_driver_tips=0)
-    assert _rows(fast) == _rows(joined)
+    assert _rows(fast) == _rows(joined) == _rows(_mrca_raw(ctx, tips))
     assert len(_rows(fast)) == 1
 
 
@@ -47,15 +58,22 @@ def test_mrca_joined_tip_is_own_ancestor(spark, ctx):
     reg = (
         ctx["edges"].where(F.col("child_id") == "n3").select("parent_id").first()[0]
     )
-    fast = T.mrca(ctx["paths_self"], ["n3", reg], max_driver_tips=10**9)
-    joined = T.mrca(ctx["paths_self"], ["n3", reg], max_driver_tips=0)
-    assert _rows(fast) == _rows(joined) == [(reg, 1)]
+    for tips, want in (
+        (["n3", reg], [(reg, 1)]),
+        # the root as a tip: it has no closure rows of its own
+        (["n3", ROOT_ID], [(ROOT_ID, 0)]),
+    ):
+        fast = T.mrca(ctx["paths_self"], tips, max_driver_tips=10**9)
+        joined = T.mrca(ctx["paths_self"], tips, max_driver_tips=0)
+        raw = _mrca_raw(ctx, tips)
+        assert _rows(fast) == _rows(joined) == _rows(raw) == want, tips
 
 
 def test_mrca_joined_disjoint_trees_empty(spark, ctx):
     # ids that share no ancestor -> empty result on both paths
     joined = T.mrca(ctx["paths_self"], ["n3", "no_such_node"], max_driver_tips=0)
     assert joined.count() == 0
+    assert _mrca_raw(ctx, ["n3", "no_such_node"]).count() == 0
 
 
 @pytest.mark.slow

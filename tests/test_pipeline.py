@@ -267,17 +267,6 @@ def test_decode_jpeg_header_truncated_sof_is_valueerror():
             multimodal.decode_jpeg_header(payload)
 
 
-def test_scheduler_xml_typo_raises(monkeypatch):
-    """r12 advice (low): an explicitly-set TREEMACHINE_SCHEDULER_XML
-    pointing at a nonexistent file must fail loudly, not silently drop
-    the weighted pools; the off/0/'' sentinels still skip quietly."""
-    from treemachine_spark import session as tm_session
-
-    monkeypatch.setenv("TREEMACHINE_SCHEDULER_XML", "/no/such/alloc.xml")
-    with pytest.raises(FileNotFoundError, match="alloc.xml"):
-        tm_session.get_spark()
-
-
 def test_probe_media_null_and_corrupt_content_pass_through(spark):
     """r12 review: NULL content reaches the Arrow batch as None
     (bytes(None) would TypeError) and corrupt payloads raise typed

@@ -28,7 +28,6 @@ concurrent request jobs FIFO-fair across its local threads. Start with:
 from __future__ import annotations
 
 import json
-import os
 import threading
 from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -175,10 +174,6 @@ _HEAVY_TREE_ROUTES = frozenset(
 
 
 def _route_pool(path: str) -> str:
-    if os.environ.get("TREEMACHINE_SINGLE_POOL"):
-        # benchmarking/ops escape hatch: collapse every route family into
-        # one pool (the pre-r12 behavior) for A/B runs like bench_soak's
-        return "shared"
     if path in _HEAVY_TREE_ROUTES:
         return "tree-heavy"
     if path in (ANN_ROUTE, DUP_ROUTE, DUP_TEXT_ROUTE):
@@ -222,7 +217,6 @@ class ServerCore:
         self,
         store,
         cache_size: int = 256,
-        pruned_closure_table: str | None = None,
         stats_sketch=None,
         distinct_sketch=None,
         ann_index=None,
@@ -254,7 +248,6 @@ class ServerCore:
         # /v3/documents/duplicates on the same snapshot contract
         self.dedup_index = dedup_index
         self.cache = ResponseCache(cache_size) if cache_size > 0 else None
-        self.pruned_closure_table = pruned_closure_table
         # Store generation: bumped by swap_store AFTER the new APIs are
         # bound, under the cache lock. A request captures the generation
         # before computing; the cache skips the insert when it changed
@@ -268,9 +261,7 @@ class ServerCore:
         from treemachine_spark.api.v2 import TreeOfLifeV2
         from treemachine_spark.api.v3 import TreeOfLifeV3
 
-        v3 = TreeOfLifeV3(
-            store, pruned_closure_table=self.pruned_closure_table
-        )
+        v3 = TreeOfLifeV3(store)
         self.store = store
         self.apis = {"v3": v3, "v2": TreeOfLifeV2(v3)}
 
@@ -319,6 +310,19 @@ class ServerCore:
                 self.cache._data.clear()
         else:
             self._generation += 1
+
+    def _cached(self, key, run) -> tuple[int, dict]:
+        """``run()`` through the response cache under ``key``, or directly
+        when caching is off. The generation is captured BEFORE ``run``
+        reads the served snapshot: the only interleaving this allows is
+        (old gen, new snapshot), which merely skips caching a valid result
+        — never (new gen, old snapshot)."""
+        if self.cache is None:
+            return run()
+        gen = self._generation
+        return self.cache.get_or_compute(
+            key, run, still_valid=lambda: self._generation == gen
+        )
 
     def handle(self, path: str, body: dict) -> tuple[int, dict]:
         return self._handle_routed(path, body)
@@ -389,16 +393,7 @@ class ServerCore:
             except Exception as e:  # unexpected -> 500, never kill the server
                 return 500, {"message": f"{type(e).__name__}: {e}"}
 
-        if self.cache is None:
-            return run()
-        # capture the generation BEFORE the apis read inside run(): the
-        # only interleaving this allows is (old gen, new apis), which
-        # merely skips caching a valid result — never (new gen, old apis)
-        gen = self._generation
-        key = (path, json.dumps(body, sort_keys=True))
-        return self.cache.get_or_compute(
-            key, run, still_valid=lambda: self._generation == gen
-        )
+        return self._cached((path, json.dumps(body, sort_keys=True)), run)
 
     def _handle_reload(self, body: dict) -> tuple[int, dict]:
         """Freshness control plane: reload-and-swap this worker's served
@@ -438,12 +433,8 @@ class ServerCore:
 
         if sketch is None:
             return 404, {"message": "no stats sketch configured on this server"}
-        if self.cache is None:
-            return run()
-        gen = self._generation
-        key = (route, json.dumps(body, sort_keys=True), sketch.state_token())
-        return self.cache.get_or_compute(
-            key, run, still_valid=lambda: self._generation == gen
+        return self._cached(
+            (route, json.dumps(body, sort_keys=True), sketch.state_token()), run
         )
 
     def _handle_profile(self, body: dict) -> tuple[int, dict]:
@@ -479,18 +470,13 @@ class ServerCore:
             except Exception as e:
                 return 500, {"message": f"{type(e).__name__}: {e}"}
 
-        if self.cache is None:
-            return run()
-        gen = self._generation
         key = (
             PROFILE_ROUTE,
             json.dumps(body, sort_keys=True),
             self.stats_sketch.state_token(),
             self.distinct_sketch.state_token(),
         )
-        return self.cache.get_or_compute(
-            key, run, still_valid=lambda: self._generation == gen
-        )
+        return self._cached(key, run)
 
     def _handle_state(self, body: dict) -> tuple[int, dict]:
         """Raw mergeable sketch state (POST /v3/stats/state) for the shard
@@ -564,15 +550,7 @@ class ServerCore:
                 except Exception as e:
                     return 500, {"message": f"{type(e).__name__}: {e}"}
 
-            if self.cache is None:
-                status, blob = run()
-            else:
-                gen = self._generation
-                status, blob = self.cache.get_or_compute(
-                    (STATE_ROUTE, name, sk.state_token()),
-                    run,
-                    still_valid=lambda gen=gen: self._generation == gen,
-                )
+            status, blob = self._cached((STATE_ROUTE, name, sk.state_token()), run)
             if status != 200:
                 return status, blob
             out[name] = blob
@@ -643,13 +621,7 @@ class ServerCore:
             except Exception as e:
                 return 500, {"message": f"{type(e).__name__}: {e}"}
 
-        if self.cache is None:
-            return run()
-        gen = self._generation
-        key = (route, json.dumps(body, sort_keys=True))
-        return self.cache.get_or_compute(
-            key, run, still_valid=lambda: self._generation == gen
-        )
+        return self._cached((route, json.dumps(body, sort_keys=True)), run)
 
     @staticmethod
     def _group_sort_key(row, groups):
@@ -766,7 +738,6 @@ def make_server(
     host: str = "127.0.0.1",
     port: int = 1984,
     cache_size: int = 256,
-    pruned_closure_table: str | None = None,
     stats_sketch=None,
     distinct_sketch=None,
     ann_index=None,
@@ -787,8 +758,8 @@ def make_server(
     api/ann.AnnIndex) serves POST /v3/similarity/topk; ``dedup_index``
     (an api/dedup.DedupIndex) serves POST /v3/documents/duplicates."""
     core = ServerCore(
-        store, cache_size, pruned_closure_table, stats_sketch, distinct_sketch,
-        ann_index, dedup_index, topk_sketch, reload_fn,
+        store, cache_size, stats_sketch, distinct_sketch, ann_index,
+        dedup_index, topk_sketch, reload_fn,
     )
 
     class Handler(BaseHTTPRequestHandler):
@@ -827,7 +798,6 @@ def serve(
     host: str = "127.0.0.1",
     port: int = 1984,
     cache_size: int = 256,
-    pruned_closure_table: str | None = None,
     stats_sketch=None,
     distinct_sketch=None,
     ann_index=None,
@@ -840,7 +810,6 @@ def serve(
         host,
         port,
         cache_size=cache_size,
-        pruned_closure_table=pruned_closure_table,
         stats_sketch=stats_sketch,
         distinct_sketch=distinct_sketch,
         ann_index=ann_index,

@@ -72,6 +72,41 @@ def _blob_from_dict(d: dict, default_num_tips: int) -> dict:
     return blob
 
 
+def _id_list(name: str, ids) -> list:
+    """A request's id-list argument (absent = empty). A bare string is
+    refused rather than iterated one character at a time."""
+    if ids is None:
+        return []
+    if not isinstance(ids, (list, tuple)):
+        raise BadInputError(f"'{name}' must be a list of ids.")
+    return list(ids)
+
+
+def _ott_id(value) -> int:
+    """One ott id from request input; a non-integer is a 400, not a 500."""
+    try:
+        return int(value)
+    except (TypeError, ValueError):
+        raise BadInputError(f"Invalid ott id: {value!r}.") from None
+
+
+def _nest_blobs(qid: str, rows, blobs: dict[str, dict]) -> dict:
+    """Nested arguson dict rooted at ``qid``: each blob (copied) gets its
+    ``children`` from the (child_id, parent_id, child_index) ``rows``, in
+    child_index order."""
+    kids: dict[str, list] = {}
+    for r in sorted(rows, key=lambda r: (r["parent_id"], r["child_index"] or 0)):
+        kids.setdefault(r["parent_id"], []).append(r["child_id"])
+
+    def build(nid: str) -> dict:
+        blob = dict(blobs[nid])
+        if nid in kids:
+            blob["children"] = [build(c) for c in kids[nid]]
+        return blob
+
+    return build(qid)
+
+
 def _make_arguson_asm(default_num_tips: int):
     """applyInPandas assembler for the distributed arguson path: one call
     per anchor subtree, building the anchor's fully-nested blob dict from
@@ -221,25 +256,14 @@ class TreeOfLifeV3:
         max_tips_newick: int | None = 100_000,
         max_tips_arguson: int | None = 25_000,
         enforce_caps: bool = False,
-        pruned_closure_table: str | None = None,
     ):
         """``enforce_caps=False`` by default: Spark removes the reason for
         the reference's hard 100k/25k caps (tree_of_life_v3.java:591-592);
-        set True for byte-level API parity.
-
-        ``pruned_closure_table`` names a ``write_bucketed_closure``
-        warehouse table for this store: request-scale closure fetches
-        (mrca, node_info lineage, induced_subtree, the MRTA probe) then
-        read ONLY the node_id buckets the request's ids hash to instead of
-        InSet-scanning the cached closure — the 100 TB serving shape,
-        where the closure is never executor-cache-resident (VERDICT r4
-        #3; per-request catalog re-planning costs ~0.2 s locally, numbers
-        in NOTES_r5)."""
+        set True for byte-level API parity."""
         self.store = store
         self.max_tips_newick = max_tips_newick
         self.max_tips_arguson = max_tips_arguson
         self.enforce_caps = enforce_caps
-        self.pruned_closure_table = pruned_closure_table
         # tiny dimension tables, kept driver-side (broadcast-equivalent)
         self._source_map = {
             r["source_id"]: {
@@ -257,8 +281,10 @@ class TreeOfLifeV3:
         (tree_of_life_v3.java:292-330). Returns (found_node_ids ordered,
         node_ids_not_in_tree, ott_ids_not_in_tree)."""
         spark = self.store.nodes.sparkSession
-        node_ids = list(node_ids or [])
-        ott_ids = [int(o) for o in (ott_ids or [])]
+        node_ids = _id_list("node_ids", node_ids)
+        if not all(isinstance(i, str) for i in node_ids):
+            raise BadInputError("'node_ids' must be a list of strings.")
+        ott_ids = [_ott_id(o) for o in _id_list("ott_ids", ott_ids)]
         found: list[str] = []
         bad_nodes: list[str] = []
         bad_otts: list[int] = []
@@ -273,7 +299,7 @@ class TreeOfLifeV3:
             for i in node_ids:
                 (found if i in hits else bad_nodes).append(i)
         if ott_ids:
-            req = T.local_df(spark, [(int(i),) for i in ott_ids], "ott_id long")
+            req = T.local_df(spark, [(i,) for i in ott_ids], "ott_id long")
             hits = {
                 r["ott_id"]: r["node_id"]
                 for r in self.store.nodes.join(
@@ -295,7 +321,7 @@ class TreeOfLifeV3:
         if node_id is not None and ott_id is not None:
             raise BadInputError('Provide only one "node_id" or "ott_id" argument.')
         if ott_id is not None:
-            rows = self.store.nodes.where(F.col("ott_id") == int(ott_id)).collect()
+            rows = self.store.nodes.where(F.col("ott_id") == _ott_id(ott_id)).collect()
             if not rows:
                 raise BadInputError(f"Could not find any synthetic tree node corresponding to the 'ott_id' arg: '{ott_id}'.")
         else:
@@ -481,26 +507,6 @@ class TreeOfLifeV3:
             raise BadInputError(f"Invalid source id '{source}' provided.")
         return {"newick": newick, "synth_id": self.store.tree_id}
 
-    def _request_closure(self, ids):
-        """Closure rows for a request's id set via the bucket-pruned
-        catalog fetch (ingest.read_pruned_closure) when the store has the
-        bucketed layout; None otherwise (callers fall back to the cached-
-        closure InSet scan). Above the driver gate the joined recipes want
-        the full closure, so the pruned fetch is skipped there too."""
-        if (
-            self.pruned_closure_table is None
-            or len(ids) > T.DRIVER_PATH_MAX_TIPS
-        ):
-            return None
-        from treemachine_spark.ingest import read_pruned_closure
-
-        return read_pruned_closure(
-            self.store.nodes.sparkSession,
-            self.pruned_closure_table,
-            list(ids),
-            synth_id=self.store.tree_id,
-        )
-
     def node_info(self, node_id=None, ott_id=None, include_lineage: bool = False) -> dict:
         """doNodeInfo (tree_of_life_v3.java:157-230); lineage is T8
         (GraphExplorer.getLineage:228-236), parent-first ordering."""
@@ -509,12 +515,9 @@ class TreeOfLifeV3:
         sources: set = set()
         res = dict(self._node_blobs([qid], sources)[qid])
         if include_lineage:
-            src = self._request_closure([qid])
             anc = [
                 r["ancestor_id"]
-                for r in T.path_to_root(
-                    src if src is not None else self.store.paths, qid
-                ).collect()
+                for r in T.path_to_root(self.store.paths, qid).collect()
             ]
             blobs = self._node_blobs(anc, sources) if anc else {}
             res["lineage"] = [blobs[a] for a in anc]
@@ -532,12 +535,10 @@ class TreeOfLifeV3:
                 "No valid ids provided.",
                 {"ott_ids_not_in_tree": bad_otts, "node_ids_not_in_tree": bad_nodes},
             )
-        spark = self.store.nodes.sparkSession
-        pruned = self._request_closure(found)
         mrca_row = T.mrca(
             self.store.paths_with_self(),
             found,
-            paths=pruned if pruned is not None else self.store.paths,
+            paths=self.store.paths,
             root_id=self.store.root_id,
         ).collect()[0]
         mrca_id = mrca_row["mrca_node_id"]
@@ -556,10 +557,8 @@ class TreeOfLifeV3:
             named = self.store.nodes.where(F.col("ott_id").isNotNull()).select(
                 F.col("node_id").alias("ancestor_id")
             )
-            mrca_paths = self._request_closure([mrca_id])
             mrta_row = (
-                (mrca_paths if mrca_paths is not None else self.store.paths)
-                .where(F.col("node_id") == mrca_id)
+                self.store.paths.where(F.col("node_id") == mrca_id)
                 .join(named, "ancestor_id")
                 .orderBy("depth")
                 .limit(1)
@@ -593,6 +592,12 @@ class TreeOfLifeV3:
                 'Valid formats: "newick" (default) or "arguson".'
             )
         label_format = self._check_label_format(label_format)
+        if height_limit is not None and (
+            not isinstance(height_limit, int) or isinstance(height_limit, bool)
+        ):
+            raise BadInputError(
+                f"Invalid 'height_limit' arg: {height_limit!r}; it must be an integer."
+            )
         row = self._resolve_one(node_id, ott_id)
         qid = row["node_id"]
 
@@ -789,15 +794,7 @@ class TreeOfLifeV3:
         member = [r["child_id"] for r in rows] + [qid]
         blobs = self._node_blobs(member)
         self._fill_descendant_names(blobs)
-        kids: dict[str, list] = {}
-        for r in sorted(rows, key=lambda r: (r["parent_id"], r["child_index"] or 0)):
-            kids.setdefault(r["parent_id"], []).append(r["child_id"])
-        def build(nid: str) -> dict:
-            blob = dict(blobs[nid])
-            if nid in kids:
-                blob["children"] = [build(c) for c in kids[nid]]
-            return blob
-        return build(qid)
+        return _nest_blobs(qid, rows, blobs)
 
     def _arguson_distributed(
         self, qid: str, edges, member, anchor_depth: int | str = "auto"
@@ -917,15 +914,7 @@ class TreeOfLifeV3:
         # anchors' blobs (incl. their descendant_name_list) live in frags
         self._fill_descendant_names(blobs, skip=frags)
         blobs.update(frags)
-        kids: dict[str, list] = {}
-        for r in sorted(rows, key=lambda r: (r["parent_id"], r["child_index"] or 0)):
-            kids.setdefault(r["parent_id"], []).append(r["child_id"])
-        def build(nid: str) -> dict:
-            blob = dict(blobs[nid])
-            if nid in kids:
-                blob["children"] = [build(c) for c in kids[nid]]
-            return blob
-        return build(qid)
+        return _nest_blobs(qid, rows, blobs)
 
     def induced_subtree(self, node_ids=None, ott_ids=None, label_format=None) -> dict:
         """doInducedSubtree (tree_of_life_v3.java:411-518): T6 over the
@@ -938,13 +927,7 @@ class TreeOfLifeV3:
                 "(there must be at least two)."
             )
         spark = self.store.nodes.sparkSession
-        # the induced fast path only reads depth>0 closure rows of the
-        # request tips — exactly what the bucket-pruned fetch returns
-        pruned = self._request_closure(found)
-        ind_edges = T.induced_subtree(
-            pruned if pruned is not None else self.store.paths_with_self(),
-            found,
-        )
+        ind_edges = T.induced_subtree(self.store.paths_with_self(), found)
         rows = [(r["child_id"], r["parent_id"]) for r in ind_edges.collect()]
         members = {c for c, _ in rows} | {p for _, p in rows}
         root_candidates = {p for _, p in rows} - {c for c, _ in rows}

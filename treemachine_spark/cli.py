@@ -99,14 +99,6 @@ def main(argv=None) -> int:
         "api/server.py swap_store invalidates on republish)",
     )
     s.add_argument(
-        "--pruned-table",
-        default=None,
-        help="bucketed-closure warehouse table (write_bucketed_closure) to "
-        "serve request-scale fetches bucket-pruned instead of from the "
-        "cached closure — for deployments where the closure cannot be "
-        "cache-resident (NOTES_r5 trade-offs)",
-    )
-    s.add_argument(
         "--stats-sketch",
         default=None,
         metavar="PATH:COL:GROUP[,GROUP...][:K]",
@@ -757,7 +749,6 @@ def main(argv=None) -> int:
             host=args.host,
             port=args.port,
             cache_size=args.cache_size,
-            pruned_closure_table=args.pruned_table,
             stats_sketch=sketch,
             distinct_sketch=dsketch,
             ann_index=ann,

@@ -977,11 +977,11 @@ def ngram_jaccard_probe(
     broadcast join+agg streams every index row per request (~2.1 s); the
     InSet prune cuts it ~3x (the bench_dedup delta — at cluster scale
     the written index is bucketed by shingle, so the same InSet prunes
-    whole buckets, the read_pruned_closure pattern). Left None, the
-    index streams inline: the corpus is shingled and scanned EXACTLY
-    ONCE in the uncapped path (deriving |A|/|B| from a second/third pass
-    would re-run the Arrow UDF corpus-wide — the first cut did; the plan
-    audit caught it), which is the right trade for a one-off probe.
+    whole buckets). Left None, the index streams inline: the corpus is
+    shingled and scanned EXACTLY ONCE in the uncapped path (deriving
+    |A|/|B| from a second/third pass would re-run the Arrow UDF
+    corpus-wide — the first cut did; the plan audit caught it), which is
+    the right trade for a one-off probe.
     """
     ids = list(dict.fromkeys(probe_ids))
     if not ids:

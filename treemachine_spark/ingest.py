@@ -235,124 +235,6 @@ def load_single_store(spark: SparkSession, out_dir: str):
     return TreeRegistry(stores)
 
 
-def write_bucketed_closure(
-    stores: list[GraphStore],
-    table: str = "paths_bucketed",
-    buckets: int = 16,
-) -> None:
-    """SURVEY §4's optional layout optimization (VERDICT r3 #10): persist
-    the closure as a synth_id-PARTITIONED, node_id-BUCKETED warehouse
-    table.
-
-    - Partitioning by synth_id makes every per-tree query a partition-
-      pruned scan (PartitionFilters in the plan; only that tree's files
-      are listed).
-    - Bucketing by node_id pre-shuffles the closure ONCE at write time:
-      any join keyed on node_id against another table bucketed the same
-      way (``write_bucketed_leaves``) runs Exchange-free — at 100 TB the
-      closure-side shuffle IS the cost of tip_counts/MRCA-class joins,
-      and bucketing moves it from every query to one ingest write.
-
-    Bucket metadata only exists for catalog tables, so this writes via
-    ``saveAsTable`` into the session warehouse (path-based parquet cannot
-    carry it). The repartition before the write aligns tasks to buckets
-    so each (partition, bucket) gets ONE file.
-    """
-    from functools import reduce
-
-    dfs = [s.paths.withColumn("synth_id", F.lit(s.tree_id)) for s in stores]
-    (
-        reduce(DataFrame.unionByName, dfs)
-        .repartition(buckets, "node_id")
-        .write.mode("overwrite")
-        .format("parquet")
-        .partitionBy("synth_id")
-        .bucketBy(buckets, "node_id")
-        .sortBy("node_id")
-        .saveAsTable(table)
-    )
-
-
-def read_pruned_closure(
-    spark,
-    table: str,
-    node_ids: list[str],
-    synth_id: str | None = None,
-) -> DataFrame:
-    """Bucket-PRUNED request-scale closure fetch: the node_id bucket layout
-    of ``write_bucketed_closure`` doubles as a node_id→bucket INDEX, so an
-    InSet filter for a request's tip ids reads only the buckets those ids
-    hash to (``SelectedBucketsCount: k out of n`` in the plan) — at 100 TB
-    a 160-id MRCA request against a 1024-bucket store touches <=160
-    buckets instead of the whole closure, with partition pruning stacking
-    on top when ``synth_id`` is given.
-
-    Spark's DisableUnnecessaryBucketedScan rule only credits bucketing for
-    joins/aggregations, so a bare filter scan gets the bucketed layout
-    (and with it In/InSet bucket pruning) dropped; it is re-enabled here
-    for the duration of this materialization. The pruned scan collects
-    inside the conf window — the result is request-scale by construction
-    (|ids| x tree height rows) — and comes back as a LocalRelation so
-    callers (``mrca(paths=...)``) evaluate it driver-side with no further
-    jobs. Measured at a 1M-tip / 6.5M-path closure, 160-id request, 256
-    buckets: the pruned scan itself runs 0.12 s (reused compiled plan) vs
-    0.17 s for the InSet scan of the CACHED closure; this helper
-    end-to-end is ~0.33 s because each call re-plans against the catalog
-    table (~0.2 s, the local serving trade documented in NOTES). The
-    structural win is elsewhere: the pruned read never needs the closure
-    resident in executor memory, which is the 100 TB serving case the
-    cache cannot cover. (An eager localCheckpoint variant measured
-    0.67 s — checkpoint write dominated — hence collect + LocalRelation.)
-    """
-    from treemachine_spark.graph.traversal import local_df
-
-    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        df = spark.table(table)
-        if synth_id is not None:
-            df = df.where(F.col("synth_id") == synth_id)
-        rows = [
-            (r["node_id"], r["ancestor_id"], r["depth"])
-            for r in df.where(F.col("node_id").isin(list(node_ids)))
-            .select("node_id", "ancestor_id", "depth")
-            .collect()
-        ]
-    finally:
-        spark.conf.set(key, prev)
-    return local_df(
-        spark, rows, "node_id string, ancestor_id string, depth int"
-    )
-
-
-def write_bucketed_leaves(
-    stores: list[GraphStore],
-    table: str = "leaves_bucketed",
-    buckets: int = 16,
-) -> None:
-    """Leaf sets co-bucketed with ``write_bucketed_closure`` (same bucket
-    count + key) so closure⋈leaves — the tip_counts/A1 join — needs no
-    Exchange on either side."""
-    from functools import reduce
-
-    from treemachine_spark.graph.traversal import leaf_set
-
-    dfs = [
-        leaf_set(s.edges).withColumn("synth_id", F.lit(s.tree_id)) for s in stores
-    ]
-    (
-        reduce(DataFrame.unionByName, dfs)
-        .repartition(buckets, "node_id")
-        .write.mode("overwrite")
-        .format("parquet")
-        .partitionBy("synth_id")
-        .bucketBy(buckets, "node_id")
-        .sortBy("node_id")
-        .saveAsTable(table)
-    )
-
-
 def delete_tree(out_dir: str, synth_id: str) -> None:
     """Admin mutation: remove ONE synthetic tree from a single-store layout
     (``write_single_store``) — the counterpart of GraphBase.deleteTreeBySource

@@ -19,29 +19,7 @@ def get_spark(app_name: str = "treemachine-spark") -> SparkSession:
     only once AQE is on).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # OPT-IN weighted route-family pools: TREEMACHINE_SCHEDULER_XML=default
-    # loads the packaged fairscheduler.xml (interactive 4 / index 2 /
-    # tree-heavy 1 FIFO), or point it at your own allocation file. Kept
-    # opt-in because the r12 bench_fair three-way measured the weighted
-    # config a WASH vs the on-demand equal-weight pools at the saturation
-    # profile (node_info 1.10 vs 1.04 s p50, mrca 2.37 vs 2.02 — no win
-    # to justify changing the measured default); the equal-weight pools
-    # already deliver the 2-5x light-route isolation (NOTES_r12).
-    sched_xml = os.environ.get("TREEMACHINE_SCHEDULER_XML", "")
-    if sched_xml == "default":
-        sched_xml = os.path.join(os.path.dirname(__file__), "fairscheduler.xml")
-    if sched_xml in ("off", "0", ""):
-        sched_xml = None
-    elif not os.path.exists(sched_xml):
-        # an explicitly-set allocation file that doesn't exist is a
-        # deployment typo — silently dropping it would lose the weighted
-        # pools with no signal (r12 advice); only the sentinels skip
-        raise FileNotFoundError(
-            f"TREEMACHINE_SCHEDULER_XML points at a nonexistent allocation "
-            f"file: {sched_xml!r} (use 'off'/'0'/'' to disable, 'default' "
-            f"for the packaged fairscheduler.xml)"
-        )
-    builder = (
+    return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", "32")
@@ -60,7 +38,5 @@ def get_spark(app_name: str = "treemachine-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .getOrCreate()
     )
-    if sched_xml:
-        builder = builder.config("spark.scheduler.allocation.file", sched_xml)
-    return builder.getOrCreate()

@@ -50,8 +50,7 @@ def get_ctx(spark: SparkSession, sf_dir: str) -> dict:
         # 32), proportionally smaller when the driver benches at a lower
         # core count (fewer tasks of the same tiny data = less scheduling
         # overhead). At 100 TB neither constant applies: scan parallelism
-        # comes from the file count and the closure lives as a bucketed
-        # table (ingest.write_bucketed_closure).
+        # comes from the file count.
         par = spark.sparkContext.defaultParallelism
         for name in ("documents", "embeddings"):
             tables[name] = tables[name].repartition(max(par // 4, 4)).cache()
