@@ -3,9 +3,9 @@
 Serves the complete nested-blob arguson for a synthetic tree at the
 production size (default 2.42M tips — 97x the reference's 25k arguson
 cap, tree_of_life_v3.java:592,711-716) through the distributed fragment
-path with the fanout-aware anchor pick (api/v3.pick_anchor_depth), and
-reports which anchor depth the shape analysis chose plus the per-level
-profile it chose from.
+path with the fanout-aware anchor pick
+(exporters/newick_sink.pick_anchor_depth), and reports which anchor depth
+the shape analysis chose plus the per-level profile it chose from.
 
 Run: python bench_arguson.py [n_tips] — prints one JSON line.
 """
@@ -23,7 +23,8 @@ def main() -> None:
     n_tips = int(sys.argv[1]) if len(sys.argv) > 1 else 2_420_000
     from pyspark.sql import functions as F
 
-    from treemachine_spark.api.v3 import TreeOfLifeV3, pick_anchor_depth
+    from treemachine_spark.api.v3 import TreeOfLifeV3
+    from treemachine_spark.exporters.newick_sink import pick_anchor_depth
     from treemachine_spark.session import get_spark
 
     spark = get_spark("treemachine-arguson-bench")

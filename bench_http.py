@@ -158,7 +158,7 @@ def build_synth_store(spark, n_tips: int):
             F.lit("synth").alias("tree_id"),
             "node_id",
             # unnamed nodes: in a real store name != NULL implies an ott_id
-            # (taxonomy join), and _taxon_blob relies on that invariant
+            # (taxonomy join), and _blob_from_dict relies on that invariant
             F.lit(None).cast("long").alias("ott_id"),
             F.lit(None).cast("string").alias("name"),
             F.lit(None).cast("string").alias("unique_name"),

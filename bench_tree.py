@@ -65,6 +65,7 @@ def synthetic_tree_edges(spark, n_tips: int, fanout: int = 10):
 
 def main() -> None:
     n_tips = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
+    from treemachine_spark.api.v3 import FRAGMENT_TIER_EDGES
     from treemachine_spark.exporters.newick_sink import assemble_newick
     from treemachine_spark.graph import traversal as T
     from treemachine_spark.graph.closure import build_closure, with_self_paths
@@ -92,12 +93,11 @@ def main() -> None:
     paths_self.count()
 
     # full-tree newick (subtree at root, unbounded depth) — the reference
-    # caps this at 100k tips / ~40s. Above the cap size, use the
+    # caps this at 100k tips / ~40s. Past the serving gate, use the
     # executor-side fragment assembly (byte-identical to the driver-side
-    # path, asserted in test_large_subtree) — that's the serving path a
-    # production deployment would run.
+    # path, asserted in test_large_subtree) — the tier v3.subtree serves.
     t0 = time.time()
-    if n_tips > 200_000:
+    if n_edges > FRAGMENT_TIER_EDGES:
         from treemachine_spark.exporters.newick_sink import distributed_newick
 
         newick = distributed_newick(edges, paths, "n0")

@@ -9,6 +9,7 @@ from pathlib import Path
 import pytest
 
 from treemachine_spark.api.errors import BadIdsError, BadInputError
+from treemachine_spark.api import v3
 from treemachine_spark.api.v3 import TreeOfLifeV3
 from treemachine_spark.ingest import ingest_synthesis_data
 
@@ -183,18 +184,36 @@ def test_arguson(api):
     assert "source_id_map" in arg
 
 
-def test_arguson_distributed_matches_driver(api):
+def test_arguson_distributed_matches_driver(api, monkeypatch):
     """The distributed fragment path round-trips the REAL annotation maps
     (supported_by & co. via to_json → _blob_from_dict) byte-equal to the
     driver assembly, lineage and source_id_map included."""
     driver = api.subtree(ott_id=81461, tree_format="arguson")["arguson"]
-    try:
-        api.DISTRIBUTED_ARGUSON_THRESHOLD = 0  # force distributed path
-        dist = api.subtree(ott_id=81461, tree_format="arguson")["arguson"]
-    finally:
-        api.DISTRIBUTED_ARGUSON_THRESHOLD = 200_000
+    monkeypatch.setattr(v3, "FRAGMENT_TIER_EDGES", 0)  # force the fragment tier
+    dist = api.subtree(ott_id=81461, tree_format="arguson")["arguson"]
     assert dist == driver
     assert dist["source_id_map"]  # real sources crossed the json boundary
+
+
+def test_named_node_without_ott_id_keeps_its_name(store, monkeypatch):
+    """name_and_id labels a named node that has no ott id by its bare
+    name, in the driver tier, the fragment tier and induced_subtree."""
+    from dataclasses import replace
+
+    from pyspark.sql import functions as F
+
+    gavia = F.col("node_id") == "ott316878"
+    nodes = store.nodes.withColumn("ott_id", F.when(~gavia, F.col("ott_id")))
+    api = TreeOfLifeV3(replace(store, nodes=nodes))
+    want = (
+        "((Struthio_ott536234,Apteryx_ott810751),"
+        "(Gavia,Anas_ott102710)Gaviiformes_ott5839486)Aves_ott81461;"
+    )
+    assert api.subtree(node_id="ott81461")["newick"] == want
+    induced = api.induced_subtree(node_ids=["ott536234", "ott316878"])["newick"]
+    assert induced == "(Gavia,Struthio_ott536234)Aves_ott81461;"
+    monkeypatch.setattr(v3, "FRAGMENT_TIER_EDGES", 0)  # force the fragment tier
+    assert api.subtree(node_id="ott81461")["newick"] == want
 
 
 def test_induced_subtree(api):
@@ -236,6 +255,10 @@ def test_malformed_id_and_height_args_are_400(store):
         ("/v3/tree_of_life/subtree", {"ott_id": 81461, "height_limit": "2"}),
         ("/v3/tree_of_life/subtree",
          {"ott_id": 81461, "format": "arguson", "height_limit": "2"}),
+        ("/v2/tree_of_life/mrca", {"node_ids": "123"}),
+        ("/v2/tree_of_life/mrca", {"node_ids": ["abc"]}),
+        ("/v2/tree_of_life/induced_tree", {"node_ids": "12"}),
+        ("/v2/tree_of_life/node_info", {"node_id": "abc"}),
     ):
         status, resp = core.handle(path, body)
         assert status == 400, (path, body, status, resp)
@@ -245,3 +268,33 @@ def test_malformed_id_and_height_args_are_400(store):
     assert core.handle(
         "/v3/tree_of_life/subtree", {"ott_id": 81461, "height_limit": 1}
     )[0] == 200
+
+
+def test_write_store_layout_follows_contents(store, tmp_path):
+    """The same store is written as the same files, however its tables
+    happen to be partitioned: per table, equal file counts and bytes."""
+    from dataclasses import replace
+
+    from pyspark.sql import functions as F
+
+    from treemachine_spark.ingest import load_store, write_store
+
+    def layout(s, out):
+        write_store(s, str(out))
+        return {
+            t: sorted(f.read_bytes() for f in (out / t).rglob("*.parquet"))
+            for t in ("nodes", "edges", "paths", "node_annotations", "source_map")
+        }
+
+    first = layout(store, tmp_path / "a")
+    assert layout(store, tmp_path / "b") == first
+    reshuffled = replace(
+        store,
+        # materialized: a sort right below the repartition is optimized away
+        paths=store.paths.orderBy(F.desc("ancestor_id"), F.desc("node_id")).localCheckpoint(),
+        edges=store.edges.repartition(3, "parent_id"),
+    )
+    assert layout(reshuffled, tmp_path / "c") == first
+    back = load_store(store.nodes.sparkSession, str(tmp_path / "c"))
+    assert back.paths.count() == store.paths.count()
+    assert back.edges.count() == store.edges.count()

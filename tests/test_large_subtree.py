@@ -7,6 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from treemachine_spark.api import v3
+
 
 @pytest.fixture(scope="module")
 def big_api(spark):
@@ -73,15 +75,18 @@ def test_no_cap_beyond_reference_limit(big_api):
     assert nwk.count(",") >= 99_000  # ~100k tips present
 
 
-def test_distributed_equals_driver_assembly(big_api):
-    api = big_api
-    try:
-        api.DISTRIBUTED_NEWICK_THRESHOLD = 10  # force distributed path
-        dist = api.subtree(node_id="n1", label_format="id")["newick"]
-    finally:
-        api.DISTRIBUTED_NEWICK_THRESHOLD = 200_000
-    driver = api.subtree(node_id="n1", label_format="id")["newick"]
-    assert dist == driver
+def test_distributed_equals_driver_assembly(big_api, monkeypatch):
+    """Both newick tiers give the same string in every label format, with
+    and without labels for the ~1% unnamed nodes."""
+    cases = [
+        dict(node_id="n1", label_format=fmt, include_all_node_labels=include_all)
+        for fmt in ("name", "id", "name_and_id")
+        for include_all in (False, True)
+    ]
+    driver = [big_api.subtree(**kw)["newick"] for kw in cases]
+    monkeypatch.setattr(v3, "FRAGMENT_TIER_EDGES", 10)  # force the fragment tier
+    for kw, want in zip(cases, driver):
+        assert big_api.subtree(**kw)["newick"] == want, kw
 
 
 def test_supporting_sources_collect_is_vocabulary_scale(big_api, spark):
@@ -114,19 +119,16 @@ def test_supporting_sources_collect_is_vocabulary_scale(big_api, spark):
 
 
 @pytest.mark.slow
-def test_distributed_arguson_equals_driver(big_api):
+def test_distributed_arguson_equals_driver(big_api, monkeypatch):
     """VERDICT r6 #4: the arguson sink gets the distributed_newick
     fragment treatment — per-anchor applyInPandas assembly, driver
     stitches the top levels. Structurally identical to the driver-side
     build on a deep subtree (incl. taxon blobs and descendant_name_list
     for the fixture's unnamed nodes)."""
     api = big_api
-    try:
-        api.DISTRIBUTED_ARGUSON_THRESHOLD = 10  # force distributed path
-        dist = api.subtree(node_id="n1", tree_format="arguson")["arguson"]
-    finally:
-        api.DISTRIBUTED_ARGUSON_THRESHOLD = 200_000
     driver = api.subtree(node_id="n1", tree_format="arguson")["arguson"]
+    monkeypatch.setattr(v3, "FRAGMENT_TIER_EDGES", 10)  # force the fragment tier
+    dist = api.subtree(node_id="n1", tree_format="arguson")["arguson"]
     assert dist == driver
     # the blob tree is real: nested children + num_tips + lineage present
     assert dist["node_id"] == "n1" and dist["children"]
@@ -141,7 +143,7 @@ def test_anchor_depth_auto_balanced_vs_caterpillar(spark):
     at production shape); on a caterpillar — where NO level has small
     fragments — it goes as deep as the driver-stitch budget allows
     instead of pinning a near-root anchor that owns the whole tree."""
-    from treemachine_spark.api.v3 import pick_anchor_depth
+    from treemachine_spark.exporters.newick_sink import pick_anchor_depth
     from treemachine_spark.graph.closure import build_closure
 
     def closure_for(edge_list):
@@ -177,18 +179,12 @@ def test_anchor_depth_auto_balanced_vs_caterpillar(spark):
 
 
 @pytest.mark.slow
-def test_arguson_full_tree_beyond_reference_cap(big_api):
+def test_arguson_full_tree_beyond_reference_cap(big_api, monkeypatch):
     """The reference 400s arguson past 25k tips (tree_of_life_v3.java:592);
     the distributed fragment path serves the FULL ~111k-node fixture tree
     (4.4x that cap; measured ~12 s cold on local[32])."""
-    api = big_api
-    try:
-        api.DISTRIBUTED_ARGUSON_THRESHOLD = 10
-        arg = api.subtree(
-            node_id="n0", tree_format="arguson", height_limit=99
-        )["arguson"]
-    finally:
-        api.DISTRIBUTED_ARGUSON_THRESHOLD = 200_000
+    monkeypatch.setattr(v3, "FRAGMENT_TIER_EDGES", 10)
+    arg = big_api.subtree(node_id="n0", tree_format="arguson", height_limit=99)["arguson"]
     n, stack = 0, [arg]
     while stack:
         b = stack.pop()

@@ -8,8 +8,8 @@ tree_of_life.java:385-422). No Spark work of its own.
 
 from __future__ import annotations
 
-from treemachine_spark.api.errors import BadIdsError
-from treemachine_spark.api.v3 import TreeOfLifeV3
+from treemachine_spark.api.errors import BadIdsError, BadInputError
+from treemachine_spark.api.v3 import TreeOfLifeV3, _id_list
 
 ID_LIMIT = 10_000_000  # tree_of_life.java:385
 
@@ -31,6 +31,17 @@ def string_id_to_long_id(string_id: str) -> int:
     if string_id.startswith("ott"):
         return int(string_id[3:])
     raise ValueError(f"not an ot node id: {string_id!r}")
+
+
+def _node_id(long_id) -> str:
+    """One v2 node id from request input: an integer, else a 400."""
+    if not isinstance(long_id, int) or isinstance(long_id, bool):
+        raise BadInputError(f"Invalid node id: {long_id!r}; v2 node ids are integers.")
+    return long_id_to_string_id(long_id)
+
+
+def _node_ids(ids) -> list[str]:
+    return [_node_id(i) for i in _id_list("node_ids", ids)]
 
 
 def _string_ids_to_long_ids(ids):
@@ -72,7 +83,7 @@ class TreeOfLifeV2:
         res: dict = {}
         try:
             v3r = self.v3.mrca(
-                node_ids=[long_id_to_string_id(i) for i in (node_ids or [])],
+                node_ids=_node_ids(node_ids),
                 ott_ids=ott_ids,
             )
             res["node_ids_not_in_tree"] = []
@@ -115,7 +126,7 @@ class TreeOfLifeV2:
         res: dict = {}
         try:
             v3r = self.v3.induced_subtree(
-                node_ids=[long_id_to_string_id(i) for i in (node_ids or [])],
+                node_ids=_node_ids(node_ids),
                 ott_ids=ott_ids,
             )
             res["node_ids_not_in_tree"] = []
@@ -135,7 +146,7 @@ class TreeOfLifeV2:
     def subtree(self, node_id=None, ott_id=None) -> dict:
         """tree_of_life.subtree (tree_of_life.java:340-383)."""
         v3r = self.v3.subtree(
-            node_id=long_id_to_string_id(node_id) if node_id is not None else None,
+            node_id=_node_id(node_id) if node_id is not None else None,
             ott_id=ott_id,
         )
         return {"newick": v3r["newick"], "tree_id": self.v3.store.tree_id}
@@ -144,7 +155,7 @@ class TreeOfLifeV2:
         """graph.node_info (opentree/plugins/graph.java:45-195): v3 blob with
         flattened taxon fields + v2 long ids."""
         v3r = self.v3.node_info(
-            node_id=long_id_to_string_id(node_id) if node_id is not None else None,
+            node_id=_node_id(node_id) if node_id is not None else None,
             ott_id=ott_id,
             include_lineage=include_lineage,
         )

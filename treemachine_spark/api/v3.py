@@ -14,6 +14,14 @@ Execution model: all heavy lifting (resolution joins, MRCA aggregation,
 closure filters) is distributed DataFrame work; only request-sized results
 are collected for response assembly, so each endpoint scales with its
 *answer*, not the tree.
+
+Subtree answers, newick and arguson alike, take one flow: the opt-in size
+guard, the subtree's edges, one size gate (``FRAGMENT_TIER_EDGES``), then
+the tier. Below the gate the driver assembles the answer; past it
+``exporters.newick_sink.anchored_fragments`` assembles one fragment per
+anchor executor-side and the driver stitches the top levels. Both tiers
+share one label rule (``_labels_df``), one nesting rule (``_nest_blobs``)
+and one blob constructor (``_blob_from_dict``).
 """
 
 from __future__ import annotations
@@ -22,7 +30,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from treemachine_spark.api.errors import BadIdsError, BadInputError, TreeTooBigError
-from treemachine_spark.exporters.newick_sink import assemble_newick
+from treemachine_spark.exporters.newick_sink import (
+    anchored_fragments,
+    assemble_newick,
+    distributed_newick,
+)
 from treemachine_spark.graph import traversal as T
 from treemachine_spark.ingest import GraphStore
 
@@ -36,6 +48,13 @@ _ANN_FIELDS = [
 ]
 
 LABEL_FORMATS = ("name", "id", "name_and_id")
+
+# the one size gate between the subtree tiers: past this many subtree
+# edges, newick and arguson answers are assembled per anchor fragment
+# executor-side (exporters.newick_sink.anchored_fragments) instead of on the
+# driver — the reference instead refuses newick over 100k tips and arguson
+# over 25k (tree_of_life_v3.java:591-592)
+FRAGMENT_TIER_EDGES = 200_000
 
 
 def _blob_from_dict(d: dict, default_num_tips: int) -> dict:
@@ -91,134 +110,53 @@ def _ott_id(value) -> int:
 
 
 def _nest_blobs(qid: str, rows, blobs: dict[str, dict]) -> dict:
-    """Nested arguson dict rooted at ``qid``: each blob (copied) gets its
-    ``children`` from the (child_id, parent_id, child_index) ``rows``, in
-    child_index order."""
+    """The arguson blob ``qid`` with its descendants nested: each blob gets
+    its ``children`` from the (child_id, parent_id, child_index) ``rows`` in
+    (child_index, child_id) order — the newick child order. Children are
+    attached by dict reference in one linear pass (no recursion), in
+    place; a row whose parent has no blob (a fragment anchor's own link)
+    is skipped."""
     kids: dict[str, list] = {}
-    for r in sorted(rows, key=lambda r: (r["parent_id"], r["child_index"] or 0)):
-        kids.setdefault(r["parent_id"], []).append(r["child_id"])
-
-    def build(nid: str) -> dict:
-        blob = dict(blobs[nid])
-        if nid in kids:
-            blob["children"] = [build(c) for c in kids[nid]]
-        return blob
-
-    return build(qid)
+    for cid, pid, ci in sorted(rows, key=lambda r: (r[1], r[2] or 0, r[0])):
+        kids.setdefault(pid, []).append(blobs[cid])
+    for pid, children in kids.items():
+        if pid in blobs:
+            blobs[pid]["children"] = children
+    return blobs[qid]
 
 
 def _make_arguson_asm(default_num_tips: int):
-    """applyInPandas assembler for the distributed arguson path: one call
-    per anchor subtree, building the anchor's fully-nested blob dict from
-    flat (child_id, parent_id, child_index, blob_json) rows and returning
-    it as ONE json string (the driver only stitches fragment dicts into
-    the top levels — same shape as exporters.newick_sink.distributed_newick).
-
-    Children are attached by dict REFERENCE in one linear pass (no
-    recursive build), so assembly is O(subtree); only json.dumps nests.
-    """
+    """Per-fragment assembler of the arguson fragment tier: one call per
+    anchor, building the anchor's nested blob dict from its (child_id,
+    parent_id, child_index, blob_json) rows and returning it as ONE json
+    string. Blob fields come from a to_json'd struct, where null fields
+    are omitted — _blob_from_dict reads them with .get, like the driver
+    tier's Row.asDict()."""
+    import json
     import sys
 
     import pandas as pd
 
-    def _null(v):
-        return v is None or (isinstance(v, float) and v != v)  # None/NaN
-
     def asm(pdf: pd.DataFrame) -> pd.DataFrame:
-        import json as _json
-
         anchor = pdf["anchor"].iloc[0]
-        blobs: dict[str, dict] = {}
-        recs = []
-        for cid, pid, ci, bj in zip(
-            pdf["child_id"], pdf["parent_id"], pdf["child_index"], pdf["blob_json"]
-        ):
-            d = _json.loads(bj) if isinstance(bj, str) else {}
+        blobs = {}
+        for cid, bj in zip(pdf["child_id"], pdf["blob_json"]):
+            d = json.loads(bj) if isinstance(bj, str) else {}
             d["node_id"] = cid
             blobs[cid] = _blob_from_dict(d, default_num_tips)
-            if not _null(pid):  # the anchor's own row has parent_id null
-                recs.append((pid, 0 if _null(ci) else int(ci), cid))
-        kids: dict[str, list] = {}
-        for pid, ci, cid in sorted(recs):
-            kids.setdefault(pid, []).append(cid)
-        for pid, lst in kids.items():
-            blobs[pid]["children"] = [blobs[c] for c in lst]
+        rows = zip(pdf["child_id"], pdf["parent_id"], pdf["child_index"].fillna(0).astype(int))
+        frag = _nest_blobs(anchor, rows, blobs)
         # json.dumps recurses per nesting level; size the limit to the
         # fragment (the driver assembly path has the same floor)
         sys.setrecursionlimit(max(sys.getrecursionlimit(), len(blobs) + 1000))
-        return pd.DataFrame(
-            {"anchor": [anchor], "frag": [_json.dumps(blobs[anchor])]}
-        )
+        return pd.DataFrame({"anchor": [anchor], "frag": [json.dumps(frag)]})
 
     return asm
+
 
 # The reference's static files host for preprocessed source trees
 # (tree_of_life_v3.java:893-895).
 DEFAULT_SOURCE_BASE = "http://files.opentreeoflife.org/preprocessed"
-
-
-# auto anchor-depth bounds (VERDICT r7 #7): a fragment is one
-# applyInPandas group, so its size is executor-memory-bound; the top
-# stitch levels are collected, so their cumulative width is driver-bound
-ARGUSON_FRAGMENT_TARGET = 100_000
-ARGUSON_TOP_MAX = 200_000
-
-
-def pick_anchor_depth(
-    rd,
-    member,
-    paths,
-    frag_target: int = ARGUSON_FRAGMENT_TARGET,
-    top_max: int = ARGUSON_TOP_MAX,
-):
-    """Fanout-aware anchor depth for the distributed fragment assemblers
-    (VERDICT r7 #7): instead of the fixed depth=2 (right for the
-    production tree's ~10-fanout, wrong for skewed stores), read the
-    subtree's actual shape — per-level width and the LARGEST single
-    fragment an anchor at that level would own — and take the shallowest
-    level whose max fragment fits ``frag_target``, never letting the
-    collected top levels exceed ``top_max`` rows. One subtree-scale
-    aggregation (descendant counts over the request's closure) + a
-    depth-profile collect of O(tree height) rows.
-
-    On a balanced fanout-f tree this returns the smallest d with
-    n/f^d <= frag_target (depth 2 for the 2.42M-tip production shape —
-    the r7 static default falls out as the computed answer); on a
-    caterpillar every level has one giant fragment, so it returns the
-    deepest level the driver stitch can afford — the best decomposition
-    that exists for that shape.
-    """
-    desc = (
-        paths.join(
-            member.withColumnRenamed("node_id", "ancestor_id"),
-            "ancestor_id",
-            "left_semi",
-        )
-        .join(member, "node_id", "left_semi")
-        .groupBy("ancestor_id")
-        .agg(F.count("*").alias("cnt"))
-    )
-    stats = sorted(
-        rd.join(desc.withColumnRenamed("ancestor_id", "node_id"), "node_id", "left")
-        .groupBy("depth")
-        .agg(
-            F.count("*").alias("width"),
-            (F.max(F.coalesce(F.col("cnt"), F.lit(0))) + 1).alias("max_frag"),
-        )
-        .collect(),
-        key=lambda r: r["depth"],
-    )
-    cum = 0
-    best = None  # (max_frag, depth)
-    for r in stats:
-        cum += r["width"]
-        if cum > top_max:
-            break
-        if best is None or r["max_frag"] < best[0]:
-            best = (r["max_frag"], r["depth"])
-        if r["max_frag"] <= frag_target:
-            return r["depth"]
-    return best[1] if best else 1
 
 
 def fetch_source_newick(source: str, synth_id: str, base: str = DEFAULT_SOURCE_BASE) -> str | None:
@@ -334,17 +272,6 @@ class TreeOfLifeV3:
     # blobs (P1/P2, A3)
     # ------------------------------------------------------------------
 
-    @staticmethod
-    def _taxon_blob(row: dict) -> dict:
-        """P1 — GraphExplorer.getTaxonBlob (GraphExplorer.java:180-193)."""
-        return {
-            "name": row["name"],
-            "unique_name": row["unique_name"],
-            "rank": row["rank"],
-            "ott_id": int(row["ott_id"]),
-            "tax_sources": list(row["tax_sources"] or []),
-        }
-
     def _node_blobs(self, node_ids: list[str], unique_sources: set | None = None) -> dict[str, dict]:
         """P2 — GraphExplorer.getNodeBlob (GraphExplorer.java:203-214) for a
         batch of nodes in ONE join (the reference loops per node)."""
@@ -428,24 +355,23 @@ class TreeOfLifeV3:
     # labels (P8)
     # ------------------------------------------------------------------
 
-    def _labels(self, node_rows, label_format: str, ids_for_unnamed: bool) -> dict[str, str]:
-        """P8 — GraphExplorer.getNodeLabel (GraphExplorer.java:673-694)."""
-        labels = {}
-        for r in node_rows:
-            name = r["name"]
-            if name is not None:
-                if label_format == "name":
-                    lab = name
-                elif label_format == "id":
-                    lab = r["node_id"]
-                else:  # name_and_id
-                    lab = f"{name}_ott{r['ott_id']}"
-            elif ids_for_unnamed:
-                lab = r["node_id"]
-            else:
-                lab = ""
-            labels[r["node_id"]] = lab
-        return labels
+    def _labels_df(self, member, label_format: str, ids_for_unnamed: bool):
+        """P8 — GraphExplorer.getNodeLabel (GraphExplorer.java:673-694) as a
+        column expression over the ``member`` nodes: (node_id, label), the
+        one label rule of every newick answer. A named node without an
+        ott id keeps its bare name in name_and_id format; an unnamed node
+        is labelled by its id only when ``ids_for_unnamed``."""
+        if label_format == "name":
+            named = F.col("name")
+        elif label_format == "id":
+            named = F.col("node_id")
+        else:
+            named = F.concat_ws("_ott", F.col("name"), F.col("ott_id").cast("string"))
+        unnamed = F.col("node_id") if ids_for_unnamed else F.lit("")
+        return self.store.nodes.join(member, "node_id", "left_semi").select(
+            "node_id",
+            F.when(F.col("name").isNotNull(), named).otherwise(unnamed).alias("label"),
+        )
 
     @staticmethod
     def _check_label_format(label_format: str | None) -> str:
@@ -554,7 +480,7 @@ class TreeOfLifeV3:
 
         if "taxon" not in res["mrca"]:
             # T3 — nearest taxonomic ancestor (GraphExplorer.java:654-664)
-            named = self.store.nodes.where(F.col("ott_id").isNotNull()).select(
+            named = self.store.nodes.where(F.col("name").isNotNull()).select(
                 F.col("node_id").alias("ancestor_id")
             )
             mrta_row = (
@@ -568,7 +494,7 @@ class TreeOfLifeV3:
                 trow = self.store.nodes.where(
                     F.col("node_id") == mrta_row[0]["ancestor_id"]
                 ).collect()[0]
-                res["nearest_taxon"] = self._taxon_blob(trow.asDict())
+                res["nearest_taxon"] = _blob_from_dict(trow.asDict(), 0)["taxon"]
 
         if bad_otts or bad_nodes:
             raise BadIdsError("Some ids not found or not in tree.", res)
@@ -598,16 +524,18 @@ class TreeOfLifeV3:
             raise BadInputError(
                 f"Invalid 'height_limit' arg: {height_limit!r}; it must be an integer."
             )
-        row = self._resolve_one(node_id, ott_id)
-        qid = row["node_id"]
-
-        if tree_format == "newick":
-            depth = height_limit if height_limit is not None else -1
-            cap = self.max_tips_newick if self.enforce_caps else None
-            return self._subtree_newick(qid, depth, label_format, include_all_node_labels, cap)
-        depth = height_limit if height_limit is not None else 5
-        cap = self.max_tips_arguson if self.enforce_caps else None
-        return {"arguson": self._arguson(qid, depth, cap)}
+        qid = self._resolve_one(node_id, ott_id)["node_id"]
+        newick = tree_format == "newick"
+        depth = height_limit if height_limit is not None else (-1 if newick else 5)
+        cap = self.max_tips_newick if newick else self.max_tips_arguson
+        self._guard(qid, depth, cap if self.enforce_caps else None)
+        edges = self._subtree_edges(qid, depth)
+        fragments = edges.count() > FRAGMENT_TIER_EDGES
+        if newick:
+            return self._subtree_newick(
+                qid, edges, fragments, label_format, include_all_node_labels
+            )
+        return {"arguson": self._arguson(qid, edges, fragments)}
 
     def _subtree_edges(self, qid: str, depth: int):
         sub = self.store.paths.where(F.col("ancestor_id") == qid)
@@ -656,89 +584,42 @@ class TreeOfLifeV3:
                 f"Requested tree ({n} tips) is larger than currently allowed ({cap} tips)."
             )
 
-    # above this many subtree edges, newick assembly shifts to the
-    # distributed fragment path (exporters.newick_sink.distributed_newick) —
-    # the reference instead refuses requests over 100k tips
-    DISTRIBUTED_NEWICK_THRESHOLD = 200_000
-
-    def _subtree_newick(self, qid, depth, label_format, ids_for_unnamed, cap) -> dict:
-        self._guard(qid, depth, cap)
-        edges = self._subtree_edges(qid, depth)
-        n_edges = edges.count()
-
+    def _subtree_newick(self, qid, edges, fragments, label_format, ids_for_unnamed) -> dict:
         member = edges.select(F.col("child_id").alias("node_id"))
         sources: set = {
             r["s"] for r in self._distinct_sources_df(member).collect()
         }
-
-        if n_edges > self.DISTRIBUTED_NEWICK_THRESHOLD:
-            from treemachine_spark.exporters.newick_sink import distributed_newick
-
-            spark = self.store.nodes.sparkSession
+        spark = self.store.nodes.sparkSession
+        if fragments:
             member_plus = member.unionByName(
                 T.local_df(spark, [(qid,)], "node_id string")
             )
             labels_df = self._labels_df(member_plus, label_format, ids_for_unnamed)
-            newick = distributed_newick(
-                edges, self.store.paths, qid, labels_df, anchor_depth="auto"
-            )
+            newick = distributed_newick(edges, self.store.paths, qid, labels_df)
         else:
             rows = edges.select(
                 "child_id", "parent_id", "branch_length", "child_index"
             ).collect()
             member_ids = {r["child_id"] for r in rows} | {qid}
-            spark = self.store.nodes.sparkSession
             mdf = T.local_df(spark, [(i,) for i in member_ids], "node_id string")
-            node_rows = self.store.nodes.join(
-                F.broadcast(mdf), "node_id", "left_semi"
-            ).collect()
-            labels = self._labels(node_rows, label_format, ids_for_unnamed)
-            newick = assemble_newick(
-                [
-                    (r["child_id"], r["parent_id"], r["branch_length"], r["child_index"])
-                    for r in rows
-                ],
-                qid,
-                labels,
+            labels = dict(
+                self._labels_df(F.broadcast(mdf), label_format, ids_for_unnamed).collect()
             )
+            newick = assemble_newick(rows, qid, labels)
         return {
             "newick": newick,
             "supporting_studies": self._supporting_studies(sources),
         }
 
-    def _labels_df(self, member, label_format: str, ids_for_unnamed: bool):
-        """Column-expression twin of _labels (P8) for the distributed path —
-        labels computed executor-side, never collected."""
-        nodes = self.store.nodes.join(member, "node_id", "left_semi")
-        if label_format == "name":
-            named = F.col("name")
-        elif label_format == "id":
-            named = F.col("node_id")
-        else:
-            named = F.concat(F.col("name"), F.lit("_ott"), F.col("ott_id").cast("string"))
-        unnamed = F.col("node_id") if ids_for_unnamed else F.lit("")
-        return nodes.select(
-            "node_id",
-            F.when(F.col("name").isNotNull(), named).otherwise(unnamed).alias("label"),
-        )
-
-    # above this many subtree edges, arguson blob assembly shifts to the
-    # distributed fragment path (per-anchor applyInPandas, the
-    # distributed_newick trick) — the reference instead refuses requests
-    # over 25k tips (tree_of_life_v3.java:592,711-716)
-    DISTRIBUTED_ARGUSON_THRESHOLD = 200_000
-
-    def _arguson(self, qid: str, depth: int, cap: int | None) -> dict:
+    def _arguson(self, qid: str, edges, fragments: bool) -> dict:
         """S9 — getArgusonData (GraphExplorer.java:342-354,434-447): nested
         node blobs with children (depth-limited) + lineage + source_id_map.
         Unnamed nodes get descendant_name_list (getNodeBlobArguson,
         GraphExplorer.java:415-429) via the T9 min/max-named-descendant
         recipe — one batched aggregation instead of per-node recursion.
-        Past DISTRIBUTED_ARGUSON_THRESHOLD edges the nested blobs are
-        assembled executor-side per anchor subtree (VERDICT r6 #4 — the
-        cap the reference hard-codes becomes opt-in, like newick's)."""
-        self._guard(qid, depth, cap)
-        edges = self._subtree_edges(qid, depth)
+        In the fragment tier the nested blobs are assembled executor-side
+        per anchor subtree (the cap the reference hard-codes is opt-in,
+        like newick's)."""
         spark = self.store.nodes.sparkSession
         member = edges.select(F.col("child_id").alias("node_id"))
         member_plus = member.unionByName(
@@ -752,8 +633,7 @@ class TreeOfLifeV3:
                 member_plus, fields=tuple(_ANN_FIELDS)
             ).collect()
         }
-        n_edges = edges.count()
-        if n_edges > self.DISTRIBUTED_ARGUSON_THRESHOLD:
+        if fragments:
             top = self._arguson_distributed(qid, edges, member)
         else:
             top = self._arguson_driver(qid, edges)
@@ -796,37 +676,17 @@ class TreeOfLifeV3:
         self._fill_descendant_names(blobs)
         return _nest_blobs(qid, rows, blobs)
 
-    def _arguson_distributed(
-        self, qid: str, edges, member, anchor_depth: int | str = "auto"
-    ) -> dict:
-        """Scalable arguson assembly (VERDICT r6 #4): per-node blob fields
-        are serialized executor-side (to_json struct — null fields omitted,
-        matching _blob_from_dict's .get semantics), nested fragments are
-        built per 'anchor' subtree in ONE applyInPandas pass, and the
-        driver stitches only the top ``anchor_depth`` levels — so driver
+    def _arguson_distributed(self, qid: str, edges, member) -> dict:
+        """Arguson through exporters.newick_sink.anchored_fragments: each
+        member's blob fields are serialized executor-side (to_json struct),
+        each anchor's nested blob is built by one applyInPandas call, and
+        the driver nests only the top levels above the anchors — so driver
         work is O(result dict), never O(edge rows collected + per-row
-        Python blob building). Same anchor decomposition as
-        exporters.newick_sink.distributed_newick; removes the reason for
-        the reference's 25k-tip arguson cap (tree_of_life_v3.java:592)."""
-        import json as _json
+        Python blob building)."""
+        import json
 
         from treemachine_spark.graph.traversal import representative_names
 
-        e = edges.select("child_id", "parent_id", "child_index")
-        # rd feeds up to three actions (depth pick, anchors, top stitch) —
-        # materialize once instead of re-deriving the paths subplan
-        rd = (
-            self.store.paths.where(F.col("ancestor_id") == qid)
-            .select("node_id", "depth")
-            .join(member, "node_id", "left_semi")
-        ).localCheckpoint(eager=True)
-        if anchor_depth == "auto":
-            anchor_depth = pick_anchor_depth(rd, member, self.store.paths)
-        anchors = rd.where(F.col("depth") == anchor_depth).select(
-            F.col("node_id").alias("anchor")
-        )
-
-        # ---- executor-side blob fields for every fragment member -------
         # rep names only for unnamed members (pre-filter paths so the T9
         # aggregate runs over the request's subtree, not the whole store)
         unnamed_members = (
@@ -853,7 +713,7 @@ class TreeOfLifeV3:
             )
             .join(reps, "node_id", "left")
             .select(
-                F.col("node_id").alias("child_id"),
+                "node_id",
                 F.to_json(
                     F.struct(
                         "name",
@@ -869,51 +729,18 @@ class TreeOfLifeV3:
                 ).alias("blob_json"),
             )
         )
-
-        # ---- per-anchor fragments (one shuffle + one applyInPandas) ----
-        amembers = (
-            self.store.paths.join(
-                anchors.withColumnRenamed("anchor", "ancestor_id"), "ancestor_id"
-            )
-            .select(
-                F.col("node_id").alias("child_id"),
-                F.col("ancestor_id").alias("anchor"),
-            )
-            .join(
-                member.withColumnRenamed("node_id", "child_id"),
-                "child_id",
-                "left_semi",
-            )
-        )
-        anchor_self = anchors.select(
-            F.col("anchor").alias("child_id"),
-            F.lit(None).cast("string").alias("parent_id"),
-            F.lit(0).alias("child_index"),
-            "anchor",
-        )
-        frag_rows = e.join(amembers, "child_id").unionByName(anchor_self)
         asm = _make_arguson_asm(int(self.store.tree_meta.get("num_tips", 0)))
-        frags = {
-            r["anchor"]: _json.loads(r["frag"])
-            for r in frag_rows.join(info, "child_id", "left")
-            .groupBy("anchor")
-            .applyInPandas(asm, "anchor string, frag string")
-            .collect()
-        }
-
-        # ---- driver stitch: the top anchor_depth levels only ------------
-        top_edges = e.join(
-            rd.where(F.col("depth") <= anchor_depth).select(
-                F.col("node_id").alias("child_id")
-            ),
-            "child_id",
-            "left_semi",
+        frags, rows = anchored_fragments(
+            edges.select("child_id", "parent_id", "child_index"),
+            self.store.paths,
+            qid,
+            asm,
+            info,
         )
-        rows = top_edges.collect()
         blobs = self._node_blobs([r["child_id"] for r in rows] + [qid])
         # anchors' blobs (incl. their descendant_name_list) live in frags
         self._fill_descendant_names(blobs, skip=frags)
-        blobs.update(frags)
+        blobs.update({a: json.loads(f) for a, f in frags.items()})
         return _nest_blobs(qid, rows, blobs)
 
     def induced_subtree(self, node_ids=None, ott_ids=None, label_format=None) -> dict:
@@ -934,8 +761,7 @@ class TreeOfLifeV3:
         root_id = root_candidates.pop() if root_candidates else found[0]
 
         mdf = T.local_df(spark, [(i,) for i in members], "node_id string")
-        node_rows = self.store.nodes.join(F.broadcast(mdf), "node_id", "left_semi").collect()
-        labels = self._labels(node_rows, label_format, ids_for_unnamed=True)
+        labels = dict(self._labels_df(F.broadcast(mdf), label_format, True).collect())
 
         # request-scale input, but dedup executor-side anyway (same
         # vocabulary-scale-collect shape as _subtree_newick)

@@ -4,19 +4,24 @@
 Rebuild: the subtree's edge rows are computed distributed (closure filter),
 then assembled into the newick string with an **iterative** postorder
 (explicit stack — no recursion limit; the reference's recursion is a real
-failure mode at 2.4M tips). Children are emitted in child_index order, so
-output is byte-stable.
+failure mode at 2.4M tips). Children are emitted in (child_index, child_id)
+order, so output is byte-stable.
 
 Branch length rule per the reference: when lengths are requested, 0 is
 replaced by MIN_BRANCHLENGTH (JadeNode.java:10, :176-177).
 
 Scale note: string assembly of one tree is inherently O(result) on a single
-machine; the distributed part is everything before the final concat. For
-trees too big for one driver (beyond the reference's 100k cap), assemble
-per-subtree fragments executor-side and stitch the top levels on the driver.
+machine. For subtrees past the reference's caps, :func:`anchored_fragments`
+is the one fragment decomposition of every subtree format: it cuts the
+subtree at a fanout-aware anchor depth, assembles each anchor's fragment
+executor-side with the caller's per-fragment assembler and collects only
+the top levels for the driver stitch. ``distributed_newick`` and the v3
+arguson fragment tier are its two callers.
 """
 
 from __future__ import annotations
+
+from pyspark.sql import functions as F
 
 MIN_BRANCHLENGTH = 0.0000000000000000000001
 
@@ -107,6 +112,117 @@ def assemble_newick(
     return "".join(out) + ";"
 
 
+# anchor-depth bounds: a fragment is one applyInPandas group, so its size
+# is executor-memory-bound; the top stitch levels are collected, so their
+# cumulative width is driver-bound
+FRAGMENT_TARGET = 100_000
+TOP_MAX = 200_000
+
+
+def pick_anchor_depth(
+    rd,
+    member,
+    paths,
+    frag_target: int = FRAGMENT_TARGET,
+    top_max: int = TOP_MAX,
+):
+    """Fanout-aware anchor depth for :func:`anchored_fragments`: instead of
+    a fixed depth (right for the production tree's ~10-fanout, wrong for
+    skewed stores), read the subtree's actual shape — per-level width and
+    the LARGEST single fragment an anchor at that level would own — and
+    take the shallowest level whose max fragment fits ``frag_target``,
+    never letting the collected top levels exceed ``top_max`` rows. One
+    subtree-scale aggregation (descendant counts over the request's
+    closure) + a depth-profile collect of O(tree height) rows.
+
+    On a balanced fanout-f tree this returns the smallest d with
+    n/f^d <= frag_target (depth 2 for the 2.42M-tip production shape); on
+    a caterpillar every level has one giant fragment, so it returns the
+    deepest level the driver stitch can afford — the best decomposition
+    that exists for that shape.
+    """
+    desc = (
+        paths.join(
+            member.withColumnRenamed("node_id", "ancestor_id"),
+            "ancestor_id",
+            "left_semi",
+        )
+        .join(member, "node_id", "left_semi")
+        .groupBy("ancestor_id")
+        .agg(F.count("*").alias("cnt"))
+    )
+    stats = sorted(
+        rd.join(desc.withColumnRenamed("ancestor_id", "node_id"), "node_id", "left")
+        .groupBy("depth")
+        .agg(
+            F.count("*").alias("width"),
+            (F.max(F.coalesce(F.col("cnt"), F.lit(0))) + 1).alias("max_frag"),
+        )
+        .collect(),
+        key=lambda r: r["depth"],
+    )
+    cum = 0
+    best = None  # (max_frag, depth)
+    for r in stats:
+        cum += r["width"]
+        if cum > top_max:
+            break
+        if best is None or r["max_frag"] < best[0]:
+            best = (r["max_frag"], r["depth"])
+        if r["max_frag"] <= frag_target:
+            return r["depth"]
+    return best[1] if best else 1
+
+
+def anchored_fragments(
+    edges, paths, root_id: str, assemble, node_cols=None, anchor_depth: int | str = "auto"
+):
+    """The fragment tier shared by every subtree format: the subtree below
+    ``root_id`` (its ``edges`` rows: child_id, parent_id, child_index and
+    whatever else ``assemble`` reads) is cut at ``anchor_depth`` (picked by
+    :func:`pick_anchor_depth` when "auto"). Each anchor owns itself and its
+    closure descendants; their edge rows, left-joined with the per-node
+    ``node_cols`` (node_id plus assembler columns) and tagged ``anchor``,
+    go through ONE grouped ``applyInPandas(assemble)`` keyed by anchor,
+    which returns (anchor, frag) per anchor. The anchor's own row carries its
+    parent link, which lies outside the fragment.
+
+    Returns (frags {anchor: frag string}, top rows): the top rows are the
+    ``edges`` rows of the levels down to the anchors, collected for the
+    driver stitch, so the driver handles fanout^anchor_depth rows and never
+    the whole edge list.
+    """
+    member = edges.select(F.col("child_id").alias("node_id"))
+    # rd feeds the depth pick, the anchors and the top rows: materialize once
+    rd = (
+        paths.where(F.col("ancestor_id") == root_id)
+        .select("node_id", "depth")
+        .join(member, "node_id", "left_semi")
+    ).localCheckpoint(eager=True)
+    if anchor_depth == "auto":
+        anchor_depth = pick_anchor_depth(rd, member, paths)
+    anchors = rd.where(F.col("depth") == anchor_depth).select(
+        F.col("node_id").alias("anchor")
+    )
+    owned = (
+        paths.join(anchors.withColumnRenamed("anchor", "ancestor_id"), "ancestor_id")
+        .select(F.col("node_id").alias("child_id"), F.col("ancestor_id").alias("anchor"))
+        .unionByName(anchors.select(F.col("anchor").alias("child_id"), "anchor"))
+    )
+    rows = edges.join(owned, "child_id")
+    if node_cols is not None:
+        rows = rows.join(node_cols.withColumnRenamed("node_id", "child_id"), "child_id", "left")
+    frags = dict(
+        rows.groupBy("anchor").applyInPandas(assemble, "anchor string, frag string").collect()
+    )
+    top = edges.join(
+        rd.where(F.col("depth") <= anchor_depth).select(F.col("node_id").alias("child_id")),
+        "child_id",
+        "left_semi",
+    ).collect()
+    return frags, top
+
+
 def distributed_newick(
     edges,
     paths,
@@ -115,103 +231,40 @@ def distributed_newick(
     anchor_depth: int | str = "auto",
     include_branch_lengths: bool = False,
 ) -> str:
-    """Scalable newick assembly: fragments are built executor-side per
-    'anchor' subtree (anchors = nodes at ``anchor_depth`` below the root),
-    the driver only stitches the top levels — removing the reference's
-    driver/serving bottleneck that motivated its 100k-tip cap
-    (tree_of_life_v3.java:591).
+    """Newick through :func:`anchored_fragments`: each anchor's fragment
+    string (its label included) is assembled executor-side and becomes a
+    leaf override in the driver's assembly of the top levels. ``labels``
+    is an optional DataFrame (node_id, label).
 
-    One shuffle (group by anchor) + an Arrow-batched applyInPandas; the
-    driver handles fanout^anchor_depth fragment strings, never the whole
-    edge list. ``labels`` is an optional DataFrame (node_id, label).
-
-    For a balanced tree, executor memory per task is O(subtree), driver
-    memory is O(result string) — the unavoidable floor for a single text
-    artifact; write fragments to a distributed sink instead when even the
-    result doesn't fit.
+    Executor memory per task is O(fragment), driver memory O(result
+    string) — the floor for a single text artifact.
     """
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    spark = edges.sparkSession
-    has_bl = "branch_length" in edges.columns
-    has_ci = "child_index" in edges.columns
     sel = ["child_id", "parent_id"]
-    sel.append(F.col("branch_length") if has_bl else F.lit(None).cast("double").alias("branch_length"))
-    sel.append(F.col("child_index") if has_ci else F.lit(0).alias("child_index"))
+    sel.append(
+        F.col("branch_length")
+        if "branch_length" in edges.columns
+        else F.lit(None).cast("double").alias("branch_length")
+    )
+    sel.append(F.col("child_index") if "child_index" in edges.columns else F.lit(0).alias("child_index"))
     e = edges.select(*sel)
-
-    rd = paths.where(F.col("ancestor_id") == root_id).select("node_id", "depth")
-    if anchor_depth == "auto":
-        # fanout-aware pick (api/v3.pick_anchor_depth, VERDICT r7 #7):
-        # shallowest level whose largest fragment fits executor memory,
-        # bounded by the driver-stitch collect. rd feeds three actions in
-        # auto mode — materialize it once.
-        from treemachine_spark.api.v3 import pick_anchor_depth
-
-        member = e.select(F.col("child_id").alias("node_id"))
-        rd = rd.join(member, "node_id", "left_semi").localCheckpoint(eager=True)
-        anchor_depth = pick_anchor_depth(rd, member, paths)
-    anchors = rd.where(F.col("depth") == anchor_depth).select(
-        F.col("node_id").alias("anchor")
-    )
-    members = (
-        paths.join(
-            anchors.withColumnRenamed("anchor", "ancestor_id"), "ancestor_id"
-        )
-        .select(F.col("node_id").alias("child_id"), F.col("ancestor_id").alias("anchor"))
-    )
-    frag_edges = e.join(members, "child_id")
-    if labels is not None:
-        frag_edges = frag_edges.join(
-            labels.select(F.col("node_id").alias("child_id"), F.col("label").alias("child_label")),
-            "child_id",
-            "left",
-        )
-    else:
-        frag_edges = frag_edges.withColumn("child_label", F.lit(None).cast("string"))
 
     def asm(pdf: pd.DataFrame) -> pd.DataFrame:
         anchor = pdf["anchor"].iloc[0]
-        rows = list(
-            zip(pdf["child_id"], pdf["parent_id"], pdf["branch_length"], pdf["child_index"])
-        )
-        labs = {
-            c: l
-            for c, l in zip(pdf["child_id"], pdf["child_label"])
-            if isinstance(l, str) and l
-        }
-        frag = assemble_newick(
-            rows, anchor, labs, include_branch_lengths
-        )[:-1]  # strip ';'; anchor's own label is added by the driver stitch
+        rows = zip(pdf["child_id"], pdf["parent_id"], pdf["branch_length"], pdf["child_index"])
+        labs = dict(zip(pdf["child_id"], pdf["label"])) if "label" in pdf else {}
+        labs = {c: l for c, l in labs.items() if isinstance(l, str)}
+        frag = assemble_newick(rows, anchor, labs, include_branch_lengths)[:-1]
         return pd.DataFrame({"anchor": [anchor], "frag": [frag]})
 
-    frags = {
-        r["anchor"]: r["frag"]
-        for r in frag_edges.groupBy("anchor").applyInPandas(
-            asm, "anchor string, frag string"
-        ).collect()
-    }
-
-    # driver side: the top anchor_depth levels only
-    top_nodes = rd.where(F.col("depth") <= anchor_depth)
-    top_edges = e.join(
-        top_nodes.select(F.col("node_id").alias("child_id")), "child_id", "left_semi"
-    )
-    top_rows = [
-        (r["child_id"], r["parent_id"], r["branch_length"], r["child_index"])
-        for r in top_edges.collect()
-    ]
-    top_ids = {c for c, *_ in top_rows} | {root_id}
+    frags, top_rows = anchored_fragments(e, paths, root_id, asm, labels, anchor_depth)
     top_labels = {}
     if labels is not None:
-        ldf = labels.where(F.col("node_id").isin(list(top_ids)))
-        top_labels = {
-            r["node_id"]: r["label"] for r in ldf.collect() if r["label"]
-        }
-    overrides = {
-        a: f + newick_escape(top_labels.get(a, "")) for a, f in frags.items()
-    }
+        top_ids = [r["child_id"] for r in top_rows] + [root_id]
+        top_labels = dict(
+            labels.where(F.col("node_id").isin(top_ids)).select("node_id", "label").collect()
+        )
     return assemble_newick(
-        top_rows, root_id, top_labels, include_branch_lengths, leaf_overrides=overrides
+        top_rows, root_id, top_labels, include_branch_lengths, leaf_overrides=frags
     )

@@ -149,28 +149,42 @@ def parse_root(nodes_raw: DataFrame, edges_raw: DataFrame) -> str:
     return root[0]["node_id"]
 
 
+# one written file per this many rows, so a table's file split follows its
+# row count alone, never the partitioning of the plan that computed it
+STORE_FILE_ROWS = 1_000_000
+
+# each table's lookup key: rows are hashed into files and sorted by it,
+# so the same table is written as the same files
+_STORE_KEYS = {
+    "nodes": ("node_id",),
+    "edges": ("child_id",),
+    "paths": ("ancestor_id", "node_id"),
+    "node_annotations": ("node_id",),
+    "source_map": ("source_id",),
+}
+
+
 def write_store(store: GraphStore, out_dir: str) -> None:
     """Immutable parquet snapshot, partitioned by tree_id so multi-tree
     stores prune partitions (the reference hides multi-tree support;
-    we keep tree_id first-class — SURVEY.md §7 risk 5)."""
-    store.nodes.write.mode("overwrite").partitionBy("tree_id").parquet(
-        os.path.join(out_dir, "nodes")
-    )
-    store.edges.write.mode("overwrite").partitionBy("tree_id").parquet(
-        os.path.join(out_dir, "edges")
-    )
-    store.paths.write.mode("overwrite").parquet(os.path.join(out_dir, "paths"))
-    store.node_annotations.write.mode("overwrite").parquet(
-        os.path.join(out_dir, "node_annotations")
-    )
-    store.source_map.write.mode("overwrite").parquet(os.path.join(out_dir, "source_map"))
+    we keep tree_id first-class — SURVEY.md §7 risk 5). The same store
+    is written as the same files: an explicit-count repartition on the
+    table's lookup key (adaptive execution never re-coalesces it) and a
+    sort by that key within each file."""
     import json as _json
 
+    for name, key in _STORE_KEYS.items():
+        df = getattr(store, name)
+        by = ("tree_id",) if name in ("nodes", "edges") else ()
+        n = -(-df.count() // STORE_FILE_ROWS) or 1
+        df.repartition(n, *key).sortWithinPartitions(*by, *key).write.mode(
+            "overwrite"
+        ).partitionBy(*by).parquet(os.path.join(out_dir, name))
     with open(os.path.join(out_dir, "tree_meta.json"), "w") as fh:
         _json.dump({**store.tree_meta, "root_id": store.root_id}, fh)
 
 
-_STORE_TABLES = ("nodes", "edges", "paths", "node_annotations", "source_map")
+_STORE_TABLES = tuple(_STORE_KEYS)
 
 
 def write_single_store(stores: list[GraphStore], out_dir: str) -> None:
