@@ -1,11 +1,14 @@
 """Paired A/B for the r15 candidate-dot auto-tier (VERDICT r14 #4).
 
 Times the v2/v3 gate shapes (lsh_topk / ivf_topk) with the dot product
-forced to the codegen fold, forced to the Arrow einsum, and on "auto", in
-ONE session with alternating runs — plus a crossover-scale phase (every
-corpus vector as a query) where the Arrow tier must engage and win.
-Records the tier auto picks so the JSON shows WHICH side auto landed on
-at each scale (the bench_skew auto-column pattern).
+forced to the codegen fold, forced to the Arrow einsum (each by patching
+``similarity.ARROW_DOT_MIN_ROWS_PER_TASK``), and on the library's own
+pick ("auto"), in ONE session with alternating runs — plus a
+crossover-scale phase (every corpus vector as a query) where the Arrow
+tier must engage and win. Records the tier the library picks — read off
+the built plan, where the Arrow tier adds a pair-dot node over the
+forced-fold plan — so the JSON shows WHICH side auto landed on at each
+scale (the bench_skew auto-column pattern).
 
 Usage: python bench_dottier.py [sf_dir] — default /root/testdata/sf0.1.
 """
@@ -47,36 +50,45 @@ def main() -> None:
         "n_ivf_big_queries": n_ivfq, "timings": {}, "auto_picks": {},
     }
 
-    def timed(fn):
+    def on_tier(tier, build):
+        """``build()`` with the candidate dot forced to "fold" or "arrow"
+        through the library constant; "auto" keeps the library's pick."""
+        if tier == "auto":
+            return build()
+        sim.ARROW_DOT_MIN_ROWS_PER_TASK = 0 if tier == "arrow" else float("inf")
+        try:
+            return build()
+        finally:
+            sim.ARROW_DOT_MIN_ROWS_PER_TASK = thr
+
+    def timed(tier, build):
         t0 = time.time()
-        fn().write.format("noop").mode("overwrite").save()
+        on_tier(tier, build).write.format("noop").mode("overwrite").save()
         return round(time.time() - t0, 3)
 
-    shapes = {
-        "lsh_gate": lambda impl: sim.lsh_topk(emb, gate_q, k=10, dot_impl=impl),
-        "ivf_gate": lambda impl: sim.ivf_topk(emb, gate_q, k=10, dot_impl=impl),
-        "lsh_big": lambda impl: sim.lsh_topk(emb, lsh_q, k=10, dot_impl=impl),
-        "ivf_big": lambda impl: sim.ivf_topk(emb, ivf_q, k=10, dot_impl=impl),
-    }
-    picks = {
-        "lsh_gate": n * 5 / (2 ** 8) / par,
-        "ivf_gate": n * 5 * 2 / 8 / par,
-        "lsh_big": n * n_lshq / (2 ** 8) / par,
-        "ivf_big": n * n_ivfq * 2 / 8 / par,
-    }
-    for name, est in picks.items():
-        out["auto_picks"][name] = (
-            "arrow" if est >= sim.ARROW_DOT_MIN_ROWS_PER_TASK else "fold"
+    def n_arrow(df):
+        return df._jdf.queryExecution().executedPlan().toString().count(
+            "ArrowEvalPython"
         )
 
-    for name, fn in shapes.items():
-        timed(lambda: fn("fold"))  # warm-up (scan + codegen + workers)
+    shapes = {
+        "lsh_gate": lambda: sim.lsh_topk(emb, gate_q, k=10),
+        "ivf_gate": lambda: sim.ivf_topk(emb, gate_q, k=10),
+        "lsh_big": lambda: sim.lsh_topk(emb, lsh_q, k=10),
+        "ivf_big": lambda: sim.ivf_topk(emb, ivf_q, k=10),
+    }
+    for name, build in shapes.items():
+        picked_arrow = n_arrow(build()) > n_arrow(on_tier("fold", build))
+        out["auto_picks"][name] = "arrow" if picked_arrow else "fold"
+
+    for name, build in shapes.items():
+        timed("fold", build)  # warm-up (scan + codegen + workers)
         runs: dict = {"fold": [], "arrow": [], "auto": []}
         for _ in range(3):
-            for impl in ("fold", "arrow", "auto"):
-                runs[impl].append(timed(lambda impl=impl: fn(impl)))
+            for tier in ("fold", "arrow", "auto"):
+                runs[tier].append(timed(tier, build))
         out["timings"][name] = {
-            impl: round(statistics.median(v), 3) for impl, v in runs.items()
+            tier: round(statistics.median(v), 3) for tier, v in runs.items()
         }
         out["timings"][name + "_runs"] = runs
     # auto must land within noise of the faster forced tier at every shape

@@ -73,13 +73,26 @@ def tfidf_hot_term_phase(spark, n_docs: int, tag: str = "") -> dict:
         schema="doc_id long, text string",
     ).cache()
     docs.count()
-    from treemachine_spark.functions.text import tfidf_topk
+    from treemachine_spark.functions import text
+
+    def n_rows(plan: str, frame) -> int:
+        """tfidf_topk's row count with its df plan forced through the
+        library's SKEW_DF_FLOOR: "window" keeps every corpus under the
+        floor; "skew_safe" drops the floor, so tf is materialized and the
+        probe — with the 256 reducers set below, where each hot term is
+        far past 4x the fair share — picks the skew-safe plan."""
+        floor = text.SKEW_DF_FLOOR
+        text.SKEW_DF_FLOOR = float("inf") if plan == "window" else -1
+        try:
+            return text.tfidf_topk(frame, k=3).count()
+        finally:
+            text.SKEW_DF_FLOOR = floor
 
     # cluster-like reducer count: with few reducers a single box hides the
     # hot partition inside the wave; with many, the n_docs-row hot-term
     # partition becomes the stage's critical path (on a real cluster the
     # reducer count is always >> one hot key's share). Same setting for
-    # both plans — skew_safe's df shuffle carries vocabulary-scale
+    # both plans — the skew-safe df shuffle carries vocabulary-scale
     # partials regardless, and its tf join is AQE-splittable.
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "256")
@@ -88,23 +101,21 @@ def tfidf_hot_term_phase(spark, n_docs: int, tag: str = "") -> dict:
         # warm codegen/shuffle paths so the first timed plan doesn't carry
         # the session's one-time costs (the r14 smoke saw the first run
         # 2-3x inflated purely by ordering)
-        tfidf_topk(docs.limit(200), k=3, skew_safe=False).count()
-        tfidf_topk(docs.limit(200), k=3, skew_safe=True).count()
+        n_rows("window", docs.limit(200))
+        n_rows("skew_safe", docs.limit(200))
         t0 = time.time()
-        n_win = tfidf_topk(docs, k=3, skew_safe=False).count()
+        n_win = n_rows("window", docs)
         out["tfidf_window_sec"] = round(time.time() - t0, 2)
         t0 = time.time()
-        n_safe = tfidf_topk(docs, k=3, skew_safe=True).count()
+        n_safe = n_rows("skew_safe", docs)
         out["tfidf_skew_safe_sec"] = round(time.time() - t0, 2)
-        # r14 (VERDICT r13 #6): the auto default — one linear probe agg
-        # over the materialized tf picks the plan; the row records WHICH
+        # r14 (VERDICT r13 #6): the automatic pick — one linear probe agg
+        # over the materialized tf past the floor; the row records WHICH
         # plan it picked so the A/B walls above show auto landed on the
         # measured-faster side for this corpus
-        from treemachine_spark.functions.text import tfidf_auto_plan
-
-        out["tfidf_auto_choice"] = tfidf_auto_plan(docs)
+        out["tfidf_auto_choice"] = text.tfidf_auto_plan(docs)
         t0 = time.time()
-        n_auto = tfidf_topk(docs, k=3).count()
+        n_auto = text.tfidf_topk(docs, k=3).count()
         out["tfidf_auto_sec"] = round(time.time() - t0, 2)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -203,7 +214,7 @@ def main() -> None:
     # locally-drivable size auto short-circuits to the window plan (the
     # measured-faster side of BOTH A/Bs below — the skew-safe plan's
     # checkpoint+join overhead never pays for itself under the 10M-row
-    # SKEW_DF_FLOOR straggler bound); the skew_safe trigger itself is
+    # SKEW_DF_FLOOR straggler bound); the skew-safe trigger itself is
     # unit-tested at the decision-rule level (test_tfidf), since a
     # >10M-df hot term needs cluster-scale data to exist
     out.update(tfidf_hot_term_phase(spark, 20_000, tag="small"))

@@ -145,3 +145,74 @@ class stage:
             f"({time.time() - self.t0:.1f}s)",
             flush=True,
         )
+
+
+# --- closure materialization shared by the sf10 tree sweeps (c3, t15):
+# the recursive closure is computed ONCE into paths_mat (the r7 recipe)
+EDGES_SQL = """
+CREATE TABLE edges_mat AS
+WITH edges_raw(child_id, parent_id) AS (
+    SELECT 'r' || CAST(r_regionkey AS VARCHAR), 'root' FROM region
+    UNION ALL
+    SELECT 'n' || CAST(n_nationkey AS VARCHAR), 'r' || CAST(n_regionkey AS VARCHAR) FROM nation
+    UNION ALL
+    SELECT 'c' || CAST(c_custkey AS VARCHAR), 'n' || CAST(c_nationkey AS VARCHAR) FROM customer
+    UNION ALL
+    SELECT 'o' || CAST(o_orderkey AS VARCHAR), 'c' || CAST(o_custkey AS VARCHAR) FROM orders
+    UNION ALL
+    SELECT 'l' || CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR),
+           'o' || CAST(l_orderkey AS VARCHAR) FROM lineitem
+)
+SELECT DISTINCT child_id, parent_id FROM edges_raw
+"""
+
+PATHS_SQL = """
+CREATE TABLE paths_mat AS
+WITH RECURSIVE paths(node_id, ancestor_id, depth) AS (
+    SELECT child_id, parent_id, 1 FROM edges_mat
+    UNION ALL
+    SELECT p.node_id, e.parent_id, p.depth + 1
+    FROM paths p JOIN edges_mat e ON p.ancestor_id = e.child_id
+)
+SELECT * FROM paths
+"""
+
+# w(ancestor) inlined (node_w excludes root -> 0): identical algebra to the
+# full oracle's LEFT JOIN node_w
+_W = (
+    "CASE WHEN p.ancestor_id = 'root' THEN 0 "
+    f"ELSE {h32_sql('p.ancestor_id')} % 900 + 100 END"
+)
+
+
+# --- v7 semantic-dedup cell assignment at the scale-correct k ~ sqrt(n)
+N_CENT = int(os.environ.get("SWEEP_CELLS", "450"))  # ~sqrt(200k)
+
+_QUANT = "list_transform(embedding, x -> round(CAST(x AS DOUBLE) * 1000))"
+_QCOS = (
+    "ROUND(list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v)) "
+    "* sqrt(list_dot_product(b.v, b.v))), 4)"
+)
+
+# assignment via two narrow hash aggregations, NOT a row_number window:
+# the window would sort the n x k cross join WITH the 64-double vector
+# in every row (~50 GB spill at 200k x 450 — it blew the temp cap on
+# the first pass). Scoring keeps only (vec_id, cent_id, integer dot) in
+# flight; MAX then MIN-on-ties reproduces centroid_assign's
+# (max score, min cent_id) tie-break exactly (quantized dots are
+# integer-valued, so the BIGINT cast is lossless).
+_ASSIGN_CTE = f"""
+WITH base AS (SELECT vec_id, {_QUANT} AS v FROM embeddings),
+cent AS (SELECT vec_id AS cent_id, v AS cvec FROM base ORDER BY vec_id LIMIT {N_CENT}),
+scored AS (
+    SELECT b.vec_id, c.cent_id,
+           CAST(list_dot_product(b.v, c.cvec) AS BIGINT) AS s
+    FROM base b CROSS JOIN cent c
+),
+mx AS (SELECT vec_id, MAX(s) AS ms FROM scored GROUP BY vec_id),
+asg AS (
+    SELECT s.vec_id, MIN(s.cent_id) AS cent_id
+    FROM scored s JOIN mx ON s.vec_id = mx.vec_id AND s.s = mx.ms
+    GROUP BY s.vec_id
+)
+"""

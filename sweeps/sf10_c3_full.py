@@ -1,6 +1,7 @@
 """c3_node_heights at sf10, FULL-COVERAGE value tier (VERDICT r11 #5).
 
-The r7/r11 sampled twin compared ~150 hash-sampled nodes exactly. This
+The r7/r11 sampled twin (since deleted) compared ~150 hash-sampled
+nodes exactly. This
 sweep graduates c3 to a FULL-coverage value sign: BOTH engines compute
 every node's height (~62M at sf10) and reduce it to a per-stratum
 fingerprint — COUNT(*), SUM(height_micro), and an order-insensitive
@@ -23,9 +24,17 @@ Run: cd /root/repo && python sweeps/sf10_c3_full.py | tee /tmp/sweep_c3_full.log
 
 from __future__ import annotations
 
-from common import SF10, compare_rows, duck_con, get_spark, h32_sql, stage
-
-from sf10_c3_sampled import EDGES_SQL, PATHS_SQL, _W
+from common import (
+    EDGES_SQL,
+    PATHS_SQL,
+    SF10,
+    _W,
+    compare_rows,
+    duck_con,
+    get_spark,
+    h32_sql,
+    stage,
+)
 
 FP_MOD = 1_000_000_007
 H_MOD = 1_000_003

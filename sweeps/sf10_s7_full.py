@@ -1,7 +1,7 @@
 """s7_sessionize_stream at sf10, FULL-COVERAGE membership tier (r13;
 graduates the r7 sampled sweep on the c3/v7/d7 pattern).
 
-The sampled tier (sf10_s7_sampled.py) signs the FULL closed-session count
+The r7 sampled tier (since deleted) signed the FULL closed-session count
 plus exact values for ~1/1000 users; this sweep makes EVERY session's
 identity load-bearing: the REAL applyInPandasWithState stream
 (read_event_stream -> sessionize(open_tail="never") -> run_to_memory,
@@ -14,7 +14,7 @@ mis-bounded, or mis-counted session flips its bucket.
 ``total_value`` (a ROUND()ed per-session double) stays OUT of the
 fingerprint deliberately: across ~millions of sessions a single knife-edge
 rounding boundary would flip the hash (the CLAUDE.md quantize lesson);
-per-session values remain exact-compared in the sampled tier. Session
+per-session values were exact-compared in the r7 sampled tier. Session
 IDENTITY is all-integer (epoch microseconds, counts) — engine-safe.
 
 Run: cd /root/repo && python sweeps/sf10_s7_full.py | tee /tmp/sweep_s7_full.log

@@ -25,9 +25,10 @@ from __future__ import annotations
 
 import os
 
-from common import SF10, compare_rows, duck_con, get_spark, stage
+from common import (
+    EDGES_SQL, PATHS_SQL, SF10, compare_rows, duck_con, get_spark, stage,
+)
 
-from sf10_c3_sampled import EDGES_SQL, PATHS_SQL
 
 # literal tip-set semantics, staged: every table below is request-scale
 # except lv_mat (the leaf set, one anti-join pass) and the two paths_mat

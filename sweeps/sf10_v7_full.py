@@ -12,8 +12,8 @@ contributes; a single missing/extra/mis-celled pair flips its bucket.
 The cos VALUE stays out of the fingerprint deliberately: 4dp-rounded
 cosines sit on 1-ulp knife edges across engines at scale (the CLAUDE.md
 quantize-to-integer lesson — a pre-rounded DOUBLE was NOT enough at
-sf10), and pair values are already exact-compared in the sampled-cell
-tier (sf10_v7_scaled.py). Membership itself uses the rounded >= 0.4
+sf10), and pair values were exact-compared in the r11 sampled-cell
+tier (since deleted). Membership itself uses the rounded >= 0.4
 test both sides; a boundary flip would surface as a visible 1-pair
 count diff, not silent corruption.
 
@@ -22,9 +22,17 @@ Run: cd /root/repo && python sweeps/sf10_v7_full.py | tee /tmp/sweep_v7_full.log
 
 from __future__ import annotations
 
-from common import SF10, compare_rows, duck_con, get_spark, h32_sql, stage
-
-from sf10_v7_scaled import N_CENT, _ASSIGN_CTE, _QCOS
+from common import (
+    N_CENT,
+    SF10,
+    _ASSIGN_CTE,
+    _QCOS,
+    compare_rows,
+    duck_con,
+    get_spark,
+    h32_sql,
+    stage,
+)
 
 FP_MOD = 1_000_000_007
 N_BUCKETS = 64  # fingerprint granularity: cent_id % 64 buckets

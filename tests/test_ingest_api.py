@@ -197,14 +197,32 @@ def test_arguson_distributed_matches_driver(api, monkeypatch):
 
 def test_named_node_without_ott_id_keeps_its_name(store, monkeypatch):
     """name_and_id labels a named node that has no ott id by its bare
-    name, in the driver tier, the fragment tier and induced_subtree."""
+    name, in the driver tier, the fragment tier and induced_subtree; its
+    node_info and arguson blobs answer 200 with a null taxon ott_id."""
     from dataclasses import replace
 
     from pyspark.sql import functions as F
 
+    from treemachine_spark.api.server import ServerCore
+
     gavia = F.col("node_id") == "ott316878"
     nodes = store.nodes.withColumn("ott_id", F.when(~gavia, F.col("ott_id")))
     api = TreeOfLifeV3(replace(store, nodes=nodes))
+    core = ServerCore(replace(store, nodes=nodes), cache_size=0)
+
+    def gavia_taxa():
+        status, info = core.handle("/v3/tree_of_life/node_info", {"node_id": "ott316878"})
+        assert status == 200, info
+        status, arg = core.handle(
+            "/v3/tree_of_life/subtree", {"node_id": "ott5839486", "format": "arguson"}
+        )
+        assert status == 200, arg
+        (child,) = [c for c in arg["arguson"]["children"] if c["node_id"] == "ott316878"]
+        return info["taxon"], child["taxon"]
+
+    want_taxon = {"name": "Gavia", "ott_id": None}
+    for taxon in gavia_taxa():
+        assert {f: taxon[f] for f in want_taxon} == want_taxon
     want = (
         "((Struthio_ott536234,Apteryx_ott810751),"
         "(Gavia,Anas_ott102710)Gaviiformes_ott5839486)Aves_ott81461;"
@@ -214,6 +232,8 @@ def test_named_node_without_ott_id_keeps_its_name(store, monkeypatch):
     assert induced == "(Gavia,Struthio_ott536234)Aves_ott81461;"
     monkeypatch.setattr(v3, "FRAGMENT_TIER_EDGES", 0)  # force the fragment tier
     assert api.subtree(node_id="ott81461")["newick"] == want
+    for taxon in gavia_taxa():
+        assert {f: taxon[f] for f in want_taxon} == want_taxon
 
 
 def test_induced_subtree(api):

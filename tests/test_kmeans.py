@@ -91,7 +91,25 @@ def test_kmeans_empty_input_raises(spark):
         kmeans_fit(df, k=2, iters=1)
 
 
-def test_estep_arrow_parity_bit_exact(spark, emb_df):
+def _fit_tier(monkeypatch, tier: str, df, **kwargs):
+    """kmeans_fit with the E-step forced to the "catalyst" fold or the
+    "arrow" twin through ``ARROW_DOT_MIN_ROWS_PER_TASK``; returns sorted
+    centroid rows, sorted assignment rows and the inertia history."""
+    import treemachine_spark.functions.similarity as sim
+
+    with monkeypatch.context() as m:
+        m.setattr(
+            sim, "ARROW_DOT_MIN_ROWS_PER_TASK", 0 if tier == "arrow" else float("inf")
+        )
+        cdf, adf, hist = kmeans_fit(df, **kwargs)
+        return (
+            sorted(map(tuple, cdf.collect())),
+            sorted(map(tuple, adf.collect())),
+            hist,
+        )
+
+
+def test_estep_arrow_parity_bit_exact(spark, emb_df, monkeypatch):
     # r15 (VERDICT r14 #8): the Arrow E-step preserves IEEE op order, so
     # BOTH tiers must produce bit-identical centroids, assignments and
     # inertia histories — on the synthetic corpus AND the sf0.1 embeddings
@@ -102,33 +120,35 @@ def test_estep_arrow_parity_bit_exact(spark, emb_df):
         .limit(500)
     )
     for df, k in ((emb_df, 4), (sf01, 6)):
-        out = {}
-        for impl in ("catalyst", "arrow"):
-            cdf, adf, hist = kmeans_fit(
-                df, k=k, iters=3, compute_inertia=True, estep_impl=impl
-            )
-            out[impl] = (
-                sorted(map(tuple, cdf.collect())),
-                sorted(map(tuple, adf.collect())),
-                hist,
-            )
+        out = {
+            tier: _fit_tier(monkeypatch, tier, df, k=k, iters=3, compute_inertia=True)
+            for tier in ("catalyst", "arrow")
+        }
         assert out["catalyst"][0] == out["arrow"][0]  # centroids bit-equal
         assert out["catalyst"][1] == out["arrow"][1]  # assignments equal
         assert out["catalyst"][2] == out["arrow"][2]  # inertia bit-equal
 
 
-def test_estep_arrow_null_and_ragged_vectors(spark):
-    # NULL / wrong-length vectors must get NULL cent_id in BOTH tiers (the
-    # fold NULL-propagates through zip_with padding)
+def test_estep_arrow_null_and_ragged_vectors(spark, monkeypatch):
+    # NULL vectors, wrong-length vectors and vectors with a NULL element
+    # must get a NULL cent_id and a NULL distance in BOTH tiers (the fold
+    # NULL-propagates through zip_with padding and the sum), so the two
+    # tiers agree on centroids, assignments and inertia
     rows = [
         (0, [1.0, 2.0]), (1, [1.5, 2.5]), (2, None), (3, [9.0, 9.0, 9.0]),
+        (4, [1.0, None]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for impl in ("catalyst", "arrow"):
-        _, adf, _ = kmeans_fit(df, k=2, iters=2, estep_impl=impl)
-        got = {r["vec_id"]: r["cent_id"] for r in adf.collect()}
-        assert got[2] is None and got[3] is None, (impl, got)
-        assert got[0] is not None and got[1] is not None, (impl, got)
+    out = {
+        tier: _fit_tier(monkeypatch, tier, df, k=2, iters=2, compute_inertia=True)
+        for tier in ("catalyst", "arrow")
+    }
+    for tier, (_, assigned, hist) in out.items():
+        got = dict(assigned)
+        assert got[2] is None and got[3] is None and got[4] is None, (tier, got)
+        assert got[0] is not None and got[1] is not None, (tier, got)
+        assert not any(np.isnan(h) for h in hist), (tier, hist)
+    assert out["catalyst"] == out["arrow"]
 
 
 def test_estep_auto_crosses_to_arrow(spark, emb_df, monkeypatch):
@@ -140,8 +160,8 @@ def test_estep_auto_crosses_to_arrow(spark, emb_df, monkeypatch):
         )
 
     # 200 rows / par is far below the crossover -> catalyst
-    _, adf, _ = kmeans_fit(emb_df, k=4, iters=1, estep_impl="auto")
+    _, adf, _ = kmeans_fit(emb_df, k=4, iters=1)
     assert _n_arrow(adf) == 0
     monkeypatch.setattr(sim, "ARROW_DOT_MIN_ROWS_PER_TASK", 0)
-    _, adf, _ = kmeans_fit(emb_df, k=4, iters=1, estep_impl="auto")
+    _, adf, _ = kmeans_fit(emb_df, k=4, iters=1)
     assert _n_arrow(adf) > 0

@@ -136,14 +136,14 @@ def test_distributed_arguson_equals_driver(big_api, monkeypatch):
 
 
 @pytest.mark.slow
-def test_anchor_depth_auto_balanced_vs_caterpillar(spark):
+def test_anchor_depth_auto_balanced_vs_caterpillar(spark, monkeypatch):
     """VERDICT r7 #7: the fanout-aware anchor pick. On a balanced
     fanout-10 tree it returns the shallowest level whose largest fragment
     fits the target (the fixed depth=2 falls out as the computed answer
     at production shape); on a caterpillar — where NO level has small
     fragments — it goes as deep as the driver-stitch budget allows
     instead of pinning a near-root anchor that owns the whole tree."""
-    from treemachine_spark.exporters.newick_sink import pick_anchor_depth
+    from treemachine_spark.exporters import newick_sink as ns
     from treemachine_spark.graph.closure import build_closure
 
     def closure_for(edge_list):
@@ -162,8 +162,10 @@ def test_anchor_depth_auto_balanced_vs_caterpillar(spark):
             bal.extend((f"c{i}_{j}_{k}", f"b{i}_{j}") for k in range(10))
     rd, member, paths = closure_for(bal)
     # depth-1 fragments hold 111 nodes, depth-2 fragments 11
-    assert pick_anchor_depth(rd, member, paths, frag_target=200) == 1
-    assert pick_anchor_depth(rd, member, paths, frag_target=50) == 2
+    monkeypatch.setattr(ns, "FRAGMENT_TARGET", 200)
+    assert ns.pick_anchor_depth(rd, member, paths) == 1
+    monkeypatch.setattr(ns, "FRAGMENT_TARGET", 50)
+    assert ns.pick_anchor_depth(rd, member, paths) == 2
 
     # caterpillar: 60-node spine, one leaf per spine node
     cat = []
@@ -174,8 +176,10 @@ def test_anchor_depth_auto_balanced_vs_caterpillar(spark):
         prev = f"s{i}"
     rd, member, paths = closure_for(cat)
     # no level satisfies a tiny fragment target; the pick must go as deep
-    # as the top budget allows (cum width 2/level -> depth 10 at top_max 20)
-    assert pick_anchor_depth(rd, member, paths, frag_target=5, top_max=20) == 10
+    # as the top budget allows (cum width 2/level -> depth 10 at TOP_MAX 20)
+    monkeypatch.setattr(ns, "FRAGMENT_TARGET", 5)
+    monkeypatch.setattr(ns, "TOP_MAX", 20)
+    assert ns.pick_anchor_depth(rd, member, paths) == 10
 
 
 @pytest.mark.slow

@@ -28,32 +28,39 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _mrca_raw(ctx, tips):
+def _tier(monkeypatch, tier: str, fn, *args, **kwargs):
+    """Rows of ``fn`` on the "driver" or "joined" tier, forced through the
+    size gate ``T.DRIVER_PATH_MAX_TIPS``."""
+    monkeypatch.setattr(T, "DRIVER_PATH_MAX_TIPS", 10**9 if tier == "driver" else 0)
+    return _rows(fn(*args, **kwargs))
+
+
+def _mrca_raw(monkeypatch, ctx, tips):
     """The driver tier over the RAW closure (``paths=`` + ``root_id=``),
     the form api.v3 serves mrca through: self rows are synthesized for
     tips the scan proves valid, and for the root, which has no rows."""
-    return T.mrca(
-        ctx["paths_self"], list(tips), max_driver_tips=10**9,
+    return _tier(
+        monkeypatch, "driver", T.mrca, ctx["paths_self"], list(tips),
         paths=ctx["paths"], root_id=ROOT_ID,
     )
 
 
-def test_mrca_paths_agree_small(spark, ctx):
-    tips = ctx["induced_tips"]
-    fast = T.mrca(ctx["paths_self"], list(tips), max_driver_tips=10**9)
-    joined = T.mrca(ctx["paths_self"], list(tips), max_driver_tips=0)
-    assert _rows(fast) == _rows(joined) == _rows(_mrca_raw(ctx, tips))
-    assert len(_rows(fast)) == 1
+def test_mrca_paths_agree_small(spark, ctx, monkeypatch):
+    tips = list(ctx["induced_tips"])
+    fast = _tier(monkeypatch, "driver", T.mrca, ctx["paths_self"], tips)
+    joined = _tier(monkeypatch, "joined", T.mrca, ctx["paths_self"], tips)
+    assert fast == joined == _mrca_raw(monkeypatch, ctx, tips)
+    assert len(fast) == 1
 
 
-def test_induced_paths_agree_small(spark, ctx):
-    tips = ctx["induced_tips"]
-    fast = T.induced_subtree(ctx["paths_self"], list(tips), max_driver_tips=10**9)
-    joined = T.induced_subtree(ctx["paths_self"], list(tips), max_driver_tips=0)
-    assert _rows(fast) == _rows(joined)
+def test_induced_paths_agree_small(spark, ctx, monkeypatch):
+    tips = list(ctx["induced_tips"])
+    fast = _tier(monkeypatch, "driver", T.induced_subtree, ctx["paths_self"], tips)
+    joined = _tier(monkeypatch, "joined", T.induced_subtree, ctx["paths_self"], tips)
+    assert fast == joined
 
 
-def test_mrca_joined_tip_is_own_ancestor(spark, ctx):
+def test_mrca_joined_tip_is_own_ancestor(spark, ctx, monkeypatch):
     # a tip that is the ancestor of the rest must win (depth-0 self paths)
     reg = (
         ctx["edges"].where(F.col("child_id") == "n3").select("parent_id").first()[0]
@@ -63,17 +70,17 @@ def test_mrca_joined_tip_is_own_ancestor(spark, ctx):
         # the root as a tip: it has no closure rows of its own
         (["n3", ROOT_ID], [(ROOT_ID, 0)]),
     ):
-        fast = T.mrca(ctx["paths_self"], tips, max_driver_tips=10**9)
-        joined = T.mrca(ctx["paths_self"], tips, max_driver_tips=0)
-        raw = _mrca_raw(ctx, tips)
-        assert _rows(fast) == _rows(joined) == _rows(raw) == want, tips
+        fast = _tier(monkeypatch, "driver", T.mrca, ctx["paths_self"], tips)
+        joined = _tier(monkeypatch, "joined", T.mrca, ctx["paths_self"], tips)
+        raw = _mrca_raw(monkeypatch, ctx, tips)
+        assert fast == joined == raw == want, tips
 
 
-def test_mrca_joined_disjoint_trees_empty(spark, ctx):
+def test_mrca_joined_disjoint_trees_empty(spark, ctx, monkeypatch):
     # ids that share no ancestor -> empty result on both paths
-    joined = T.mrca(ctx["paths_self"], ["n3", "no_such_node"], max_driver_tips=0)
-    assert joined.count() == 0
-    assert _mrca_raw(ctx, ["n3", "no_such_node"]).count() == 0
+    tips = ["n3", "no_such_node"]
+    assert _tier(monkeypatch, "joined", T.mrca, ctx["paths_self"], tips) == []
+    assert _mrca_raw(monkeypatch, ctx, tips) == []
 
 
 @pytest.mark.slow
@@ -106,7 +113,7 @@ def test_mrca_50k_tips_join_path(spark):
     tips.unpersist()
 
 
-def test_induced_10k_tips_join_path_properties(spark, big_ctx):
+def test_induced_10k_tips_join_path_properties(spark, big_ctx, monkeypatch):
     """Induced subtree over every tip under one region (>5k tips, join
     path): every tip appears as a child, every parent is a kept internal,
     and the result equals the driver path run on the same set."""
@@ -126,5 +133,5 @@ def test_induced_10k_tips_join_path_properties(spark, big_ctx):
     tip_ids = {r["node_id"] for r in r1_tips.collect()}
     assert tip_ids <= children
     # agreement with the driver-side recipe on the identical set
-    fast = T.induced_subtree(paths_self, sorted(tip_ids), max_driver_tips=10**9)
-    assert jrows == _rows(fast)
+    fast = _tier(monkeypatch, "driver", T.induced_subtree, paths_self, sorted(tip_ids))
+    assert jrows == fast

@@ -624,7 +624,7 @@ def test_grouped_agg_udaf_matches_jvm_percentile(spark):
 
 
 @pytest.mark.slow
-def test_connected_components_chain_bounded_rounds(spark):
+def test_connected_components_chain_bounded_rounds(spark, monkeypatch):
     """Large-star/small-star must collapse a 10k-node chain in O(log^2 n)
     rounds — min-label propagation would need 10k rounds (this is the
     long-chain case its docstring flags). Differential-checked against the
@@ -641,9 +641,10 @@ def test_connected_components_chain_bounded_rounds(spark):
     )
     # measured convergence is ~log2(n)+1 round-pairs (11 rounds for a
     # 1024-chain): cap at 20 — label-prop would need ~10k rounds.
-    # driver_max_pairs=0 forces the distributed star loop (r14: the driver
+    # DRIVER_MAX_PAIRS=0 forces the distributed star loop (r14: the driver
     # union-find tier would otherwise absorb a 10k-edge graph)
-    comp = connected_components(chain, max_rounds=20, driver_max_pairs=0).collect()
+    monkeypatch.setattr(dedup, "DRIVER_MAX_PAIRS", 0)
+    comp = connected_components(chain, max_rounds=20).collect()
     assert len(comp) == n
     assert {r["component"] for r in comp} == {"0"}
 
@@ -656,13 +657,13 @@ def test_connected_components_chain_bounded_rounds(spark):
     )
     a = {
         (r["node_id"], r["component"])
-        for r in connected_components(pairs, driver_max_pairs=0).collect()
+        for r in connected_components(pairs).collect()
     }
     b = {(r["node_id"], r["component"]) for r in connected_components_labelprop(pairs).collect()}
     assert a == b
 
 
-def test_connected_components_driver_tier_matches(spark):
+def test_connected_components_driver_tier_matches(spark, monkeypatch):
     """r14: the size-gated driver union-find tier returns EXACTLY the star
     loop's rows (same component = min-member-id semantics, same schema) on
     chain + star + cycle + random graphs, for string and long ids."""
@@ -682,14 +683,16 @@ def test_connected_components_driver_tier_matches(spark):
     for pairs_py, typ in cases:
         df = spark.createDataFrame(pairs_py, f"doc_a {typ}, doc_b {typ}")
         via_driver = connected_components(df)
-        via_star = connected_components(df, driver_max_pairs=0)
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "DRIVER_MAX_PAIRS", 0)  # force the star loop
+            via_star = connected_components(df)
         assert via_driver.dtypes == via_star.dtypes
         assert {tuple(r) for r in via_driver.collect()} == {
             tuple(r) for r in via_star.collect()
         }
 
 
-def test_connected_components_null_endpoints_both_tiers(spark):
+def test_connected_components_null_endpoints_both_tiers(spark, monkeypatch):
     """r14 review: the distributed tier's ``u != v`` predicate NULL-drops
     any row with a NULL endpoint (NULL comparison -> NULL -> filtered); the
     driver union-find tier must mirror that — None used to enter the parent
@@ -701,10 +704,8 @@ def test_connected_components_null_endpoints_both_tiers(spark):
     via_driver = {
         tuple(r) for r in dedup.connected_components(pairs).collect()
     }
-    via_star = {
-        tuple(r)
-        for r in dedup.connected_components(pairs, driver_max_pairs=0).collect()
-    }
+    monkeypatch.setattr(dedup, "DRIVER_MAX_PAIRS", 0)  # force the star loop
+    via_star = {tuple(r) for r in dedup.connected_components(pairs).collect()}
     assert via_driver == via_star == {("a", "a"), ("b", "a")}
 
 

@@ -10,6 +10,9 @@
   must be DROPPED like the DuckDB oracle drops NULL-cosine rows — the old
   codegen divide raised DIVIDE_BY_ZERO under ANSI (the v4/v7 hazard, fixed
   here the same way).
+- candidate-dot tiers of ivf_topk / lsh_topk / ivf_pq_topk, each forced
+  through ARROW_DOT_MIN_ROWS_PER_TASK, and their job-free pick over a
+  cached corpus and a LocalRelation query frame.
 """
 
 import pytest
@@ -263,56 +266,120 @@ def _exec_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _dot_tier(monkeypatch, tier: str, fn):
+    """``fn()`` with the candidate dot forced to the "fold" or "arrow" tier
+    through ``sim.ARROW_DOT_MIN_ROWS_PER_TASK`` ("auto" keeps the
+    constant); the tier is fixed when the plan is built."""
+    with monkeypatch.context() as m:
+        if tier != "auto":
+            m.setattr(
+                sim, "ARROW_DOT_MIN_ROWS_PER_TASK", 0 if tier == "arrow" else float("inf")
+            )
+        return fn()
+
+
 def test_candidate_dot_tiers_bit_equal_and_auto_picks(spark, corpus, monkeypatch):
     # r15 auto-tier (VERDICT r14 #4): fold and Arrow candidate dots must be
-    # bit-identical on v2/v3/PQ shapes, and "auto" must land on the fold
-    # below the measured ~10^4 rows/task crossover (gate scale) and on the
-    # Arrow einsum above it.
+    # bit-identical on v2/v3/PQ shapes, and the measured crossover must
+    # keep gate scale (40x5 candidates) on the fold.
     q = corpus.where(F.col("vec_id") < 5)
     for fn in (
-        lambda impl: sim.lsh_topk(corpus, q, k=5, dot_impl=impl),
-        lambda impl: sim.ivf_topk(corpus, q, k=5, n_centroids=4, dot_impl=impl),
+        lambda: sim.lsh_topk(corpus, q, k=5),
+        lambda: sim.ivf_topk(corpus, q, k=5, n_centroids=4),
     ):
-        fold = sorted(map(tuple, fn("fold").collect()))
-        arrow = sorted(map(tuple, fn("arrow").collect()))
-        auto = sorted(map(tuple, fn("auto").collect()))
-        assert fold == arrow == auto
+        plans = {t: _dot_tier(monkeypatch, t, fn) for t in ("fold", "arrow", "auto")}
+        rows = {t: sorted(map(tuple, df.collect())) for t, df in plans.items()}
+        assert rows["fold"] == rows["arrow"] == rows["auto"]
         # the bucket/assign UDFs contribute their own Arrow nodes — the
-        # tier pick shows up as the DELTA: at 40x5 candidates auto stays
-        # on the codegen fold (same Arrow-node count as "fold"), forced
-        # "arrow" adds the pair-dot node
-        n_fold = _exec_plan(fn("fold")).count("ArrowEvalPython")
-        assert _exec_plan(fn("auto")).count("ArrowEvalPython") == n_fold
-        assert _exec_plan(fn("arrow")).count("ArrowEvalPython") > n_fold
-    # above the crossover auto engages the Arrow tier
-    monkeypatch.setattr(sim, "ARROW_DOT_MIN_ROWS_PER_TASK", 0)
-    n_fold = _exec_plan(
-        sim.ivf_topk(corpus, q, k=5, n_centroids=4, dot_impl="fold")
-    ).count("ArrowEvalPython")
-    assert (
-        _exec_plan(
-            sim.ivf_topk(corpus, q, k=5, n_centroids=4, dot_impl="auto")
-        ).count("ArrowEvalPython")
-        > n_fold
-    )
-    with pytest.raises(ValueError, match="candidate_dot"):
-        sim.lsh_topk(corpus, q, k=5, dot_impl="nope").collect()
+        # tier pick shows up as the DELTA: auto stays on the codegen fold
+        # (same Arrow-node count as the forced fold), the forced Arrow
+        # tier adds the pair-dot node
+        n = {t: _exec_plan(df).count("ArrowEvalPython") for t, df in plans.items()}
+        assert n["auto"] == n["fold"] < n["arrow"]
 
 
-def test_pq_rerank_dot_tiers_bit_equal(spark, corpus):
+def test_pq_rerank_dot_tiers_bit_equal(spark, corpus, monkeypatch):
     from treemachine_spark.functions import pq
 
     q = corpus.where(F.col("vec_id") < 5)
-    res = {
-        impl: sorted(
-            map(
-                tuple,
-                pq.ivf_pq_topk(
-                    corpus, q, k=5, n_centroids=4, m=3, n_codes=4,
-                    rerank=True, dot_impl=impl,
-                ).collect(),
-            )
+
+    def run():
+        return pq.ivf_pq_topk(
+            corpus, q, k=5, n_centroids=4, m=3, n_codes=4, rerank=True
         )
-        for impl in ("fold", "arrow", "auto")
+
+    res = {
+        tier: sorted(map(tuple, _dot_tier(monkeypatch, tier, run).collect()))
+        for tier in ("fold", "arrow", "auto")
     }
     assert res["fold"] == res["arrow"] == res["auto"]
+
+
+def test_ann_tier_picks_run_no_job_on_cached_corpus(spark, monkeypatch):
+    """The serving shape — a materialized cached corpus and a LocalRelation
+    query frame: ivf_topk, lsh_topk and ivf_pq_topk read both sizes for
+    their dot-tier pick from plan statistics, so no Spark job starts
+    before the answer is collected; on both sides of the crossover the
+    pick equals the one the count()-based estimate gives."""
+    import math
+
+    import pandas as pd
+
+    from treemachine_spark.functions import pq
+
+    sc = spark.sparkContext
+    emb = _emb_df(spark, [(i, _vec(i)) for i in range(40)]).cache()
+    emb.count()
+    cells = tuple(df.cache() for df in sim.ivf_cells(emb, 4))
+    for df in cells:
+        df.count()
+    codebook = pq.pq_train(emb, m=3, n_codes=4)
+    qrows = emb.where(F.col("vec_id") < 5).collect()
+    q = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "vec_id": [r["vec_id"] for r in qrows],
+                "embedding": [list(r["embedding"]) for r in qrows],
+            }
+        ),
+        "vec_id long, embedding array<double>",
+    )
+    n, nq = emb.count(), q.count()
+    shapes = {
+        "lsh": (lambda: sim.lsh_topk(emb, q, k=5), n * nq / float(2**8)),
+        "ivf": (
+            lambda: sim.ivf_topk(emb, q, k=5, n_centroids=4, cells=cells),
+            n * nq * 2 / 4,
+        ),
+        "pq": (
+            lambda: pq.ivf_pq_topk(
+                emb, q, k=5, n_centroids=4, codebook=codebook, cells=cells,
+                rerank=True,
+            ),
+            nq * 3 * 5,
+        ),
+    }
+    par = max(sc.defaultParallelism, 1)
+    try:
+        for name, (build, n_candidates) in shapes.items():
+            fold = _dot_tier(monkeypatch, "fold", build)
+            want_rows = sorted(map(tuple, fold.collect()))
+            n_fold = _exec_plan(fold).count("ArrowEvalPython")
+            est = n_candidates / par  # rows per task, as counted
+            for threshold, want_arrow in ((est, True), (math.nextafter(est, math.inf), False)):
+                monkeypatch.setattr(sim, "ARROW_DOT_MIN_ROWS_PER_TASK", threshold)
+                group = f"tier-pick-{name}-{want_arrow}"
+                sc.setJobGroup(group, "dot-tier pick")
+                try:
+                    out = build()
+                    assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+                    rows = sorted(map(tuple, out.collect()))
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                assert rows == want_rows and rows, name
+                picked_arrow = _exec_plan(out).count("ArrowEvalPython") > n_fold
+                assert picked_arrow == want_arrow, (name, threshold)
+    finally:
+        emb.unpersist()
+        for df in cells:
+            df.unpersist()

@@ -76,12 +76,14 @@ def test_lm_score_short_doc_zero(spark):
     assert got[2][0] == 1
 
 
-def test_tfidf_skew_safe_path_identical_values(spark):
+def test_tfidf_skew_safe_path_identical_values(spark, monkeypatch):
     """r10 (r9 verdict #4): the skew-safe df plan (materialized tf +
     vocabulary-scale groupBy + join back) returns rows IDENTICAL to the
     default window-count plan — same integer micro-unit scores, same
     deterministic tie-breaks — on a corpus with real hot terms (every doc
-    shares boilerplate) and df>1 rare terms."""
+    shares boilerplate) and df>1 rare terms. Each plan is forced through
+    ``SKEW_DF_FLOOR`` and the reducer count the decision rule reads."""
+    from treemachine_spark.functions import text
     from treemachine_spark.io.tables import load_tables
 
     docs = load_tables(spark, "/root/testdata/sf0.001")["documents"]
@@ -94,25 +96,33 @@ def test_tfidf_skew_safe_path_identical_values(spark):
         "doc_id long, text string",
     )
     corpus = docs.select("doc_id", "text").unionByName(hot)
-    a = {tuple(r) for r in tfidf_topk(corpus, k=3, skew_safe=False).collect()}
-    b = {tuple(r) for r in tfidf_topk(corpus, k=3, skew_safe=True).collect()}
-    # r14 (VERDICT r13 #6): skew_safe="auto" is the default — one linear
-    # probe agg picks the plan; values identical either way
-    c = {tuple(r) for r in tfidf_topk(corpus, k=3).collect()}
-    assert a == b == c and len(a) > 100
-    assert tfidf_topk(corpus, k=3).dtypes == tfidf_topk(
-        corpus, k=3, skew_safe=True
-    ).dtypes
 
-    from treemachine_spark.functions.text import tfidf_auto_plan
+    def run():
+        out = tfidf_topk(corpus, k=3)
+        return text.tfidf_auto_plan(corpus), {tuple(r) for r in out.collect()}, out.dtypes
 
-    # a gate-SF corpus is nowhere near the hot-partition floor
-    assert tfidf_auto_plan(corpus) == "window"
+    # a gate-SF corpus is nowhere near the hot-partition floor: window
+    default = run()
+    # past the floor tf is materialized and probed; the hottest term
+    # (df 415 of 11,760 tf rows) hides inside 4x the fair share of 32
+    # reducers, so the window runs over the probe's checkpoint
+    monkeypatch.setattr(text, "SKEW_DF_FLOOR", -1)
+    probed = run()
+    # with 256 reducers it exceeds 4x the fair share: skew-safe
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "256")
+    try:
+        safe = run()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert (default[0], probed[0], safe[0]) == ("window", "window", "skew_safe")
+    assert default[1] == probed[1] == safe[1] and len(default[1]) > 100
+    assert default[2] == probed[2] == safe[2]
 
 
 def test_tfidf_auto_decision_rule():
-    """The pure decision rule behind skew_safe="auto" (r14, VERDICT r13
-    #6): skew_safe only when the hot term's one-reducer partition exceeds
+    """The pure decision rule behind the automatic df plan pick (r14,
+    VERDICT r13 #6): skew_safe only when the hot term's one-reducer partition exceeds
     BOTH the absolute straggler floor (10M rows ~= the one-core wall that
     dwarfs the skew-safe plan's overhead) and 4x the fair per-reducer
     share. The floor side is calibrated from the r14 warmed A/B (window

@@ -10,7 +10,11 @@ LocalRelation query frame against the chosen operator —
 or ``ivf_pq_topk`` over a persisted PQ index (``functions/pq.py``
 read_pq_index artifact: ADC scoring over codes, exact re-rank). Scores
 are the engine's exact integer quantized dots, so responses are
-deterministic and cacheable under the server's snapshot contract.
+deterministic and cacheable under the server's snapshot contract. The
+operators' dot-product tiers size themselves through
+``io.tables.row_count``, which reads the materialized corpus cache and
+the LocalRelation query frame from plan statistics: no count job per
+request, provided the corpus is cached (``from_paths`` caches it).
 """
 
 from __future__ import annotations
@@ -111,10 +115,7 @@ class AnnIndex:
                     "neighbor_id",
                 )
         assigned = assigned.cache()
-        # boot count materializes the cache AND records corpus size for
-        # the per-request dot-tier pick (similarity.pick_dot_impl — no
-        # probe job at serve time)
-        self._n_corpus = assigned.count()
+        assigned.count()  # materialize the cell cache at boot
         self._cells = (cent.cache(), assigned)
 
     @classmethod
@@ -329,32 +330,21 @@ class AnnIndex:
                 where=where,
             )
         elif method == "ivf":
-            # tier pick is driver-side (corpus size known from boot) so a
-            # request never pays a probe count job
-            impl = similarity.pick_dot_impl(
-                self._n_corpus * len(batch) * n_probe
-                / max(self.n_centroids, 1),
-                self.embeddings.sparkSession,
-            )
             out = similarity.ivf_topk(
                 self.embeddings, q, k=k, n_centroids=self.n_centroids,
                 n_probe=n_probe, id_col=self.id_col, vec_col=self.vec_col,
-                cells=self._cells, where=where, dot_impl=impl,
+                cells=self._cells, where=where,
             )
         else:
             from treemachine_spark.functions.pq import ivf_pq_topk
 
-            impl = similarity.pick_dot_impl(
-                len(batch) * rerank_factor * k,
-                self.embeddings.sparkSession,
-            )
             out = ivf_pq_topk(
                 self.embeddings, q, k=k, n_centroids=self.n_centroids,
                 n_probe=n_probe, codebook=self.codebook, codes=self.codes,
                 rotation=self.rotation, rerank=True,
                 rerank_factor=rerank_factor,
                 id_col=self.id_col, vec_col=self.vec_col, cells=self._cells,
-                where=where, dot_impl=impl,
+                where=where,
             )
         rows = out.orderBy("query_id", "rank").collect() if len(batch) > 1 \
             else out.orderBy("rank").collect()

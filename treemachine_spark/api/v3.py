@@ -72,7 +72,7 @@ def _blob_from_dict(d: dict, default_num_tips: int) -> dict:
             "name": d.get("name"),
             "unique_name": d.get("unique_name"),
             "rank": d.get("rank"),
-            "ott_id": int(d["ott_id"]),
+            "ott_id": None if d.get("ott_id") is None else int(d["ott_id"]),
             "tax_sources": list(d.get("tax_sources") or []),
         }
     td = d.get("tip_descendants")

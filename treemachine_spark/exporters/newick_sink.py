@@ -112,34 +112,30 @@ def assemble_newick(
     return "".join(out) + ";"
 
 
-# anchor-depth bounds: a fragment is one applyInPandas group, so its size
-# is executor-memory-bound; the top stitch levels are collected, so their
-# cumulative width is driver-bound
+# anchor-depth bounds, read at call time: a fragment is one applyInPandas
+# group, so its size is executor-memory-bound; the top stitch levels are
+# collected, so their cumulative width is driver-bound
 FRAGMENT_TARGET = 100_000
 TOP_MAX = 200_000
 
 
-def pick_anchor_depth(
-    rd,
-    member,
-    paths,
-    frag_target: int = FRAGMENT_TARGET,
-    top_max: int = TOP_MAX,
-):
+def pick_anchor_depth(rd, member, paths):
     """Fanout-aware anchor depth for :func:`anchored_fragments`: instead of
     a fixed depth (right for the production tree's ~10-fanout, wrong for
     skewed stores), read the subtree's actual shape — per-level width and
     the LARGEST single fragment an anchor at that level would own — and
-    take the shallowest level whose max fragment fits ``frag_target``,
-    never letting the collected top levels exceed ``top_max`` rows. One
+    take the shallowest level whose max fragment fits ``FRAGMENT_TARGET``,
+    never letting the collected top levels exceed ``TOP_MAX`` rows. One
     subtree-scale aggregation (descendant counts over the request's
     closure) + a depth-profile collect of O(tree height) rows.
 
     On a balanced fanout-f tree this returns the smallest d with
-    n/f^d <= frag_target (depth 2 for the 2.42M-tip production shape); on
-    a caterpillar every level has one giant fragment, so it returns the
-    deepest level the driver stitch can afford — the best decomposition
-    that exists for that shape.
+    n/f^d <= FRAGMENT_TARGET (depth 2 for the 2.42M-tip production
+    shape); on a caterpillar every level has one giant fragment, so it
+    returns the deepest level the driver stitch can afford — the best
+    decomposition that exists for that shape. Max fragment size strictly
+    shrinks with depth, so ``FRAGMENT_TARGET = 0`` with ``TOP_MAX`` set to
+    the node count of levels 1..d forces depth d (the tests' lever).
     """
     desc = (
         paths.join(
@@ -165,23 +161,21 @@ def pick_anchor_depth(
     best = None  # (max_frag, depth)
     for r in stats:
         cum += r["width"]
-        if cum > top_max:
+        if cum > TOP_MAX:
             break
         if best is None or r["max_frag"] < best[0]:
             best = (r["max_frag"], r["depth"])
-        if r["max_frag"] <= frag_target:
+        if r["max_frag"] <= FRAGMENT_TARGET:
             return r["depth"]
     return best[1] if best else 1
 
 
-def anchored_fragments(
-    edges, paths, root_id: str, assemble, node_cols=None, anchor_depth: int | str = "auto"
-):
+def anchored_fragments(edges, paths, root_id: str, assemble, node_cols=None):
     """The fragment tier shared by every subtree format: the subtree below
     ``root_id`` (its ``edges`` rows: child_id, parent_id, child_index and
-    whatever else ``assemble`` reads) is cut at ``anchor_depth`` (picked by
-    :func:`pick_anchor_depth` when "auto"). Each anchor owns itself and its
-    closure descendants; their edge rows, left-joined with the per-node
+    whatever else ``assemble`` reads) is cut at the anchor depth
+    :func:`pick_anchor_depth` reads off its shape. Each anchor owns itself
+    and its closure descendants; their edge rows, left-joined with the per-node
     ``node_cols`` (node_id plus assembler columns) and tagged ``anchor``,
     go through ONE grouped ``applyInPandas(assemble)`` keyed by anchor,
     which returns (anchor, frag) per anchor. The anchor's own row carries its
@@ -199,8 +193,7 @@ def anchored_fragments(
         .select("node_id", "depth")
         .join(member, "node_id", "left_semi")
     ).localCheckpoint(eager=True)
-    if anchor_depth == "auto":
-        anchor_depth = pick_anchor_depth(rd, member, paths)
+    anchor_depth = pick_anchor_depth(rd, member, paths)
     anchors = rd.where(F.col("depth") == anchor_depth).select(
         F.col("node_id").alias("anchor")
     )
@@ -228,7 +221,6 @@ def distributed_newick(
     paths,
     root_id: str,
     labels=None,
-    anchor_depth: int | str = "auto",
     include_branch_lengths: bool = False,
 ) -> str:
     """Newick through :func:`anchored_fragments`: each anchor's fragment
@@ -258,7 +250,7 @@ def distributed_newick(
         frag = assemble_newick(rows, anchor, labs, include_branch_lengths)[:-1]
         return pd.DataFrame({"anchor": [anchor], "frag": [frag]})
 
-    frags, top_rows = anchored_fragments(e, paths, root_id, asm, labels, anchor_depth)
+    frags, top_rows = anchored_fragments(e, paths, root_id, asm, labels)
     top_labels = {}
     if labels is not None:
         top_ids = [r["child_id"] for r in top_rows] + [root_id]

@@ -186,18 +186,6 @@ def minhash_index_udf(k: int = 3):
     )
 
 
-def minhash_signature(text: Column, k: int = 3) -> list[Column]:
-    """One min over the shingle-hash array per fixed affine permutation —
-    standard (a*h + b) mod p minwise hashing. Array-expression form (each
-    permutation re-evaluates the md5 array); prefer ``minhash_signatures``
-    for whole-table signatures."""
-    hs = shingle_hashes(text, k)
-    return [
-        F.array_min(F.transform(hs, lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE31))
-        for a, b in MINHASH_PERMS
-    ]
-
-
 def minhash_sig_array(text: Column, k: int = 3) -> Column:
     """8-element minhash signature in ONE ``aggregate()`` pass over the
     shingle-hash array: each element's md5 is computed once and feeds all 8
@@ -1191,12 +1179,16 @@ def ngram_jaccard_lookup(
     )
 
 
+# Pair-graph size up to which connected_components clusters on the driver
+# (union-find over one LIMIT-bounded collect) instead of the star loop.
+DRIVER_MAX_PAIRS = 500_000
+
+
 def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_rounds: int = 64,
-    driver_max_pairs: int = 500_000,
 ) -> DataFrame:
     """Duplicate-cluster assignment: connected components over the near-dup
     pair graph, component id = min member id. Returns (node_id, component).
@@ -1210,7 +1202,7 @@ def connected_components(
     needs 10k. Each half-round is one groupBy shuffle keyed by node id plus
     a map-side least(); localCheckpoint keeps lineage flat.
 
-    r14 (guide §1.2 step 1): below ``driver_max_pairs`` the pair graph is
+    r14 (guide §1.2 step 1): below ``DRIVER_MAX_PAIRS`` the pair graph is
     REQUEST-scale (the bench corpus yields 921 pairs) and every star round
     still paid 3 jobs x 32 shuffle tasks of pure scheduling — 2.3 s to
     cluster 921 edges. The driver tier collects the pairs via ONE
@@ -1218,14 +1210,14 @@ def connected_components(
     comes back full the distributed loop runs unchanged) and runs
     union-find with min-root tracking — the same component ids by
     construction (test_connected_components_driver_tier_matches pins both
-    tiers on chain + random graphs). Pair-scale >> driver_max_pairs is
-    exactly the regime the star loop exists for; set
-    ``driver_max_pairs=0`` to force it.
+    tiers on chain + random graphs). Pair-scale >> DRIVER_MAX_PAIRS is
+    exactly the regime the star loop exists for; patching the constant to
+    0 forces it.
     """
     slim = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    if driver_max_pairs:
-        probe = slim.limit(driver_max_pairs + 1).collect()
-        if len(probe) <= driver_max_pairs:
+    if DRIVER_MAX_PAIRS:
+        probe = slim.limit(DRIVER_MAX_PAIRS + 1).collect()
+        if len(probe) <= DRIVER_MAX_PAIRS:
             parent: dict = {}
 
             def find(x):

@@ -404,13 +404,6 @@ def extract_features(media: DataFrame, fake_decoder: bool = True) -> DataFrame:
     return media.mapInPandas(batches, FEATURE_SCHEMA)
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: metadata updated executor-side, content passed
-    through (for payloads whose codec isn't natively decodable; the real
-    pixel path is :func:`resize_images`)."""
-    return media.withColumn("width", F.lit(width)).withColumn("height", F.lit(height))
-
-
 def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     """REAL resize over mapInPandas: decode (PNG/PPM, native codecs above),
     nearest-neighbor resample with one numpy gather, re-encode as P6 PPM,

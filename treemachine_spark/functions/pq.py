@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from treemachine_spark.functions.similarity import int_dot, quantize
+from treemachine_spark.io.tables import row_count
 
 
 def _subspace_bounds(dim: int, m: int) -> list[tuple[int, int]]:
@@ -317,7 +318,6 @@ def ivf_pq_topk(
     vec_col: str = "embedding",
     cells=None,
     where=None,
-    dot_impl: str = "auto",
 ) -> DataFrame:
     """IVF-PQ (IVFADC) top-k: coarse cells exactly like ``ivf_topk``
     (deterministic smallest-id centroids, broadcast argmax assignment,
@@ -472,23 +472,21 @@ def ivf_pq_topk(
     # broadcast so the exact re-rank never shuffles the corpus vectors
     # (Spark's size estimate sees the corpus-joined lineage, not the limit)
     # re-rank pool size is KNOWN statically per query (rerank_factor*k):
-    # the auto estimate needs only |queries| — request-scale count
+    # the tier pick needs only |queries| (request-scale)
     from treemachine_spark.functions.similarity import candidate_dot
 
-    if dot_impl == "auto":
-        par = max(queries.sparkSession.sparkContext.defaultParallelism, 1)
-        est = queries.count() * rerank_factor * k / par
-    else:
-        est = 0.0
+    n_candidates = row_count(queries) * rerank_factor * k
     exact = cell_assign.select("neighbor_id", "cv").join(
         F.broadcast(short), "neighbor_id"
     ).select(
         # candidate dot auto-tiered (r15): the pool is request-scale
         # (rerank_factor*k per query) and the r14 pair_dot_udf A/B showed
         # Python task roundtrips beat the fold only past ~10^4 rows/task —
-        # candidate_dot probes and picks (similarity.ivf_topk's note)
+        # candidate_dot picks by size (similarity.ivf_topk's note)
         "query_id", "neighbor_id",
-        candidate_dot(F.col("qv"), F.col("cv"), est, dot_impl).alias("score"),
+        candidate_dot(
+            F.col("qv"), F.col("cv"), n_candidates, queries.sparkSession
+        ).alias("score"),
     )
     return (
         exact.withColumn("rank", F.row_number().over(w))

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from treemachine_spark.functions.hashing import h32
+from treemachine_spark.io.tables import row_count
 
 
 def _where_col(where) -> Column:
@@ -234,20 +235,17 @@ def pair_dot_udf():
 ARROW_DOT_MIN_ROWS_PER_TASK = 10_000
 
 
-def candidate_dot(
-    a: Column, b: Column, est_rows_per_task: float, impl: str = "auto"
-) -> Column:
-    """The r15 auto-tier for candidate-scale dot products (VERDICT r14 #4,
-    the tfidf ``skew_safe="auto"`` pattern): pick :func:`int_dot` (codegen
-    fold) vs :func:`pair_dot_udf` (Arrow einsum) from a cheap size
-    estimate. Both tiers are bit-identical (integer-valued float64 < 2^53,
-    summation-order-independent — the brute_force_topk argument), so the
-    pick is purely a cost decision and safe to automate."""
-    if impl not in ("auto", "fold", "arrow"):
-        raise ValueError(f"candidate_dot: unknown impl {impl!r}")
-    if impl == "arrow" or (
-        impl == "auto" and est_rows_per_task >= ARROW_DOT_MIN_ROWS_PER_TASK
-    ):
+def candidate_dot(a: Column, b: Column, n_candidates: float, spark) -> Column:
+    """The auto-tier for candidate-scale dot products: :func:`int_dot`
+    (codegen fold) below ``ARROW_DOT_MIN_ROWS_PER_TASK`` expected candidate
+    rows per task (``n_candidates`` / defaultParallelism), the Arrow
+    einsum (:func:`pair_dot_udf`) at or above it. Both tiers are
+    bit-identical (integer-valued float64 < 2^53, summation-order-
+    independent — the brute_force_topk argument), so the pick is purely a
+    cost decision. The constant is read at call time, so a test or bench
+    forces a side by patching it (0 -> Arrow, inf -> fold)."""
+    par = max(spark.sparkContext.defaultParallelism, 1)
+    if n_candidates / par >= ARROW_DOT_MIN_ROWS_PER_TASK:
         return pair_dot_udf()(a, b)
     return int_dot(a, b)
 
@@ -262,8 +260,10 @@ def _estep_udf(cents):
     interpreted HOF's. Argmin ties break to the first (lowest cent_id)
     index exactly like ``array_position(dists, array_min(dists))``; NaN
     distances rank last (Spark orders NaN greatest); NULL / wrong-length
-    vectors yield NULL cent_id and NULL distance (the fold's
-    NULL-propagation through zip_with padding)."""
+    vectors and vectors with a NULL element yield NULL cent_id and NULL
+    distance (the fold's NULL-propagation through zip_with padding and
+    the sum). Arrow hands a NULL element over as NaN, so the second
+    argument carries the engine-side "has a NULL element" flag."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import PandasUDFType, pandas_udf
@@ -271,12 +271,17 @@ def _estep_udf(cents):
     C = np.asarray(cents, dtype=np.float64)
     k, dim = C.shape
 
-    def _f(vs: pd.Series) -> pd.DataFrame:
+    def _f(vs: pd.Series, null_elem: pd.Series) -> pd.DataFrame:
         n = len(vs)
         cent = np.full(n, None, dtype=object)
         dist = np.full(n, None, dtype=object)
         has = np.fromiter(
-            (v is not None and len(v) == dim for v in vs), bool, count=n
+            (
+                v is not None and len(v) == dim and not has_null
+                for v, has_null in zip(vs, null_elem)
+            ),
+            bool,
+            count=n,
         )
         if has.any():
             V = np.vstack(
@@ -298,16 +303,6 @@ def _estep_udf(cents):
         return pd.DataFrame({"cent_id": cent, "d": dist})
 
     return pandas_udf(_f, "cent_id int, d double", PandasUDFType.SCALAR)
-
-
-def pick_dot_impl(n_candidates: float, spark) -> str:
-    """Driver-side tier pick when candidate volume is already known — the
-    serving path (api/ann.AnnIndex knows |corpus| from its boot count and
-    |queries| from the request batch), so no per-request probe job runs."""
-    par = max(spark.sparkContext.defaultParallelism, 1)
-    return (
-        "arrow" if n_candidates / par >= ARROW_DOT_MIN_ROWS_PER_TASK else "fold"
-    )
 
 
 def _argmax_assign(
@@ -772,19 +767,17 @@ def ivf_topk(
     vec_col: str = "embedding",
     cells: tuple[DataFrame, DataFrame] | None = None,
     where: Column | str | None = None,
-    dot_impl: str = "auto",
 ) -> DataFrame:
     """IVF-style ANN: vectors are assigned to their max-dot centroid cell;
     each query exhaustively re-ranks only its n_probe best cells.
 
-    ``dot_impl`` ("auto"|"fold"|"arrow") tiers the candidate dot product
-    (:func:`candidate_dot`): "auto" estimates candidate rows per task as
-    |corpus| x |queries| x n_probe / n_centroids / defaultParallelism
-    from two metadata-cheap counts and crosses to the Arrow einsum only
-    past the measured ~10^4 rows/task break-even; both tiers are
-    bit-identical. The where-filter is deliberately NOT applied to the
-    estimate (an upper bound — near the crossover both tiers are within
-    noise, so overshooting is safe).
+    The candidate dot product is tiered by :func:`candidate_dot` on
+    |corpus| x |queries| x n_probe / n_centroids candidate rows, both
+    sizes read through ``io.tables.row_count`` (no job for a materialized
+    cached corpus or a local-relation query frame — the serving shape).
+    The where-filter is deliberately NOT applied to the estimate (an
+    upper bound — near the crossover both tiers are within noise, so
+    overshooting is safe).
 
     Centroids are the vectors with the n_centroids smallest ids —
     deterministic and engine-independent (a production build would run
@@ -816,18 +809,11 @@ def ivf_topk(
         cent, assigned = ivf_cells(embeddings, n_centroids, id_col, vec_col, meta)
     if where is not None:
         assigned = assigned.where(_where_col(where))
-    if dot_impl == "auto":
-        # the probe counts the RAW inputs (embeddings is parquet/cached —
-        # metadata-cheap; queries is request-scale), never `assigned`
-        # (counting an on-the-fly cell build would execute the whole
-        # assignment twice)
-        par = max(embeddings.sparkSession.sparkContext.defaultParallelism, 1)
-        est = (
-            embeddings.count() * queries.count() * n_probe
-            / max(n_centroids, 1) / par
-        )
-    else:
-        est = 0.0
+    # the sizes are those of the RAW inputs, never `assigned` (counting an
+    # on-the-fly cell build would execute the whole assignment twice)
+    n_candidates = (
+        row_count(embeddings) * row_count(queries) * n_probe / max(n_centroids, 1)
+    )
     q = queries.select(
         F.col(id_col).alias("query_id"), quantize(F.col(vec_col)).alias("qv")
     )
@@ -850,10 +836,10 @@ def ivf_topk(
             # scale — the probed cell scan leaves ~32 near-empty tasks
             # locally and the Python task roundtrips cost more than the
             # fold (1.04 -> 1.66 s at sf1); past ~10^4 candidate rows per
-            # task the Arrow einsum wins, so candidate_dot probes and picks
+            # task the Arrow einsum wins, so candidate_dot picks by size
             "query_id", "neighbor_id",
             candidate_dot(
-                F.col("qv"), F.col("cv"), est, dot_impl
+                F.col("qv"), F.col("cv"), n_candidates, embeddings.sparkSession
             ).alias("score"),
         )
     )
@@ -903,16 +889,13 @@ def lsh_topk(
     n_planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dot_impl: str = "auto",
 ) -> DataFrame:
     """ANN: candidates share the sign-bit bucket, then exact re-rank within
     the bucket. Trades recall for a candidate set ~n/2^planes per query.
 
-    ``dot_impl`` ("auto"|"fold"|"arrow") tiers the candidate dot
-    (:func:`candidate_dot`): "auto" estimates candidate rows per task as
-    |corpus| x |queries| / 2^n_planes / defaultParallelism (the expected
-    bucket-collision volume) and crosses to the Arrow einsum only past
-    the measured ~10^4 rows/task break-even; tiers are bit-identical.
+    The candidate dot is tiered by :func:`candidate_dot` on the expected
+    bucket-collision volume |corpus| x |queries| / 2^n_planes, both sizes
+    read through ``io.tables.row_count``.
 
     The bucket is computed with the same precomputed-plane-matrix Arrow path
     as v6 (``band_keys_udf`` with a single band covering all planes): one
@@ -932,11 +915,7 @@ def lsh_topk(
         quantize(F.col(vec_col)).alias("qv"),
         F.element_at(bucket_udf(F.col(vec_col)), 1).alias("bucket"),
     )
-    if dot_impl == "auto":
-        par = max(embeddings.sparkSession.sparkContext.defaultParallelism, 1)
-        est = embeddings.count() * queries.count() / float(2 ** n_planes) / par
-    else:
-        est = 0.0
+    n_candidates = row_count(embeddings) * row_count(queries) / float(2 ** n_planes)
     scored = (
         emb.join(F.broadcast(q), "bucket")
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -945,10 +924,10 @@ def lsh_topk(
             # measured SLOWER at gate scale at sf0.1 AND sf1 (2.0 -> 3.0 s
             # at sf1) — bucket joins leave near-empty tasks locally and the
             # Python roundtrips dominate below ~10^4 candidate rows/task;
-            # candidate_dot probes and picks (see ivf_topk's matching note)
+            # candidate_dot picks by size (see ivf_topk's matching note)
             "query_id", "neighbor_id",
             candidate_dot(
-                F.col("qv"), F.col("cv"), est, dot_impl
+                F.col("qv"), F.col("cv"), n_candidates, embeddings.sparkSession
             ).alias("score"),
         )
     )
@@ -1046,25 +1025,6 @@ def semantic_dedup_pairs(
     )
 
 
-def semantic_purge_list(
-    embeddings: DataFrame,
-    threshold: float = 0.4,
-    n_centroids: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """SemDeDup keep-one policy over ``semantic_dedup_pairs``: within each
-    cell, drop every vector that has a near-duplicate with a smaller id
-    (the paper keeps one representative per duplicate neighborhood; min-id
-    is the deterministic choice). One distinct over the pair table — the
-    pair graph is already cell-local, so no cross-cell reconciliation.
-    Returns (purge_vec_id, cent_id)."""
-    pairs = semantic_dedup_pairs(embeddings, threshold, n_centroids, id_col, vec_col)
-    return pairs.select(
-        F.col("id_b").alias("purge_vec_id"), "cent_id"
-    ).distinct()
-
-
 def kmeans_fit(
     embeddings: DataFrame,
     k: int = 8,
@@ -1072,7 +1032,6 @@ def kmeans_fit(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     compute_inertia: bool = False,
-    estep_impl: str = "auto",
 ):
     """Distributed Lloyd's k-means — the training loop behind
     ``centroid_assign`` / ``ivf_topk`` (which take the learned centroids as
@@ -1087,15 +1046,16 @@ def kmeans_fit(
       arithmetic with NO join and NO shuffle. ``array_position(dists,
       array_min(dists))`` gives the argmin with first-match (lowest
       cent_id) tie-breaking.
-    - **E-step tiers (r15, VERDICT r14 #8)**: ``estep_impl`` picks the
-      Catalyst HOF fold vs a BIT-EXACT Arrow twin (``_estep_udf``) that
-      preserves IEEE op order — per dimension i it runs the same three
-      double ops ``acc = acc + (x_i - c_i) * (x_i - c_i)`` as one
-      vectorized column step, so every distance, every argmin and hence
-      every training trajectory is identical (parity-tested). "auto"
-      crosses to Arrow past ~``ARROW_DOT_MIN_ROWS_PER_TASK``/k rows per
-      task (the E-step does k·dim interpreted ops per row — k dot
-      products' worth, so the dot crossover divides by k).
+    - **E-step tiers (r15, VERDICT r14 #8)**: the Catalyst HOF fold or a
+      BIT-EXACT Arrow twin (``_estep_udf``) that preserves IEEE op order
+      — per dimension i it runs the same three double ops
+      ``acc = acc + (x_i - c_i) * (x_i - c_i)`` as one vectorized column
+      step, so every distance, every argmin and hence every training
+      trajectory is identical (parity-tested). The loop crosses to Arrow
+      past ~``ARROW_DOT_MIN_ROWS_PER_TASK``/k rows per task (the E-step
+      does k·dim interpreted ops per row — k dot products' worth, so the
+      dot crossover divides by k), the row count read through
+      ``io.tables.row_count``.
     - **M-step is one partial-aggregating shuffle of k·dim rows**:
       posexplode the assigned vectors, groupBy (cent, pos) sum/count —
       combiners do the heavy lifting map-side; only k·dim rows cross the
@@ -1130,25 +1090,21 @@ def kmeans_fit(
             lambda acc, v: acc + v,
         )
 
-    if estep_impl not in ("auto", "arrow", "catalyst"):
-        raise ValueError(f"kmeans_fit: unknown estep_impl {estep_impl!r}")
-    if estep_impl == "auto":
-        # the E-step does k dot-products' worth of interpreted work per
-        # row, so the measured dot crossover divides by k; one
-        # metadata-cheap count prices the whole multi-iteration loop
-        par = max(spark.sparkContext.defaultParallelism, 1)
-        use_arrow = (
-            emb.count() / par >= ARROW_DOT_MIN_ROWS_PER_TASK / max(k, 1)
-        )
-    else:
-        use_arrow = estep_impl == "arrow"
+    # the E-step does k dot-products' worth of interpreted work per row,
+    # so the measured dot crossover divides by k; one row count of the raw
+    # input prices the whole multi-iteration loop
+    par = max(spark.sparkContext.defaultParallelism, 1)
+    use_arrow = (
+        row_count(embeddings) / par >= ARROW_DOT_MIN_ROWS_PER_TASK / max(k, 1)
+    )
 
     def _estep(current, with_dist: bool):
         """(id, _v, cent_id[, _d]) against ``current`` centroids — the
         Catalyst fold or its bit-exact Arrow twin (``_estep_udf``)."""
         if use_arrow:
+            null_elem = F.exists("_v", lambda x: x.isNull())
             e = emb.select(
-                id_col, "_v", _estep_udf(current)(F.col("_v")).alias("_e")
+                id_col, "_v", _estep_udf(current)(F.col("_v"), null_elem).alias("_e")
             )
             return e.select(
                 id_col,
@@ -1232,6 +1188,9 @@ def hard_negatives(
     brute_force_topk (the old F.broadcast also materialized it
     driver-side). At corpus scale swap the candidate generator for
     ivf_topk/lsh_topk cells and keep the same label filter in the re-rank.
+
+    A query whose embedding is NULL returns no rows (it has no score to
+    rank by); corpus rows with a NULL embedding are never candidates.
 
     Returns (query_id, neighbor_id, neighbor_label, score, rank).
     """

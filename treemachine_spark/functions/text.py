@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from treemachine_spark.functions.hashing import MERSENNE31, h32
+from treemachine_spark.io.tables import row_count
 
 # tiny stopword lists for the n-gram/stopword language heuristic; shared
 # verbatim with the DuckDB oracles
@@ -455,11 +456,11 @@ def _toks_tf(docs: DataFrame, text_col: str, id_col: str):
 def tfidf_auto_plan(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> str:
-    """Report which df plan ``tfidf_topk(skew_safe="auto")`` would pick
-    for this corpus ("skew_safe" or "window") — the observability half of
-    the auto default (bench_skew records it next to the measured walls).
-    Same short-circuit + probe as the operator, read-only."""
-    if docs.count() <= SKEW_DF_FLOOR:
+    """Report which df plan ``tfidf_topk`` would pick for this corpus
+    ("skew_safe" or "window") — the observability half of the automatic
+    pick (bench_skew records it next to the measured walls). Same
+    short-circuit + probe as the operator, read-only."""
+    if row_count(docs) <= SKEW_DF_FLOOR:
         return "window"
     _, tf = _toks_tf(docs, text_col, id_col)
     return "skew_safe" if _pick_tfidf_plan(tf) else "window"
@@ -470,7 +471,6 @@ def tfidf_topk(
     k: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    skew_safe: bool | str = "auto",
 ) -> DataFrame:
     """Top-k TF-IDF terms per document.
 
@@ -489,12 +489,16 @@ def tfidf_topk(
     scoring at all (beyond-reference training-pipeline surface).
 
     Document frequency has two plans (identical values, r10 / r9 verdict
-    #4); ``skew_safe="auto"`` (the default since r14, VERDICT r13 #6)
-    materializes tf once and lets :func:`_pick_tfidf_plan`'s one linear
-    agg choose — the caller no longer has to know the corpus's skew
-    profile, and both bench_skew corpora get their measured-faster plan:
+    #4), picked automatically (r14, VERDICT r13 #6): a corpus of at most
+    ``SKEW_DF_FLOOR`` documents (``io.tables.row_count``) takes the
+    window plan; a larger one materializes tf once and lets
+    :func:`_pick_tfidf_plan`'s one linear agg choose — the caller never
+    has to know the corpus's skew profile, and both bench_skew corpora
+    get their measured-faster plan. Tests and benches force the
+    skew-safe side by patching ``SKEW_DF_FLOOR`` to -1 with enough
+    shuffle partitions that the hot term exceeds 4x the fair share:
 
-    - ``skew_safe=False`` (the small-corpus shape): df as a window
+    - window (the small-corpus shape): df as a window
       count over the already-aggregated tf table — one corpus scan total
       (the r7 "3 scans -> 1" fix). The window shuffle partitions ALL tf
       rows by term, so a web-scale hot term ("the"-class) concentrates in
@@ -502,7 +506,7 @@ def tfidf_topk(
       windows) — the classic straggler at 100x. Fastest at gate SFs,
       where no term is big enough to matter (bench_skew measures the
       crossover).
-    - ``skew_safe=True`` (the 100x plan): materialize tf once (at corpus
+    - skew-safe (the 100x plan): materialize tf once (at corpus
       scale this localCheckpoint IS the persisted inverted-index table),
       shrink df map-side via groupBy(term) partial aggregation — the
       shuffle carries vocabulary-scale partials, never a hot term's row
@@ -519,32 +523,21 @@ def tfidf_topk(
     # partitioning, so EnsureRequirements re-adds the exchange anyway and
     # the repartition only upgrades a tf-partial shuffle to a raw-token
     # one. Reverted; the structural win kept is the broadcast df below.)
-    tf_materialized = False
     n = docs.agg(F.count("*").alias("n_docs"))
-    if skew_safe == "auto":
-        # cheap short-circuit first: max_df can never exceed n_docs, so a
-        # corpus under the floor picks the window plan with ZERO probe
-        # cost (docs.count() is a metadata count-star on parquet sources
-        # and free on cached frames) — the gate/bench shapes are
-        # bit-identical to the old default
-        if docs.count() <= SKEW_DF_FLOOR:
-            skew_safe = False
-        else:
-            # materialize tf ONCE — the probe agg and the chosen plan
-            # (either one) read the checkpoint, so auto never re-runs the
-            # explode subtree (the x15/x18 lesson); at corpus scale this
-            # checkpoint is the persisted inverted-index table anyway,
-            # and the probe's one linear agg amortizes against a 10M+
-            # doc corpus's own cost
-            tf = tf.localCheckpoint(eager=True)
-            tf_materialized = True
-            skew_safe = _pick_tfidf_plan(tf)
-    elif skew_safe:
-        # one Arrow-free corpus pass materialized once; deriving dfreq
-        # lazily would duplicate the explode+groupBy subtree (Spark does
-        # not reuse subplans — the x15/x18 lesson)
+    # cheap short-circuit first: max_df can never exceed n_docs, so a
+    # corpus under the floor picks the window plan with ZERO probe cost
+    # (row_count reads a cached or local frame's plan statistics and is a
+    # metadata count-star on parquet sources)
+    tf_materialized = row_count(docs) > SKEW_DF_FLOOR
+    if tf_materialized:
+        # materialize tf ONCE — the probe agg and the chosen plan (either
+        # one) read the checkpoint, so the pick never re-runs the explode
+        # subtree (the x15/x18 lesson; Spark does not reuse subplans); at
+        # corpus scale this checkpoint is the persisted inverted-index
+        # table anyway, and the probe's one linear agg amortizes against
+        # a 10M+ doc corpus's own cost
         tf = tf.localCheckpoint(eager=True)
-    if skew_safe:
+    if tf_materialized and _pick_tfidf_plan(tf):
         # r14 (guide §2.3/§2.4): df is vocabulary-scale after its map-side
         # partial agg — broadcast it back EXPLICITLY instead of letting the
         # planner pick a term-keyed shuffle join, which would (a) re-shuffle
@@ -577,10 +570,10 @@ def tfidf_topk(
         # 0.83 -> 0.69 s median, values bit-identical. The hot-term row
         # concentration is unchanged in magnitude (the old plan's term
         # window exchange already gathered the same rows one stage later)
-        # — this stays the sub-SKEW_DF_FLOOR plan; past the floor auto
-        # picks the skew-safe broadcast-df plan, which never keys any
-        # shuffle by term.
-        # (when auto already materialized tf for the probe, the window
+        # — this stays the sub-SKEW_DF_FLOOR plan; past the floor the pick
+        # can land on the skew-safe broadcast-df plan, which never keys
+        # any shuffle by term.
+        # (when tf was already materialized for the probe, the window
         # runs over that checkpoint instead — re-deriving from toks would
         # re-run the explode subtree, the exact x15/x18 lesson)
         tf_t = (

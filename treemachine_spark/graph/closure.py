@@ -127,16 +127,3 @@ def with_self_paths(paths: DataFrame, nodes: DataFrame) -> DataFrame:
     )
     return paths.unionByName(self_paths)
 
-
-def root_depths(paths: DataFrame, root_id: str = "root") -> DataFrame:
-    """(node_id, root_depth): each node's distance from the root.
-
-    Derived from the closure in one filtered scan; the root itself gets 0.
-    """
-    spark = paths.sparkSession
-    root_row = spark.createDataFrame([(root_id, 0)], "node_id string, root_depth int")
-    return (
-        paths.where(F.col("ancestor_id") == root_id)
-        .select("node_id", F.col("depth").alias("root_depth"))
-        .unionByName(root_row)
-    )

@@ -54,9 +54,11 @@ def path_to_root(paths: DataFrame, node_id: str) -> DataFrame:
 DRIVER_PATH_MAX_TIPS = 5000
 
 
-def _resolve_tips(paths_self: DataFrame, tips, max_driver_tips: int):
+def _resolve_tips(paths_self: DataFrame, tips):
     """Normalize ``tips`` (DataFrame or id list) into either a small id
-    list (driver fast path) or a distinct node_id DataFrame (join path).
+    list (driver fast path, at most ``DRIVER_PATH_MAX_TIPS`` ids — read at
+    call time, so a test forces the join path by patching it to 0) or a
+    distinct node_id DataFrame (join path).
     Returns (ids_or_None, tips_df_or_None) — exactly one is set. Sizing a
     DataFrame input uses a LIMIT-probe collect (one action that doubles as
     the fast path's id fetch), never a separate count().
@@ -70,12 +72,12 @@ def _resolve_tips(paths_self: DataFrame, tips, max_driver_tips: int):
     spark = paths_self.sparkSession
     if isinstance(tips, DataFrame):
         tdf = tips.select("node_id").distinct()
-        probe = tdf.limit(max_driver_tips + 1).collect()
-        if len(probe) <= max_driver_tips:
+        probe = tdf.limit(DRIVER_PATH_MAX_TIPS + 1).collect()
+        if len(probe) <= DRIVER_PATH_MAX_TIPS:
             return [r["node_id"] for r in probe], None
         return None, tdf.localCheckpoint(eager=True)
     ids = list(dict.fromkeys(tips))
-    if len(ids) <= max_driver_tips:
+    if len(ids) <= DRIVER_PATH_MAX_TIPS:
         return ids, None
     # local_df (LocalRelation), not the RDD createDataFrame route — the
     # same measured guidance as every other request-scale frame in this
@@ -87,7 +89,6 @@ def _resolve_tips(paths_self: DataFrame, tips, max_driver_tips: int):
 def mrca(
     paths_self: DataFrame,
     tips: DataFrame,
-    max_driver_tips: int = DRIVER_PATH_MAX_TIPS,
     paths: DataFrame | None = None,
     root_id: str | None = None,
 ) -> DataFrame:
@@ -106,7 +107,7 @@ def mrca(
     its subplan is evaluated ONCE and re-literalized) or a plain list of
     node ids, as an HTTP request would supply.
 
-    SIZE-GATED: requests up to ``max_driver_tips`` take the measured-3x-
+    SIZE-GATED: requests up to ``DRIVER_PATH_MAX_TIPS`` take the measured-3x-
     faster driver-side path below; anything larger routes to the pure
     join+agg recipe (``_mrca_joined``) whose plan is bounded by DATA, not
     by the request — no literal IN-list, no driver-side dict. Both paths
@@ -122,7 +123,7 @@ def mrca(
     (~30% of the serve floor, profiled r4) disappears with identical
     semantics, including empty-result behavior for unknown ids.
     """
-    tip_ids, tips_df = _resolve_tips(paths_self, tips, max_driver_tips)
+    tip_ids, tips_df = _resolve_tips(paths_self, tips)
     if tips_df is not None:
         return _mrca_joined(paths_self, tips_df)
     n_tips = len(tip_ids)
@@ -296,7 +297,6 @@ def tip_counts(
 def induced_subtree(
     paths_self: DataFrame,
     tips: DataFrame,
-    max_driver_tips: int = DRIVER_PATH_MAX_TIPS,
 ) -> DataFrame:
     """T6 — induced subtree of a tip set: the tips plus every ancestor that
     is the MRCA of >= 2 tips, re-wired so each kept node's parent is its
@@ -328,9 +328,9 @@ def induced_subtree(
     # depths along one chain are strictly increasing, so the min is
     # unambiguous. ``tips`` may also be a plain id list, as an HTTP
     # request would supply. SIZE-GATED like mrca(): above
-    # ``max_driver_tips`` the request routes to the pure join+window
+    # ``DRIVER_PATH_MAX_TIPS`` the request routes to the pure join+window
     # recipe (_induced_subtree_joined) — bounded by data, not the request.
-    tip_ids, tips_df = _resolve_tips(paths_self, tips, max_driver_tips)
+    tip_ids, tips_df = _resolve_tips(paths_self, tips)
     if tips_df is not None:
         return _induced_subtree_joined(paths_self, tips_df)
     spark = paths_self.sparkSession

@@ -52,6 +52,22 @@ def rebuild_ts_cols(df: DataFrame) -> DataFrame:
     return df
 
 
+def row_count(df: DataFrame) -> int:
+    """Rows in ``df`` for a size-gated tier pick. A fully materialized
+    cache or a local relation already carries its exact row count in the
+    optimized plan's statistics, read here without a Spark job; any other
+    input is counted. The plan is a fresh ``select("*")`` because a
+    Dataset memoizes its optimized plan, whose statistics predate a later
+    cache fill; only those two plan roots are trusted (a limit's count is
+    an upper bound, scans and derived frames carry none)."""
+    plan = df.select("*")._jdf.queryExecution().optimizedPlan()
+    if plan.nodeName() in ("InMemoryRelation", "LocalRelation"):
+        rows = plan.stats().rowCount()
+        if rows.isDefined():
+            return int(str(rows.get()))
+    return df.count()
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every synthetic table under ``sf_dir`` as a DataFrame.
 
