@@ -1,0 +1,343 @@
+"""graph.topology.TreeIndex: Spark-free checks of every walk and range count
+against a brute-force parent map on seeded random trees, then the served
+answers that read it — the reference's induced topology on the probe tree
+``((((A,B)X,C)Y,D)Z,E)R;`` through v3, v2 and ServerCore, agreement with
+the closure recipes, and the Spark-job budget of a light request."""
+
+from __future__ import annotations
+
+import random
+
+import pytest
+
+from treemachine_spark.graph.topology import TreeIndex
+
+# -- Spark-free: random trees against a brute-force parent map ---------------
+
+
+def random_tree(rng: random.Random, n: int, hubs: int) -> dict[int, int]:
+    """child -> parent over nodes 0..n-1 (0 is the root). Each node hangs
+    from one of the first ``hubs`` nodes half the time, so small ``hubs``
+    give wide polytomies."""
+    return {
+        i: rng.randrange(0, min(i, hubs)) if rng.random() < 0.5 else rng.randrange(0, i)
+        for i in range(1, n)
+    }
+
+
+def caterpillar(n_tips: int) -> dict[int, int]:
+    """Spine 0-1-2-... with one tip hanging from each spine node."""
+    parent, spine = {}, 0
+    for k in range(1, n_tips):
+        tip, nxt = 2 * k - 1, 2 * k
+        parent[tip] = spine
+        parent[nxt] = spine
+        spine = nxt
+    return parent
+
+
+def label(i: int) -> str:
+    # mixed lengths and a multi-byte character exercise the byte-key map
+    return ("ñ" if i % 7 == 3 else "n") + str(i * 37 % 1009) + "x" * (i % 3) + f".{i}"
+
+
+class Brute:
+    """Plain parent-map answers to every index question."""
+
+    def __init__(self, parent: dict[int, int], n: int):
+        self.parent, self.n = parent, n
+        self.kids: dict[int, list[int]] = {}
+        for c, p in parent.items():
+            self.kids.setdefault(p, []).append(c)
+
+    def ancestors(self, v):
+        out = []
+        while v in self.parent:
+            v = self.parent[v]
+            out.append(v)
+        return out
+
+    def below(self, v) -> set:
+        out, todo = set(), [v]
+        while todo:
+            x = todo.pop()
+            out.add(x)
+            todo.extend(self.kids.get(x, ()))
+        return out
+
+    def dist(self, v, a) -> int:
+        return ([v] + self.ancestors(v)).index(a)
+
+    def lca(self, nodes):
+        common = set.intersection(*({v, *self.ancestors(v)} for v in nodes))
+        return max(common, key=lambda a: len(self.ancestors(a)))
+
+    def induced(self, tips):
+        """(root, {(child, parent)}): the tips plus every node whose tips
+        fall under two or more of its children, each hung from its
+        nearest kept ancestor."""
+        tips = set(tips)
+        kept = set(tips) | {
+            a for a in range(self.n)
+            if sum(bool(self.below(c) & tips) for c in self.kids.get(a, ())) >= 2
+        }
+        edges = set()
+        for v in kept:
+            up = [a for a in self.ancestors(v) if a in kept]
+            if up:
+                edges.add((v, up[0]))
+        (root,) = kept - {c for c, _ in edges}
+        return root, edges
+
+
+def index_of(parent: dict[int, int], n: int, named: set, rng: random.Random):
+    """The TreeIndex of a parent map, rows handed over in a shuffled order."""
+    rows = list(range(n))
+    rng.shuffle(rows)
+    kids = [c for c in rows if c in parent]
+    tips = {v: len([x for x in Brute(parent, n).below(v) if x not in parent.values()]) for v in kids}
+    return TreeIndex(
+        [label(v) for v in rows],
+        [1000 + v if v % 4 else None for v in rows],
+        [v in named for v in rows],
+        [label(c) for c in kids],
+        [label(parent[c]) for c in kids],
+        [tips[c] for c in kids],
+    )
+
+
+TREES = [
+    ("random", lambda rng: (random_tree(rng, 120, 120), 120)),
+    ("polytomies", lambda rng: (random_tree(rng, 150, 4), 150)),
+    ("caterpillar", lambda rng: (caterpillar(40), 79)),
+    ("one_node", lambda rng: ({}, 1)),
+]
+
+
+@pytest.mark.parametrize("shape", [t[0] for t in TREES])
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_index_matches_brute_force(shape, seed):
+    rng = random.Random(seed)
+    parent, n = dict(TREES)[shape](rng)
+    named = {v for v in range(n) if rng.random() < 0.4}
+    ix = index_of(parent, n, named, rng)
+    bf = Brute(parent, n)
+    node = dict(zip(range(n), ix.lookup([label(v) for v in range(n)]).tolist()))
+    back = {w: v for v, w in node.items()}
+    assert sorted(node.values()) == list(range(n)) and node[0] == 0
+
+    for v in range(n):
+        w = node[v]
+        assert [back[a] for a in ix.lineage(w)] == bf.ancestors(v)
+        assert ix.ids([w]) == [label(v)]
+        nn = next((a for a in bf.ancestors(v) if a in named), None)
+        got = ix.nearest_named(w)
+        assert (None if got is None else back[got]) == nn
+        below = bf.below(v)
+        for limit in (-1, 0, 1, 2, 5):
+            within = [u for u in below if limit < 0 or bf.dist(u, v) <= limit]
+            assert ix.subtree_size(w, limit) == len(within)
+            if limit >= 0:
+                cut = [
+                    u for u in within
+                    if u != v and (bf.dist(u, v) == limit or u not in bf.kids)
+                ]
+                assert ix.leaves_within(w, limit) == len(cut)
+        if v:
+            assert ix.num_tips(w) == len([u for u in below if u not in bf.kids])
+    assert ix.nearest_named(0) is None and ix.num_tips(0) is None
+
+    for _ in range(25):
+        k = rng.randint(1, min(n, 8))
+        nodes = rng.sample(range(n), k)
+        if rng.random() < 0.3 and bf.ancestors(nodes[0]):
+            nodes.append(rng.choice(bf.ancestors(nodes[0])))  # an ancestor of another
+        assert back[ix.lca([node[v] for v in nodes])] == bf.lca(nodes)
+        root, edges = ix.virtual_tree([node[v] for v in nodes])
+        want_root, want_edges = bf.induced(nodes)
+        assert back[root] == want_root
+        assert {(back[c], back[p]) for c, p in edges} == want_edges
+
+
+def test_index_id_maps():
+    ix = TreeIndex(
+        ["r", "a", "bb", "ccc"], [7, None, 5, 5], [True, False, True, True],
+        ["a", "bb", "ccc"], ["r", "r", "a"], [2, 1, 1],
+    )
+    r, a, bb, ccc = ix.lookup(["r", "a", "bb", "ccc"]).tolist()
+    assert ix.lookup(["cccc", "", "b", 5, None, "ccc"]).tolist() == [-1, -1, -1, -1, -1, ccc]
+    # an ott id shared by two nodes resolves to one of them, every time
+    assert ix.lookup_ott([7, 5, 6, 5]).tolist() == [r, bb, -1, bb]
+    assert ix.ids([ccc, r]) == ["ccc", "r"]
+    assert ix.lookup([]).tolist() == [] and ix.lookup_ott([]).tolist() == []
+
+
+@pytest.mark.parametrize(
+    "nodes, children, parents, why",
+    [
+        (["r", "s"], [], [], "exactly one parent"),
+        (["r", "a", "b"], ["a", "b"], ["b", "a"], "cycle"),
+        (["r", "a"], ["a"], ["q"], "not in the node table"),
+        (["r", "a", "a"], ["a"], ["r"], "unique"),
+        (["r", "a", "b"], ["a", "a"], ["r", "b"], "exactly one parent"),
+    ],
+)
+def test_index_rejects_what_is_not_a_tree(nodes, children, parents, why):
+    with pytest.raises(ValueError, match=why):
+        TreeIndex(nodes, [None] * len(nodes), [False] * len(nodes), children, parents,
+                  [1] * len(children))
+
+
+# -- served answers ------------------------------------------------------------
+
+PROBE = {"A": "X", "B": "X", "X": "Y", "C": "Y", "Y": "Z", "D": "Z", "Z": "R", "E": "R"}
+
+
+def store_of(spark, parent: dict[str, str], names: dict[str, str | None]):
+    """A served GraphStore over a child -> parent map: closure from
+    build_closure, stored tip counts, no ott ids and no annotations."""
+    from treemachine_spark.graph.closure import build_closure
+    from treemachine_spark.ingest import GraphStore
+
+    kids: dict[str, list] = {}
+    for c, p in parent.items():
+        kids.setdefault(p, []).append(c)
+
+    def tips(v):
+        return sum(map(tips, kids[v])) if v in kids else 1
+
+    (root,) = set(names) - set(parent)
+    edges = spark.createDataFrame(
+        [("t", c, p, None, i, tips(c)) for i, (c, p) in enumerate(sorted(parent.items()))],
+        "tree_id string, child_id string, parent_id string, branch_length double, "
+        "child_index int, tip_descendants long",
+    ).cache()
+    nodes = spark.createDataFrame(
+        [("t", v, None, nm, nm, None, [], v not in kids) for v, nm in sorted(names.items())],
+        "tree_id string, node_id string, ott_id long, name string, unique_name string, "
+        "rank string, tax_sources array<string>, is_leaf boolean",
+    ).cache()
+    ann = spark.createDataFrame(
+        [],
+        "node_id string, supported_by map<string,string>, "
+        "conflicts_with map<string,array<string>>, resolves map<string,string>, "
+        "resolved_by map<string,array<string>>, partial_path_of map<string,string>, "
+        "terminal map<string,string>",
+    ).cache()
+    smap = spark.createDataFrame([], "source_id string, study_id string, tree_id string, git_sha string")
+    return GraphStore(
+        tree_id="t", root_id=root, nodes=nodes, edges=edges,
+        paths=build_closure(edges.select("child_id", "parent_id")).cache(),
+        node_annotations=ann, source_map=smap, tree_meta={"num_tips": tips(root)},
+    )
+
+
+@pytest.fixture(scope="module")
+def probe_store(spark):
+    # node ids are v2-encodable ('ott<N>'), numbered in newick order so
+    # that the id order of siblings is their newick order; the names are
+    # the probe labels
+    ids = {x: f"ott{k}" for k, x in enumerate("ABXCYDZER", start=1)}
+    return store_of(
+        spark, {ids[c]: ids[p] for c, p in PROBE.items()}, {i: x for x, i in ids.items()}
+    ), ids
+
+
+@pytest.mark.parametrize(
+    "tips, want",
+    [("AB", "(A,B)X;"), ("ACE", "((A,C)Y,E)R;"), ("ADE", "((A,D)Z,E)R;")],
+)
+def test_induced_probe_tree_has_reference_topology(probe_store, tips, want):
+    """Only the pairwise first intersections are kept: {A,B} is answered
+    by X alone, not X under a unary chain up to R, and {A,C,E} drops the
+    unary Z."""
+    from treemachine_spark.api.server import ServerCore
+    from treemachine_spark.api.v2 import TreeOfLifeV2
+    from treemachine_spark.api.v3 import TreeOfLifeV3
+
+    store, ids = probe_store
+    node_ids = [ids[t] for t in tips]
+    v3 = TreeOfLifeV3(store)
+    assert v3.induced_subtree(node_ids=node_ids)["newick"] == want
+    assert TreeOfLifeV2(v3).induced_tree(node_ids=[int(i[3:]) for i in node_ids])["newick"] == want
+    status, resp = ServerCore(store, cache_size=0).handle(
+        "/v3/tree_of_life/induced_subtree", {"node_ids": node_ids, "label_format": "name"}
+    )
+    assert (status, resp["newick"]) == (200, want)
+
+
+def test_quoted_ids_reach_the_fetch(spark):
+    """Node ids holding a quote or a backslash resolve and fetch intact."""
+    from treemachine_spark.api.v3 import TreeOfLifeV3
+
+    root = "r\\o'ot"
+    v3 = TreeOfLifeV3(
+        store_of(spark, {"it's": root, "pl\\ain": root}, {"it's": "Q", "pl\\ain": None, root: "R"})
+    )
+    info = v3.node_info(node_id="it's", include_lineage=True)
+    assert info["taxon"]["name"] == "Q" and [b["node_id"] for b in info["lineage"]] == [root]
+    assert v3.mrca(node_ids=["pl\\ain"])["nearest_taxon"]["name"] == "R"
+    assert v3.mrca(node_ids=["it's", "pl\\ain"])["mrca"]["node_id"] == root
+
+
+@pytest.fixture(scope="module")
+def generated(spark):
+    """A seeded 400-node store with polytomies and ~40% named nodes."""
+    rng = random.Random(11)
+    parent = random_tree(rng, 400, 12)
+    names = {f"g{v}": (f"Taxon{v}" if v == 0 or rng.random() < 0.4 else None) for v in range(400)}
+    store = store_of(spark, {f"g{c}": f"g{p}" for c, p in parent.items()}, names)
+    return store, parent, names, rng
+
+
+def test_index_agrees_with_closure_recipes(generated):
+    """Index lineage and MRCA equal graph.traversal's path_to_root and mrca
+    over the closure of the same store."""
+    from treemachine_spark.graph import traversal as T
+
+    store, parent, _, rng = generated
+    ix = TreeIndex.from_store(store)
+    ps = store.paths_with_self()
+    for v in rng.sample(range(400), 8):
+        want = [r["ancestor_id"] for r in T.path_to_root(store.paths, f"g{v}").collect()]
+        assert ix.ids(ix.lineage(int(ix.lookup([f"g{v}"])[0]))) == want
+    for k in (1, 2, 5, 9):
+        tips = [f"g{v}" for v in rng.sample(range(400), k)]
+        want = T.mrca(ps, tips).collect()[0]["mrca_node_id"]
+        assert ix.ids([ix.lca(ix.lookup(tips).tolist())]) == [want]
+
+
+def test_light_requests_spark_job_budget(spark, generated):
+    """Through ServerCore.handle with the cache off: node_info (with and
+    without lineage), mrca (named and unnamed MRCA) and about start at most
+    2 Spark jobs, induced_subtree at most 3, and an unknown node_id answers
+    400 without starting one."""
+    from treemachine_spark.api.server import ServerCore
+
+    store, parent, names, _ = generated
+    core = ServerCore(store, cache_size=0)
+    deep = max(parent, key=lambda v: len(Brute(parent, 400).ancestors(v)))
+    named = next(v for v in names if names[v] and v != "g0")
+    unnamed = next(v for v in names if names[v] is None)
+    tips = [f"g{v}" for v in range(400) if v not in parent.values()][:12]
+    sc = spark.sparkContext
+    budget = [
+        ("node_info", {"node_id": named}, 200, 2),
+        ("node_info", {"node_id": f"g{deep}", "include_lineage": True}, 200, 2),
+        ("mrca", {"node_ids": [named]}, 200, 2),
+        ("mrca", {"node_ids": [unnamed]}, 200, 2),
+        ("about", {}, 200, 2),
+        ("induced_subtree", {"node_ids": tips}, 200, 3),
+        ("node_info", {"node_id": "not-a-node"}, 400, 0),
+    ]
+    for k, (route, body, want_status, max_jobs) in enumerate(budget):
+        group = f"budget-{k}"
+        sc.setJobGroup(group, route)
+        try:
+            status, resp = core.handle(f"/v3/tree_of_life/{route}", body)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert status == want_status, (route, body, resp)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= max_jobs, (route, body)
+    status, resp = core.handle("/v3/tree_of_life/mrca", {"node_ids": [unnamed]})
+    assert "taxon" not in resp["mrca"] and resp["nearest_taxon"]["name"]

@@ -10,23 +10,31 @@ semantics (validated by the ported ws-tests combinators in tests/):
   subtree          tree_of_life_v3.java:522-722 (doSubtree)
   induced_subtree  tree_of_life_v3.java:411-518 (doInducedSubtree)
 
-Execution model: all heavy lifting (resolution joins, MRCA aggregation,
-closure filters) is distributed DataFrame work; only request-sized results
-are collected for response assembly, so each endpoint scales with its
-*answer*, not the tree.
+Execution model: every topology question (id and ott-id resolution,
+lineage, MRCA, nearest taxon, the induced topology, subtree sizes) is
+answered on the driver by ``graph.topology.TreeIndex``, which
+``__init__`` builds from ``nodes`` and ``edges`` with one Arrow collect
+each; ``ServerCore.swap_store`` builds a new API, and so a new index,
+for every new snapshot, while requests in flight keep the old one. Spark
+then runs one single-stage fetch of the ids in the answer: node_info
+fetches the node and its lineage, mrca the MRCA and its nearest taxon,
+about the root, induced_subtree the labels and annotation keys of its
+nodes. An unknown id is a 400 before any job starts.
 
 Subtree answers, newick and arguson alike, take one flow: the opt-in size
-guard, the subtree's edges, one size gate (``FRAGMENT_TIER_EDGES``), then
-the tier. Below the gate the driver assembles the answer; past it
-``exporters.newick_sink.anchored_fragments`` assembles one fragment per
-anchor executor-side and the driver stitches the top levels. Both tiers
-share one label rule (``_labels_df``), one nesting rule (``_nest_blobs``)
-and one blob constructor (``_blob_from_dict``).
+guard and one size gate (``FRAGMENT_TIER_EDGES``), both counted over the
+node's preorder range on the index, then the subtree's edges from the
+closure (``paths``) and the tier. Below the gate the driver assembles the
+answer; past it ``exporters.newick_sink.anchored_fragments`` assembles one
+fragment per anchor executor-side and the driver stitches the top levels.
+Every newick answer shares one label rule (``_label_col``); both subtree
+tiers share one nesting rule (``_nest_blobs``) and one blob constructor
+(``_blob_from_dict``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from treemachine_spark.api.errors import BadIdsError, BadInputError, TreeTooBigError
@@ -36,6 +44,7 @@ from treemachine_spark.exporters.newick_sink import (
     distributed_newick,
 )
 from treemachine_spark.graph import traversal as T
+from treemachine_spark.graph.topology import TreeIndex
 from treemachine_spark.ingest import GraphStore
 
 _ANN_FIELDS = [
@@ -89,6 +98,20 @@ def _blob_from_dict(d: dict, default_num_tips: int) -> dict:
     if d.get("name") is None and d.get("first_name") is not None:
         blob["descendant_name_list"] = [d["first_name"], d["last_name"]]
     return blob
+
+
+def _blob_sources(blobs) -> set:
+    """The annotation source keys of the given blobs (getSourceIDMap
+    input)."""
+    return {k for b in blobs for f in _ANN_FIELDS for k in b.get(f, ())}
+
+
+def _ids_in(col: str, ids) -> Column:
+    """``col IN (ids)`` as one parsed expression. ``Column.isin`` makes a
+    JVM literal per id through py4j, so its plan cost grows with the
+    request by far more than the parser's does."""
+    quoted = ("'" + i.replace("\\", "\\\\").replace("'", "\\'") + "'" for i in ids)
+    return F.expr(f"{col} IN ({','.join(quoted)})")
 
 
 def _id_list(name: str, ids) -> list:
@@ -209,99 +232,83 @@ class TreeOfLifeV3:
             }
             for r in store.source_map.collect()
         }
+        self.index = TreeIndex.from_store(store)
 
     # ------------------------------------------------------------------
     # resolution (L1-L4)
     # ------------------------------------------------------------------
 
     def _resolve_many(self, node_ids, ott_ids):
-        """L4 — one join pass instead of the reference's per-id index loop
-        (tree_of_life_v3.java:292-330). Returns (found_node_ids ordered,
-        node_ids_not_in_tree, ott_ids_not_in_tree)."""
-        spark = self.store.nodes.sparkSession
+        """L4 — one index lookup per id list instead of the reference's
+        per-id index loop (tree_of_life_v3.java:292-330). Returns (found
+        nodes ordered, node_ids_not_in_tree, ott_ids_not_in_tree)."""
         node_ids = _id_list("node_ids", node_ids)
         if not all(isinstance(i, str) for i in node_ids):
             raise BadInputError("'node_ids' must be a list of strings.")
         ott_ids = [_ott_id(o) for o in _id_list("ott_ids", ott_ids)]
-        found: list[str] = []
+        found: list[int] = []
         bad_nodes: list[str] = []
         bad_otts: list[int] = []
-        if node_ids:
-            req = T.local_df(spark, [(i,) for i in node_ids], "node_id string")
-            hits = {
-                r["node_id"]
-                for r in self.store.nodes.join(
-                    F.broadcast(req), "node_id", "left_semi"
-                ).collect()
-            }
-            for i in node_ids:
-                (found if i in hits else bad_nodes).append(i)
-        if ott_ids:
-            req = T.local_df(spark, [(i,) for i in ott_ids], "ott_id long")
-            hits = {
-                r["ott_id"]: r["node_id"]
-                for r in self.store.nodes.join(
-                    F.broadcast(req), "ott_id", "left_semi"
-                ).select("ott_id", "node_id").collect()
-            }
-            for i in ott_ids:
-                if i in hits:
-                    found.append(hits[i])
-                else:
-                    bad_otts.append(i)
+        for i, v in zip(node_ids, self.index.lookup(node_ids).tolist()):
+            if v < 0:
+                bad_nodes.append(i)
+            else:
+                found.append(v)
+        for i, v in zip(ott_ids, self.index.lookup_ott(ott_ids).tolist()):
+            if v < 0:
+                bad_otts.append(i)
+            else:
+                found.append(v)
         return found, bad_nodes, bad_otts
 
-    def _resolve_one(self, node_id=None, ott_id=None) -> dict:
-        """L2/L3 — single lookup; errors per badOTTIDError/badNodeIDError
-        (tree_of_life_v3.java:733-745)."""
+    def _resolve_one(self, node_id=None, ott_id=None) -> int:
+        """L2/L3 — single index lookup; errors per badOTTIDError/
+        badNodeIDError (tree_of_life_v3.java:733-745)."""
         if node_id is None and ott_id is None:
             raise BadInputError('Must provide a "node_id" or "ott_id" argument.')
         if node_id is not None and ott_id is not None:
             raise BadInputError('Provide only one "node_id" or "ott_id" argument.')
         if ott_id is not None:
-            rows = self.store.nodes.where(F.col("ott_id") == _ott_id(ott_id)).collect()
-            if not rows:
+            v = int(self.index.lookup_ott([_ott_id(ott_id)])[0])
+            if v < 0:
                 raise BadInputError(f"Could not find any synthetic tree node corresponding to the 'ott_id' arg: '{ott_id}'.")
         else:
-            rows = self.store.nodes.where(F.col("node_id") == node_id).collect()
-            if not rows:
+            v = int(self.index.lookup([node_id])[0])
+            if v < 0:
                 raise BadInputError(f"Could not find any synthetic tree node corresponding to the 'node_id' arg: '{node_id}'.")
-        return rows[0].asDict()
+        return v
 
     # ------------------------------------------------------------------
     # blobs (P1/P2, A3)
     # ------------------------------------------------------------------
 
-    def _node_blobs(self, node_ids: list[str], unique_sources: set | None = None) -> dict[str, dict]:
+    def _node_blobs(self, node_ids: list[str]) -> dict[str, dict]:
         """P2 — GraphExplorer.getNodeBlob (GraphExplorer.java:203-214) for a
-        batch of nodes in ONE join (the reference loops per node)."""
-        spark = self.store.nodes.sparkSession
-        req = T.local_df(spark, [(i,) for i in node_ids], "node_id string")
+        batch of nodes in ONE fetch (the reference loops per node): the
+        ``nodes`` and ``node_annotations`` rows of the ids, IN-filtered and
+        unioned into one single-stage job, then joined per id on the
+        driver. num_tips is the stored tip_descendants the index holds
+        (ingest A1, the reference's getDescendantLeavesNumbers)."""
+        ids = list(dict.fromkeys(node_ids))
+        if not ids:
+            return {}
+        pick = _ids_in("node_id", ids)
         rows = (
-            req.join(self.store.nodes, "node_id", "left")
-            .join(self.store.node_annotations, "node_id", "left")
-            .join(
-                self.store.edges.select(
-                    F.col("child_id").alias("node_id"), "tip_descendants"
-                ),
-                "node_id",
-                "left",
-            )
+            self.store.nodes.where(pick)
+            .unionByName(self.store.node_annotations.where(pick), allowMissingColumns=True)
             .collect()
         )
-        blobs: dict[str, dict] = {}
-        default = int(self.store.tree_meta.get("num_tips", 0))
-        # leaf num_tips: the reference stores tip_descendants of the
-        # subtree below the edge; keep stored semantics (ingest A1, the
-        # reference's getDescendantLeavesNumbers).
+        fields: dict[str, dict] = {}
         for r in rows:
-            d = r.asDict()
-            blobs[d["node_id"]] = _blob_from_dict(d, default)
-            if unique_sources is not None:
-                for f in _ANN_FIELDS:
-                    v = d.get(f)
-                    if v:
-                        unique_sources.update(v.keys())
+            fields.setdefault(r["node_id"], {}).update(
+                (k, v) for k, v in r.asDict().items() if v is not None
+            )
+        default = int(self.store.tree_meta.get("num_tips", 0))
+        blobs: dict[str, dict] = {}
+        for nid, v in zip(ids, self.index.lookup(ids).tolist()):
+            d = {**fields.get(nid, {}), "node_id": nid}
+            d["tip_descendants"] = self.index.num_tips(v) if v >= 0 else None
+            blobs[nid] = _blob_from_dict(d, default)
         return blobs
 
     def _source_id_map(self, sources: set) -> dict:
@@ -355,12 +362,13 @@ class TreeOfLifeV3:
     # labels (P8)
     # ------------------------------------------------------------------
 
-    def _labels_df(self, member, label_format: str, ids_for_unnamed: bool):
+    @staticmethod
+    def _label_col(label_format: str, ids_for_unnamed: bool) -> Column:
         """P8 — GraphExplorer.getNodeLabel (GraphExplorer.java:673-694) as a
-        column expression over the ``member`` nodes: (node_id, label), the
-        one label rule of every newick answer. A named node without an
-        ott id keeps its bare name in name_and_id format; an unnamed node
-        is labelled by its id only when ``ids_for_unnamed``."""
+        column expression over ``nodes`` rows, the one label rule of every
+        newick answer. A named node without an ott id keeps its bare name
+        in name_and_id format; an unnamed node is labelled by its id only
+        when ``ids_for_unnamed``."""
         if label_format == "name":
             named = F.col("name")
         elif label_format == "id":
@@ -368,9 +376,12 @@ class TreeOfLifeV3:
         else:
             named = F.concat_ws("_ott", F.col("name"), F.col("ott_id").cast("string"))
         unnamed = F.col("node_id") if ids_for_unnamed else F.lit("")
+        return F.when(F.col("name").isNotNull(), named).otherwise(unnamed)
+
+    def _labels_df(self, member, label_format: str, ids_for_unnamed: bool):
+        """(node_id, label) of the ``member`` nodes under ``_label_col``."""
         return self.store.nodes.join(member, "node_id", "left_semi").select(
-            "node_id",
-            F.when(F.col("name").isNotNull(), named).otherwise(unnamed).alias("label"),
+            "node_id", self._label_col(label_format, ids_for_unnamed).alias("label")
         )
 
     @staticmethod
@@ -435,24 +446,22 @@ class TreeOfLifeV3:
 
     def node_info(self, node_id=None, ott_id=None, include_lineage: bool = False) -> dict:
         """doNodeInfo (tree_of_life_v3.java:157-230); lineage is T8
-        (GraphExplorer.getLineage:228-236), parent-first ordering."""
-        row = self._resolve_one(node_id, ott_id)
-        qid = row["node_id"]
-        sources: set = set()
-        res = dict(self._node_blobs([qid], sources)[qid])
+        (GraphExplorer.getLineage:228-236), parent-first ordering, walked
+        on the index. One fetch holds the node and its lineage."""
+        v = self._resolve_one(node_id, ott_id)
+        anc = self.index.lineage(v) if include_lineage else []
+        qid, *anc_ids = self.index.ids([v, *anc])
+        blobs = self._node_blobs([qid, *anc_ids])
+        res = dict(blobs[qid])
         if include_lineage:
-            anc = [
-                r["ancestor_id"]
-                for r in T.path_to_root(self.store.paths, qid).collect()
-            ]
-            blobs = self._node_blobs(anc, sources) if anc else {}
-            res["lineage"] = [blobs[a] for a in anc]
-        res["source_id_map"] = self._source_id_map(sources)
+            res["lineage"] = [blobs[a] for a in anc_ids]
+        res["source_id_map"] = self._source_id_map(_blob_sources(blobs.values()))
         return res
 
     def mrca(self, node_ids=None, ott_ids=None) -> dict:
-        """doMrca (tree_of_life_v3.java:258-363): T2 over the closure, T3
-        nearest taxon when the MRCA is unnamed, 400-with-payload on bad ids."""
+        """doMrca (tree_of_life_v3.java:258-363): T2 and, when the MRCA is
+        unnamed, T3 nearest taxon on the index, both fetched in one job;
+        400-with-payload on bad ids."""
         if not node_ids and not ott_ids:
             raise BadInputError("You must supply at least one node_id or ott_id.")
         found, bad_nodes, bad_otts = self._resolve_many(node_ids, ott_ids)
@@ -461,40 +470,20 @@ class TreeOfLifeV3:
                 "No valid ids provided.",
                 {"ott_ids_not_in_tree": bad_otts, "node_ids_not_in_tree": bad_nodes},
             )
-        mrca_row = T.mrca(
-            self.store.paths_with_self(),
-            found,
-            paths=self.store.paths,
-            root_id=self.store.root_id,
-        ).collect()[0]
-        mrca_id = mrca_row["mrca_node_id"]
+        m = self.index.lca(found)
+        # T3 — nearest taxonomic ancestor (GraphExplorer.java:654-664)
+        nearest = None if self.index.named[m] else self.index.nearest_named(m)
+        mrca_id, *nearest_id = self.index.ids([m] + ([] if nearest is None else [nearest]))
+        blobs = self._node_blobs([mrca_id, *nearest_id])
 
-        res: dict = {}
-        sources: set = set()
-        res["mrca"] = self._node_blobs([mrca_id], sources)[mrca_id]
-        res["source_id_map"] = self._source_id_map(sources)
+        res: dict = {"mrca": blobs[mrca_id]}
+        res["source_id_map"] = self._source_id_map(_blob_sources([res["mrca"]]))
         if bad_otts:
             res["ott_ids_not_in_tree"] = bad_otts
         if bad_nodes:
             res["node_ids_not_in_tree"] = bad_nodes
-
-        if "taxon" not in res["mrca"]:
-            # T3 — nearest taxonomic ancestor (GraphExplorer.java:654-664)
-            named = self.store.nodes.where(F.col("name").isNotNull()).select(
-                F.col("node_id").alias("ancestor_id")
-            )
-            mrta_row = (
-                self.store.paths.where(F.col("node_id") == mrca_id)
-                .join(named, "ancestor_id")
-                .orderBy("depth")
-                .limit(1)
-                .collect()
-            )
-            if mrta_row:
-                trow = self.store.nodes.where(
-                    F.col("node_id") == mrta_row[0]["ancestor_id"]
-                ).collect()[0]
-                res["nearest_taxon"] = _blob_from_dict(trow.asDict(), 0)["taxon"]
+        if nearest_id:
+            res["nearest_taxon"] = blobs[nearest_id[0]]["taxon"]
 
         if bad_otts or bad_nodes:
             raise BadIdsError("Some ids not found or not in tree.", res)
@@ -524,18 +513,21 @@ class TreeOfLifeV3:
             raise BadInputError(
                 f"Invalid 'height_limit' arg: {height_limit!r}; it must be an integer."
             )
-        qid = self._resolve_one(node_id, ott_id)["node_id"]
+        v = self._resolve_one(node_id, ott_id)
+        qid = self.index.ids([v])[0]
         newick = tree_format == "newick"
         depth = height_limit if height_limit is not None else (-1 if newick else 5)
         cap = self.max_tips_newick if newick else self.max_tips_arguson
-        self._guard(qid, depth, cap if self.enforce_caps else None)
+        self._guard(v, depth, cap if self.enforce_caps else None)
         edges = self._subtree_edges(qid, depth)
-        fragments = edges.count() > FRAGMENT_TIER_EDGES
+        # the subtree's edges: its nodes within the depth limit but qid
+        fragments = self.index.subtree_size(v, depth) - 1 > FRAGMENT_TIER_EDGES
         if newick:
             return self._subtree_newick(
                 qid, edges, fragments, label_format, include_all_node_labels
             )
-        return {"arguson": self._arguson(qid, edges, fragments)}
+        lineage = self.index.ids(self.index.lineage(v))
+        return {"arguson": self._arguson(qid, lineage, edges, fragments)}
 
     def _subtree_edges(self, qid: str, depth: int):
         sub = self.store.paths.where(F.col("ancestor_id") == qid)
@@ -556,29 +548,18 @@ class TreeOfLifeV3:
             )
         )
 
-    def _guard(self, qid: str, depth: int, cap: int | None) -> None:
-        """O3 — pre-flight size guard (tree_of_life_v3.java:685-700):
-        O(1) stored tip_descendants when unbounded, T5 count when bounded."""
+    def _guard(self, v: int, depth: int, cap: int | None) -> None:
+        """O3 — pre-flight size guard (tree_of_life_v3.java:685-700) on the
+        index: the stored tip_descendants when unbounded, the T5 tip count
+        of the depth-cut subtree when bounded."""
         if cap is None:
             return
         if depth < 0:
-            edge = self.store.edges.where(F.col("child_id") == qid).collect()
-            n = (
-                int(edge[0]["tip_descendants"])
-                if edge
-                else int(self.store.tree_meta.get("num_tips", 0))
-            )
+            n = self.index.num_tips(v)
+            if n is None:
+                n = int(self.store.tree_meta.get("num_tips", 0))
         else:
-            sub = self._subtree_edges(qid, depth)
-            n = (
-                sub.select(F.col("child_id").alias("node_id"))
-                .join(
-                    sub.select(F.col("parent_id").alias("node_id")).distinct(),
-                    "node_id",
-                    "left_anti",
-                )
-                .count()
-            )
+            n = self.index.leaves_within(v, depth)
         if n > cap:
             raise TreeTooBigError(
                 f"Requested tree ({n} tips) is larger than currently allowed ({cap} tips)."
@@ -611,9 +592,10 @@ class TreeOfLifeV3:
             "supporting_studies": self._supporting_studies(sources),
         }
 
-    def _arguson(self, qid: str, edges, fragments: bool) -> dict:
+    def _arguson(self, qid: str, lineage: list[str], edges, fragments: bool) -> dict:
         """S9 — getArgusonData (GraphExplorer.java:342-354,434-447): nested
-        node blobs with children (depth-limited) + lineage + source_id_map.
+        node blobs with children (depth-limited) + the ``lineage`` ids'
+        blobs + source_id_map.
         Unnamed nodes get descendant_name_list (getNodeBlobArguson,
         GraphExplorer.java:415-429) via the T9 min/max-named-descendant
         recipe — one batched aggregation instead of per-node recursion.
@@ -637,9 +619,9 @@ class TreeOfLifeV3:
             top = self._arguson_distributed(qid, edges, member)
         else:
             top = self._arguson_driver(qid, edges)
-        anc = [r["ancestor_id"] for r in T.path_to_root(self.store.paths, qid).collect()]
-        lineage_blobs = self._node_blobs(anc, sources) if anc else {}
-        top["lineage"] = [lineage_blobs[a] for a in anc]
+        lineage_blobs = self._node_blobs(lineage)
+        sources |= _blob_sources(lineage_blobs.values())
+        top["lineage"] = [lineage_blobs[a] for a in lineage]
         top["source_id_map"] = self._source_id_map(sources)
         return top
 
@@ -744,8 +726,12 @@ class TreeOfLifeV3:
         return _nest_blobs(qid, rows, blobs)
 
     def induced_subtree(self, node_ids=None, ott_ids=None, label_format=None) -> dict:
-        """doInducedSubtree (tree_of_life_v3.java:411-518): T6 over the
-        closure; 400-with-payload when ids are bad (BadIdsException)."""
+        """doInducedSubtree (tree_of_life_v3.java:411-518): T6 on the index
+        with the reference's topology (GraphExplorer.getInducedSubtree,
+        GraphExplorer.java:704-785) — the requested nodes plus their
+        pairwise first intersections, rooted at their MRCA — then one
+        fetch of the nodes' labels and supported_by keys;
+        400-with-payload when ids are bad (BadIdsException)."""
         label_format = self._check_label_format(label_format)
         found, bad_nodes, bad_otts = self._resolve_many(node_ids, ott_ids)
         if len(found) < 2:
@@ -753,29 +739,37 @@ class TreeOfLifeV3:
                 "Not enough valid node ids provided to construct a subtree "
                 "(there must be at least two)."
             )
-        spark = self.store.nodes.sparkSession
-        ind_edges = T.induced_subtree(self.store.paths_with_self(), found)
-        rows = [(r["child_id"], r["parent_id"]) for r in ind_edges.collect()]
-        members = {c for c, _ in rows} | {p for _, p in rows}
-        root_candidates = {p for _, p in rows} - {c for c, _ in rows}
-        root_id = root_candidates.pop() if root_candidates else found[0]
+        root, kept_edges = self.index.virtual_tree(found)
+        members = [root] + [c for c, _ in kept_edges]
+        id_of = dict(zip(members, self.index.ids(members)))
+        rows = [(id_of[c], id_of[p]) for c, p in kept_edges]
 
-        mdf = T.local_df(spark, [(i,) for i in members], "node_id string")
-        labels = dict(self._labels_df(F.broadcast(mdf), label_format, True).collect())
-
-        # request-scale input, but dedup executor-side anyway (same
-        # vocabulary-scale-collect shape as _subtree_newick)
-        sources: set = {
-            r["s"]
-            for r in self._distinct_sources_df(F.broadcast(mdf)).collect()
-        }
+        pick = _ids_in("node_id", list(id_of.values()))
+        fetched = (
+            self.store.nodes.where(pick)
+            .select(
+                "node_id",
+                self._label_col(label_format, True).alias("label"),
+                F.lit(None).cast("array<string>").alias("keys"),
+            )
+            .unionByName(
+                self.store.node_annotations.where(pick).select(
+                    "node_id",
+                    F.lit(None).cast("string").alias("label"),
+                    F.map_keys("supported_by").alias("keys"),
+                )
+            )
+            .collect()
+        )
+        labels = {r["node_id"]: r["label"] for r in fetched if r["label"] is not None}
+        sources = {k for r in fetched for k in r["keys"] or ()}
 
         res: dict = {}
         if bad_otts:
             res["ott_ids_not_in_tree"] = bad_otts
         if bad_nodes:
             res["node_ids_not_in_tree"] = bad_nodes
-        res["newick"] = assemble_newick(rows, root_id, labels)
+        res["newick"] = assemble_newick(rows, id_of[root], labels)
         res["supporting_studies"] = self._supporting_studies(sources)
         if bad_otts or bad_nodes:
             raise BadIdsError("Some ids not found or not in tree.", res)

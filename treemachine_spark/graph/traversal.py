@@ -298,9 +298,14 @@ def induced_subtree(
     paths_self: DataFrame,
     tips: DataFrame,
 ) -> DataFrame:
-    """T6 — induced subtree of a tip set: the tips plus every ancestor that
-    is the MRCA of >= 2 tips, re-wired so each kept node's parent is its
-    nearest kept ancestor.
+    """T6 — covering-ancestor edges of a tip set: the tips plus every
+    ancestor that covers >= 2 tips, re-wired so each kept node's parent is
+    its nearest kept ancestor. That keeps non-branching ancestors and the
+    chain from the tips' MRCA up to the root, which the reference's answer
+    does not have; these edges are what the ``t6_induced_subtree`` gate and
+    its DuckDB oracle pin. Served induced answers come from
+    ``graph.topology.TreeIndex.virtual_tree`` instead, with the reference's
+    topology: only the pairwise first intersections, rooted at the MRCA.
 
     Reference: GraphExplorer.getInducedSubtree (opentree/GraphExplorer.java:
     704-785) — per-tip path walks, pairwise first-intersections, retainAll
