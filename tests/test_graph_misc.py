@@ -129,43 +129,6 @@ def test_degree_prune(spark):
     assert [r["node_id"] for r in pruned.collect()] == ["hub"]
 
 
-def test_extend_closure_matches_full_rebuild(spark):
-    """Incremental closure maintenance: append-only edge batches spliced
-    onto the old closure equal a from-scratch rebuild."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from treemachine_spark.graph.closure import build_closure, extend_closure
-
-    rng = random.Random(20250813)
-    # random tree of 120 nodes
-    parents = {}
-    for i in range(1, 120):
-        parents[i] = rng.randrange(0, i)
-    all_edges = [(f"n{c}", f"n{p}") for c, p in parents.items()]
-    # "new" batch = every node in the subtree under a chosen attach point
-    attach = 7
-    in_sub = {attach}
-    changed = True
-    while changed:
-        changed = False
-        for c, p in parents.items():
-            if p in in_sub and c not in in_sub:
-                in_sub.add(c)
-                changed = True
-    new_nodes = in_sub - {attach}
-    old = [(c, p) for c, p in all_edges if int(c[1:]) not in new_nodes]
-    new = [(c, p) for c, p in all_edges if int(c[1:]) in new_nodes]
-    assert new, "fixture must exercise a non-empty batch"
-
-    mk = lambda rows: spark.createDataFrame(rows, "child_id string, parent_id string")
-    full = build_closure(mk(all_edges))
-    incr = extend_closure(build_closure(mk(old)), mk(new))
-    assert incr.exceptAll(full).count() == 0
-    assert full.exceptAll(incr).count() == 0
-
-
 def py_deepest_exemplified(parents, matched):
     """Literal reference climb (GraphImporter.java:445-479): walk up while
     the parent's tip-descendant set misses the union of the OTHER matched

@@ -91,19 +91,36 @@ class Brute:
 
 
 def index_of(parent: dict[int, int], n: int, named: set, rng: random.Random):
-    """The TreeIndex of a parent map, rows handed over in a shuffled order."""
+    """The TreeIndex of a parent map, rows handed over in a shuffled order.
+    Returns it with the child_index of each child: small, often tied
+    between siblings and sometimes null (read as 0)."""
     rows = list(range(n))
     rng.shuffle(rows)
     kids = [c for c in rows if c in parent]
     tips = {v: len([x for x in Brute(parent, n).below(v) if x not in parent.values()]) for v in kids}
-    return TreeIndex(
+    child_index = {c: rng.choice([None, 0, 1, 2, 3]) for c in kids}
+    ix = TreeIndex(
         [label(v) for v in rows],
         [1000 + v if v % 4 else None for v in rows],
         [v in named for v in rows],
         [label(c) for c in kids],
         [label(parent[c]) for c in kids],
+        [child_index[c] for c in kids],
         [tips[c] for c in kids],
     )
+    return ix, child_index
+
+
+def newick_preorder(bf: Brute, child_index: dict[int, int | None]) -> list[int]:
+    """The nodes in the order a newick answer prints them: each node
+    before its children, siblings by (child_index, node id)."""
+    out, todo = [], [0]
+    while todo:
+        v = todo.pop()
+        out.append(v)
+        kids = sorted(bf.kids.get(v, ()), key=lambda c: (child_index[c] or 0, label(c)))
+        todo.extend(reversed(kids))
+    return out
 
 
 TREES = [
@@ -120,11 +137,13 @@ def test_index_matches_brute_force(shape, seed):
     rng = random.Random(seed)
     parent, n = dict(TREES)[shape](rng)
     named = {v for v in range(n) if rng.random() < 0.4}
-    ix = index_of(parent, n, named, rng)
+    ix, child_index = index_of(parent, n, named, rng)
     bf = Brute(parent, n)
     node = dict(zip(range(n), ix.lookup([label(v) for v in range(n)]).tolist()))
     back = {w: v for v, w in node.items()}
     assert sorted(node.values()) == list(range(n)) and node[0] == 0
+    # the preorder visits siblings in (child_index, id) order
+    assert [back[w] for w in range(n)] == newick_preorder(bf, child_index)
 
     for v in range(n):
         w = node[v]
@@ -136,7 +155,9 @@ def test_index_matches_brute_force(shape, seed):
         below = bf.below(v)
         for limit in (-1, 0, 1, 2, 5):
             within = [u for u in below if limit < 0 or bf.dist(u, v) <= limit]
-            assert ix.subtree_size(w, limit) == len(within)
+            got = ix.members(w, limit).tolist()
+            assert got[0] == w and got == sorted(got)
+            assert {back[u] for u in got} == set(within) and len(got) == len(within)
             if limit >= 0:
                 cut = [
                     u for u in within
@@ -162,7 +183,7 @@ def test_index_matches_brute_force(shape, seed):
 def test_index_id_maps():
     ix = TreeIndex(
         ["r", "a", "bb", "ccc"], [7, None, 5, 5], [True, False, True, True],
-        ["a", "bb", "ccc"], ["r", "r", "a"], [2, 1, 1],
+        ["a", "bb", "ccc"], ["r", "r", "a"], [0, 1, 0], [2, 1, 1],
     )
     r, a, bb, ccc = ix.lookup(["r", "a", "bb", "ccc"]).tolist()
     assert ix.lookup(["cccc", "", "b", 5, None, "ccc"]).tolist() == [-1, -1, -1, -1, -1, ccc]
@@ -185,7 +206,7 @@ def test_index_id_maps():
 def test_index_rejects_what_is_not_a_tree(nodes, children, parents, why):
     with pytest.raises(ValueError, match=why):
         TreeIndex(nodes, [None] * len(nodes), [False] * len(nodes), children, parents,
-                  [1] * len(children))
+                  [0] * len(children), [1] * len(children))
 
 
 # -- served answers ------------------------------------------------------------
@@ -193,9 +214,11 @@ def test_index_rejects_what_is_not_a_tree(nodes, children, parents, why):
 PROBE = {"A": "X", "B": "X", "X": "Y", "C": "Y", "Y": "Z", "D": "Z", "Z": "R", "E": "R"}
 
 
-def store_of(spark, parent: dict[str, str], names: dict[str, str | None]):
+def store_of(spark, parent: dict[str, str], names: dict[str, str | None], child_index=None):
     """A served GraphStore over a child -> parent map: closure from
-    build_closure, stored tip counts, no ott ids and no annotations."""
+    build_closure, stored tip counts, no ott ids and no annotations.
+    ``child_index`` maps a child to its stored child_index; by default
+    siblings are numbered in id order."""
     from treemachine_spark.graph.closure import build_closure
     from treemachine_spark.ingest import GraphStore
 
@@ -208,7 +231,10 @@ def store_of(spark, parent: dict[str, str], names: dict[str, str | None]):
 
     (root,) = set(names) - set(parent)
     edges = spark.createDataFrame(
-        [("t", c, p, None, i, tips(c)) for i, (c, p) in enumerate(sorted(parent.items()))],
+        [
+            ("t", c, p, None, i if child_index is None else child_index[c], tips(c))
+            for i, (c, p) in enumerate(sorted(parent.items()))
+        ],
         "tree_id string, child_id string, parent_id string, branch_length double, "
         "child_index int, tip_descendants long",
     ).cache()
@@ -282,12 +308,16 @@ def test_quoted_ids_reach_the_fetch(spark):
 
 @pytest.fixture(scope="module")
 def generated(spark):
-    """A seeded 400-node store with polytomies and ~40% named nodes."""
+    """A seeded 400-node store with polytomies and ~40% named nodes; its
+    child_index values are small, often tied and sometimes null, so the
+    newick child order is not the id order."""
     rng = random.Random(11)
     parent = random_tree(rng, 400, 12)
     names = {f"g{v}": (f"Taxon{v}" if v == 0 or rng.random() < 0.4 else None) for v in range(400)}
-    store = store_of(spark, {f"g{c}": f"g{p}" for c, p in parent.items()}, names)
-    return store, parent, names, rng
+    order = random.Random(12)
+    child_index = {f"g{c}": order.choice([None, 0, 1, 2, 3]) for c in parent}
+    store = store_of(spark, {f"g{c}": f"g{p}" for c, p in parent.items()}, names, child_index)
+    return store, parent, names, rng, child_index
 
 
 def test_index_agrees_with_closure_recipes(generated):
@@ -295,7 +325,7 @@ def test_index_agrees_with_closure_recipes(generated):
     over the closure of the same store."""
     from treemachine_spark.graph import traversal as T
 
-    store, parent, _, rng = generated
+    store, parent, _, rng, _ = generated
     ix = TreeIndex.from_store(store)
     ps = store.paths_with_self()
     for v in rng.sample(range(400), 8):
@@ -310,11 +340,12 @@ def test_index_agrees_with_closure_recipes(generated):
 def test_light_requests_spark_job_budget(spark, generated):
     """Through ServerCore.handle with the cache off: node_info (with and
     without lineage), mrca (named and unnamed MRCA) and about start at most
-    2 Spark jobs, induced_subtree at most 3, and an unknown node_id answers
-    400 without starting one."""
+    2 Spark jobs, induced_subtree at most 3, a whole-tree subtree newick at
+    most 4 and an arguson of the root (its default height 5) at most 6, and
+    an unknown node_id answers 400 without starting one."""
     from treemachine_spark.api.server import ServerCore
 
-    store, parent, names, _ = generated
+    store, parent, names, _, _ = generated
     core = ServerCore(store, cache_size=0)
     deep = max(parent, key=lambda v: len(Brute(parent, 400).ancestors(v)))
     named = next(v for v in names if names[v] and v != "g0")
@@ -328,6 +359,8 @@ def test_light_requests_spark_job_budget(spark, generated):
         ("mrca", {"node_ids": [unnamed]}, 200, 2),
         ("about", {}, 200, 2),
         ("induced_subtree", {"node_ids": tips}, 200, 3),
+        ("subtree", {"node_id": "g0", "label_format": "id"}, 200, 4),
+        ("subtree", {"node_id": "g0", "format": "arguson"}, 200, 6),
         ("node_info", {"node_id": "not-a-node"}, 400, 0),
     ]
     for k, (route, body, want_status, max_jobs) in enumerate(budget):
@@ -341,3 +374,91 @@ def test_light_requests_spark_job_budget(spark, generated):
         assert len(sc.statusTracker().getJobIdsForGroup(group)) <= max_jobs, (route, body)
     status, resp = core.handle("/v3/tree_of_life/mrca", {"node_ids": [unnamed]})
     assert "taxon" not in resp["mrca"] and resp["nearest_taxon"]["name"]
+
+
+# -- subtree answers against the parent map ------------------------------------
+
+
+def want_newick(bf: Brute, names, child_index, v, label_format, include_all, height):
+    """The newick of ``v``'s subtree cut ``height`` levels below it (whole
+    when negative), children in (child_index, id) order. The store has no
+    ott ids, so name_and_id labels a named node by its bare name."""
+
+    def lab(u):
+        nm = names[f"g{u}"]
+        if nm is None:
+            return f"g{u}" if include_all else ""
+        return f"g{u}" if label_format == "id" else nm
+
+    def nwk(u, left):
+        kids = sorted(bf.kids.get(u, ()), key=lambda c: (child_index[f"g{c}"] or 0, f"g{c}"))
+        if not kids or left == 0:
+            return lab(u)
+        return "(" + ",".join(nwk(c, left - 1) for c in kids) + ")" + lab(u)
+
+    return nwk(v, height) + ";"
+
+
+def subtree_nodes(parent) -> list[int]:
+    """The root, the two widest polytomies, one node of middling depth and
+    one leaf of a parent map."""
+    bf = Brute(parent, 400)
+    wide = sorted(bf.kids, key=lambda p: (-len(bf.kids[p]), p))
+    mid = next(v for v in sorted(bf.kids) if len(bf.ancestors(v)) == 3)
+    leaf = next(v for v in range(400) if v not in bf.kids)
+    return [0, *wide[1:3], mid, leaf]
+
+
+def test_subtree_newick_matches_parent_map(generated):
+    """Newick answers of several nodes in every label format, with and
+    without labels for unnamed nodes, whole and cut at heights 0 and 2,
+    equal the answers built from the parent map and the stored
+    child_index."""
+    from treemachine_spark.api.v3 import TreeOfLifeV3
+
+    store, parent, names, _, child_index = generated
+    api, bf = TreeOfLifeV3(store), Brute(parent, 400)
+    for v in subtree_nodes(parent):
+        for fmt in ("name", "id", "name_and_id"):
+            for include_all in (False, True):
+                for height in (-1, 0, 2):
+                    got = api.subtree(
+                        node_id=f"g{v}", label_format=fmt, height_limit=height,
+                        include_all_node_labels=include_all,
+                    )
+                    want = want_newick(bf, names, child_index, v, fmt, include_all, height)
+                    assert got == {"newick": want, "supporting_studies": []}, (v, fmt, height)
+
+
+def test_subtree_arguson_matches_parent_map(generated):
+    """Arguson answers at heights 0-3: each blob's children in (child_index,
+    id) order down to the height, its stored tip count (the tree's for the
+    root), a taxon exactly for named nodes, the first and last names below
+    an unnamed node, and the lineage parent first."""
+    from treemachine_spark.api.v3 import TreeOfLifeV3
+
+    store, parent, names, _, child_index = generated
+    api, bf = TreeOfLifeV3(store), Brute(parent, 400)
+
+    def check(blob, u, left):
+        assert blob["node_id"] == f"g{u}"
+        assert blob["num_tips"] == len([x for x in bf.below(u) if x not in bf.kids])
+        assert ("taxon" in blob) == (names[f"g{u}"] is not None)
+        below = sorted(names[f"g{x}"] for x in bf.below(u) - {u} if names[f"g{x}"])
+        if "taxon" not in blob and below:
+            assert blob["descendant_name_list"] == [below[0], below[-1]]
+        else:
+            assert "descendant_name_list" not in blob
+        kids = sorted(bf.kids.get(u, ()), key=lambda c: (child_index[f"g{c}"] or 0, f"g{c}"))
+        if left == 0 or not kids:
+            assert "children" not in blob
+            return 1
+        assert [c["node_id"] for c in blob["children"]] == [f"g{c}" for c in kids]
+        return 1 + sum(check(b, c, left - 1) for b, c in zip(blob["children"], kids))
+
+    for v in subtree_nodes(parent):
+        for height in range(4):
+            arg = api.subtree(node_id=f"g{v}", tree_format="arguson", height_limit=height)["arguson"]
+            seen = check(arg, v, height)
+            assert seen == len([u for u in bf.below(v) if bf.dist(u, v) <= height])
+            assert [b["node_id"] for b in arg["lineage"]] == [f"g{a}" for a in bf.ancestors(v)]

@@ -11,29 +11,38 @@ semantics (validated by the ported ws-tests combinators in tests/):
   induced_subtree  tree_of_life_v3.java:411-518 (doInducedSubtree)
 
 Execution model: every topology question (id and ott-id resolution,
-lineage, MRCA, nearest taxon, the induced topology, subtree sizes) is
-answered on the driver by ``graph.topology.TreeIndex``, which
-``__init__`` builds from ``nodes`` and ``edges`` with one Arrow collect
-each; ``ServerCore.swap_store`` builds a new API, and so a new index,
-for every new snapshot, while requests in flight keep the old one. Spark
-then runs one single-stage fetch of the ids in the answer: node_info
-fetches the node and its lineage, mrca the MRCA and its nearest taxon,
-about the root, induced_subtree the labels and annotation keys of its
-nodes. An unknown id is a 400 before any job starts.
+lineage, MRCA, nearest taxon, the induced topology, a subtree's members,
+shape and child order) is answered on the driver by
+``graph.topology.TreeIndex``, which ``__init__`` builds from ``nodes`` and
+``edges`` with one Arrow collect each; ``ServerCore.swap_store`` builds a
+new API, and so a new index, for every new snapshot, while requests in
+flight keep the old one. Spark then runs one fetch of the rows the answer
+prints: node_info fetches the node and its lineage, mrca the MRCA and its
+nearest taxon, about the root, induced_subtree the labels and annotation
+keys of its nodes, a subtree its members' rows. An unknown id is a 400
+before any job starts.
 
 Subtree answers, newick and arguson alike, take one flow: the opt-in size
-guard and one size gate (``FRAGMENT_TIER_EDGES``), both counted over the
-node's preorder range on the index, then the subtree's edges from the
-closure (``paths``) and the tier. Below the gate the driver assembles the
-answer; past it ``exporters.newick_sink.anchored_fragments`` assembles one
-fragment per anchor executor-side and the driver stitches the top levels.
-Every newick answer shares one label rule (``_label_col``); both subtree
-tiers share one nesting rule (``_nest_blobs``) and one blob constructor
-(``_blob_from_dict``).
+guard, then the node's members within the height limit as one preorder
+walk on the index (``TreeIndex.members``), whose length is the one size
+gate (``FRAGMENT_TIER_EDGES``). Both tiers select members by one rule
+(``_member``: the closure rows below the node within the limit). Below
+the gate the index gives the parent links and child order, and Spark runs
+one union fetch over the member frame: newick fetches the members' labels
+and their distinct supported_by keys, arguson their blob fields and the T9
+names of the unnamed ones; the lineage blobs are a second fetch. Past the
+gate ``exporters.newick_sink.anchored_fragments`` assembles one fragment
+per anchor executor-side from the member edges and the driver stitches the
+top levels. Every newick answer shares one label rule (``_label_col``);
+both subtree tiers share one nesting rule (``_nest_blobs``) and one blob
+constructor (``_blob_from_dict``).
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -106,14 +115,6 @@ def _blob_sources(blobs) -> set:
     return {k for b in blobs for f in _ANN_FIELDS for k in b.get(f, ())}
 
 
-def _ids_in(col: str, ids) -> Column:
-    """``col IN (ids)`` as one parsed expression. ``Column.isin`` makes a
-    JVM literal per id through py4j, so its plan cost grows with the
-    request by far more than the parser's does."""
-    quoted = ("'" + i.replace("\\", "\\\\").replace("'", "\\'") + "'" for i in ids)
-    return F.expr(f"{col} IN ({','.join(quoted)})")
-
-
 def _id_list(name: str, ids) -> list:
     """A request's id-list argument (absent = empty). A bare string is
     refused rather than iterated one character at a time."""
@@ -134,8 +135,9 @@ def _ott_id(value) -> int:
 
 def _nest_blobs(qid: str, rows, blobs: dict[str, dict]) -> dict:
     """The arguson blob ``qid`` with its descendants nested: each blob gets
-    its ``children`` from the (child_id, parent_id, child_index) ``rows`` in
-    (child_index, child_id) order — the newick child order. Children are
+    its ``children`` from the (child_id, parent_id, order) ``rows`` in
+    (order, child_id) order — the newick child order when ``order`` is the
+    child_index or the index's preorder rank. Children are
     attached by dict reference in one linear pass (no recursion), in
     place; a row whose parent has no blob (a fragment anchor's own link)
     is skipped."""
@@ -282,34 +284,54 @@ class TreeOfLifeV3:
     # blobs (P1/P2, A3)
     # ------------------------------------------------------------------
 
-    def _node_blobs(self, node_ids: list[str]) -> dict[str, dict]:
+    def _node_blobs(
+        self, nodes, member: DataFrame | None = None, descendant_names: bool = False
+    ) -> dict[str, dict]:
         """P2 — GraphExplorer.getNodeBlob (GraphExplorer.java:203-214) for a
-        batch of nodes in ONE fetch (the reference loops per node): the
-        ``nodes`` and ``node_annotations`` rows of the ids, IN-filtered and
-        unioned into one single-stage job, then joined per id on the
-        driver. num_tips is the stored tip_descendants the index holds
-        (ingest A1, the reference's getDescendantLeavesNumbers)."""
-        ids = list(dict.fromkeys(node_ids))
-        if not ids:
+        batch of index nodes in ONE fetch (the reference loops per node):
+        the ``nodes`` and ``node_annotations`` rows of their ids, picked by
+        an IN list or, when the caller holds them as a frame, by a semi-join
+        with ``member``; with ``descendant_names``, also the T9 first/last
+        named descendants of the unnamed ones (the index's named flags pick
+        them) for getNodeBlobArguson's descendant_name_list
+        (GraphExplorer.java:415-429). The parts are unioned into one job
+        and merged per id on the driver. num_tips is the stored
+        tip_descendants the index holds (ingest A1, the reference's
+        getDescendantLeavesNumbers). Returns the blobs by id, in the order
+        of ``nodes``."""
+        nodes = list(dict.fromkeys(np.asarray(nodes, np.int64).tolist()))
+        if not nodes:
             return {}
-        pick = _ids_in("node_id", ids)
-        rows = (
-            self.store.nodes.where(pick)
-            .unionByName(self.store.node_annotations.where(pick), allowMissingColumns=True)
-            .collect()
-        )
+        ids = self.index.ids(nodes)
+        if member is None:
+            pick = T.ids_in("node_id", ids)
+            parts = [self.store.nodes.where(pick), self.store.node_annotations.where(pick)]
+        else:
+            parts = [
+                t.join(member, "node_id", "left_semi")
+                for t in (self.store.nodes, self.store.node_annotations)
+            ]
+        unnamed = [i for i, v in zip(ids, nodes) if not self.index.named[v]] if descendant_names else []
+        if unnamed:
+            parts.append(
+                T.representative_names(
+                    self.store.paths.where(T.ids_in("ancestor_id", unnamed)), self.store.nodes
+                ).withColumnRenamed("ancestor_id", "node_id")
+            )
+        rows = reduce(lambda x, y: x.unionByName(y, allowMissingColumns=True), parts).collect()
         fields: dict[str, dict] = {}
         for r in rows:
             fields.setdefault(r["node_id"], {}).update(
                 (k, v) for k, v in r.asDict().items() if v is not None
             )
         default = int(self.store.tree_meta.get("num_tips", 0))
-        blobs: dict[str, dict] = {}
-        for nid, v in zip(ids, self.index.lookup(ids).tolist()):
-            d = {**fields.get(nid, {}), "node_id": nid}
-            d["tip_descendants"] = self.index.num_tips(v) if v >= 0 else None
-            blobs[nid] = _blob_from_dict(d, default)
-        return blobs
+        return {
+            nid: _blob_from_dict(
+                {**fields.get(nid, {}), "node_id": nid, "tip_descendants": self.index.num_tips(v)},
+                default,
+            )
+            for nid, v in zip(ids, nodes)
+        }
 
     def _source_id_map(self, sources: set) -> dict:
         """A3/getSourceIDMap (GraphExplorer.java:217-224): map each source id
@@ -409,7 +431,7 @@ class TreeOfLifeV3:
             "num_source_studies": meta.get("num_source_studies"),
             "num_source_trees": meta.get("num_source_trees"),
             "filtered_flags": list(meta.get("filtered_flags", [])),
-            "root": self._node_blobs([self.store.root_id])[self.store.root_id],
+            "root": next(iter(self._node_blobs([0]).values())),
         }
         if include_source_list:
             res["source_list"] = list(meta.get("sources", []))
@@ -450,8 +472,8 @@ class TreeOfLifeV3:
         on the index. One fetch holds the node and its lineage."""
         v = self._resolve_one(node_id, ott_id)
         anc = self.index.lineage(v) if include_lineage else []
-        qid, *anc_ids = self.index.ids([v, *anc])
-        blobs = self._node_blobs([qid, *anc_ids])
+        blobs = self._node_blobs([v, *anc])
+        qid, *anc_ids = blobs
         res = dict(blobs[qid])
         if include_lineage:
             res["lineage"] = [blobs[a] for a in anc_ids]
@@ -473,8 +495,8 @@ class TreeOfLifeV3:
         m = self.index.lca(found)
         # T3 — nearest taxonomic ancestor (GraphExplorer.java:654-664)
         nearest = None if self.index.named[m] else self.index.nearest_named(m)
-        mrca_id, *nearest_id = self.index.ids([m] + ([] if nearest is None else [nearest]))
-        blobs = self._node_blobs([mrca_id, *nearest_id])
+        blobs = self._node_blobs([m] + ([] if nearest is None else [nearest]))
+        mrca_id, *nearest_id = blobs
 
         res: dict = {"mrca": blobs[mrca_id]}
         res["source_id_map"] = self._source_id_map(_blob_sources([res["mrca"]]))
@@ -514,39 +536,41 @@ class TreeOfLifeV3:
                 f"Invalid 'height_limit' arg: {height_limit!r}; it must be an integer."
             )
         v = self._resolve_one(node_id, ott_id)
-        qid = self.index.ids([v])[0]
         newick = tree_format == "newick"
         depth = height_limit if height_limit is not None else (-1 if newick else 5)
         cap = self.max_tips_newick if newick else self.max_tips_arguson
         self._guard(v, depth, cap if self.enforce_caps else None)
-        edges = self._subtree_edges(qid, depth)
-        # the subtree's edges: its nodes within the depth limit but qid
-        fragments = self.index.subtree_size(v, depth) - 1 > FRAGMENT_TIER_EDGES
+        nodes = self.index.members(v, depth)
         if newick:
-            return self._subtree_newick(
-                qid, edges, fragments, label_format, include_all_node_labels
-            )
-        lineage = self.index.ids(self.index.lineage(v))
-        return {"arguson": self._arguson(qid, lineage, edges, fragments)}
+            return self._subtree_newick(nodes, depth, label_format, include_all_node_labels)
+        return {"arguson": self._arguson(nodes, depth)}
 
-    def _subtree_edges(self, qid: str, depth: int):
+    def _member(self, qid: str, depth: int) -> tuple[DataFrame, DataFrame]:
+        """L5 — the one membership rule of both subtree tiers: the closure
+        rows below ``qid`` within ``depth`` levels. Returns the member frame
+        (node_id) and the same frame plus ``qid`` itself."""
         sub = self.store.paths.where(F.col("ancestor_id") == qid)
         if depth >= 0:
             sub = sub.where(F.col("depth") <= depth)
         member = sub.select("node_id")
-        return (
-            self.store.edges.join(
-                member.withColumnRenamed("node_id", "child_id"), "child_id", "left_semi"
-            )
-            # keep only edges whose parent is inside the subtree or is qid
-            .join(
-                member.unionByName(
-                    T.local_df(member.sparkSession, [(qid,)], "node_id string")
-                ).withColumnRenamed("node_id", "parent_id"),
-                "parent_id",
-                "left_semi",
-            )
+        me = self.store.nodes.where(F.col("node_id") == qid).select("node_id")
+        return member, member.unionByName(me)
+
+    def _member_edges(self, member: DataFrame) -> DataFrame:
+        """The edges of the fragment tier: every member's edge to its
+        parent, which is a member or the subtree's root."""
+        return self.store.edges.join(
+            member.withColumnRenamed("node_id", "child_id"), "child_id", "left_semi"
         )
+
+    def _shape(self, nodes) -> list[tuple]:
+        """The (child_id, parent_id, rank) rows of a ``TreeIndex.members``
+        walk: every member but the root under its parent. rank is the
+        preorder position, so siblings sorted by it print in the newick
+        child order."""
+        ids = self.index.ids(nodes)
+        up = np.searchsorted(nodes, self.index.parent[nodes[1:]]).tolist()
+        return [(ids[k], ids[p], k) for k, p in enumerate(up, start=1)]
 
     def _guard(self, v: int, depth: int, cap: int | None) -> None:
         """O3 — pre-flight size guard (tree_of_life_v3.java:685-700) on the
@@ -565,98 +589,64 @@ class TreeOfLifeV3:
                 f"Requested tree ({n} tips) is larger than currently allowed ({cap} tips)."
             )
 
-    def _subtree_newick(self, qid, edges, fragments, label_format, ids_for_unnamed) -> dict:
-        member = edges.select(F.col("child_id").alias("node_id"))
-        sources: set = {
-            r["s"] for r in self._distinct_sources_df(member).collect()
-        }
-        spark = self.store.nodes.sparkSession
-        if fragments:
-            member_plus = member.unionByName(
-                T.local_df(spark, [(qid,)], "node_id string")
+    def _subtree_newick(self, nodes, depth, label_format, ids_for_unnamed) -> dict:
+        """T4/T7 newick. Below the gate the shape comes from the index and
+        one job fetches the members' labels (``qid``'s too) and their
+        distinct supported_by keys; past it the fragment tier assembles the
+        member edges executor-side."""
+        qid = self.index.ids(nodes[:1])[0]
+        member, member_plus = self._member(qid, depth)
+        labels_df = self._labels_df(member_plus, label_format, ids_for_unnamed)
+        sources_df = self._distinct_sources_df(member)
+        if len(nodes) - 1 > FRAGMENT_TIER_EDGES:
+            sources = {r["s"] for r in sources_df.collect()}
+            newick = distributed_newick(
+                self._member_edges(member), self.store.paths, qid, labels_df
             )
-            labels_df = self._labels_df(member_plus, label_format, ids_for_unnamed)
-            newick = distributed_newick(edges, self.store.paths, qid, labels_df)
         else:
-            rows = edges.select(
-                "child_id", "parent_id", "branch_length", "child_index"
-            ).collect()
-            member_ids = {r["child_id"] for r in rows} | {qid}
-            mdf = T.local_df(spark, [(i,) for i in member_ids], "node_id string")
-            labels = dict(
-                self._labels_df(F.broadcast(mdf), label_format, ids_for_unnamed).collect()
-            )
-            newick = assemble_newick(rows, qid, labels)
+            fetched = labels_df.unionByName(sources_df, allowMissingColumns=True).toArrow()
+            ids, labs, keys = (fetched[c].to_pylist() for c in ("node_id", "label", "s"))
+            labels = {i: lab for i, lab in zip(ids, labs) if i is not None}
+            sources = {k for i, k in zip(ids, keys) if i is None}
+            rows = self._shape(nodes)
+            newick = assemble_newick([(c, p, None, k) for c, p, k in rows], qid, labels)
         return {
             "newick": newick,
             "supporting_studies": self._supporting_studies(sources),
         }
 
-    def _arguson(self, qid: str, lineage: list[str], edges, fragments: bool) -> dict:
+    def _arguson(self, nodes, depth: int) -> dict:
         """S9 — getArgusonData (GraphExplorer.java:342-354,434-447): nested
-        node blobs with children (depth-limited) + the ``lineage`` ids'
-        blobs + source_id_map.
-        Unnamed nodes get descendant_name_list (getNodeBlobArguson,
-        GraphExplorer.java:415-429) via the T9 min/max-named-descendant
-        recipe — one batched aggregation instead of per-node recursion.
-        In the fragment tier the nested blobs are assembled executor-side
-        per anchor subtree (the cap the reference hard-codes is opt-in,
-        like newick's)."""
-        spark = self.store.nodes.sparkSession
-        member = edges.select(F.col("child_id").alias("node_id"))
-        member_plus = member.unionByName(
-            T.local_df(spark, [(qid,)], "node_id string")
-        )
-        # arguson collects source keys from ALL annotation maps
-        # (getSourceIDMap input) — vocabulary-scale distinct, A2 discipline
-        sources: set = {
-            r["s"]
-            for r in self._distinct_sources_df(
-                member_plus, fields=tuple(_ANN_FIELDS)
-            ).collect()
-        }
-        if fragments:
-            top = self._arguson_distributed(qid, edges, member)
+        node blobs with children (depth-limited) + the lineage's blobs +
+        source_id_map. Unnamed nodes get descendant_name_list
+        (getNodeBlobArguson, GraphExplorer.java:415-429) via the T9
+        min/max-named-descendant recipe — one batched aggregation instead
+        of per-node recursion. Below the gate the shape comes from the
+        index and the members' blobs from one fetch; past it the nested
+        blobs are assembled executor-side per anchor subtree (the cap the
+        reference hard-codes is opt-in, like newick's)."""
+        v = int(nodes[0])
+        qid = self.index.ids([v])[0]
+        member, member_plus = self._member(qid, depth)
+        if len(nodes) - 1 > FRAGMENT_TIER_EDGES:
+            # arguson collects source keys from ALL annotation maps
+            # (getSourceIDMap input) — vocabulary-scale distinct, A2 discipline
+            sources = {
+                r["s"]
+                for r in self._distinct_sources_df(member_plus, tuple(_ANN_FIELDS)).collect()
+            }
+            top = self._arguson_distributed(qid, self._member_edges(member), member)
         else:
-            top = self._arguson_driver(qid, edges)
+            rows = self._shape(nodes)
+            blobs = self._node_blobs(nodes, member_plus, descendant_names=True)
+            sources = _blob_sources(blobs.values())
+            top = _nest_blobs(qid, rows, blobs)
+        lineage = self.index.lineage(v)
         lineage_blobs = self._node_blobs(lineage)
         sources |= _blob_sources(lineage_blobs.values())
-        top["lineage"] = [lineage_blobs[a] for a in lineage]
+        top["lineage"] = list(lineage_blobs.values())
         top["source_id_map"] = self._source_id_map(sources)
         return top
-
-    def _fill_descendant_names(self, blobs: dict[str, dict], skip=()) -> None:
-        """descendant_name_list for unnamed blobs (request-scale isin over
-        the T9 aggregate)."""
-        from treemachine_spark.graph.traversal import representative_names
-
-        unnamed = [
-            nid
-            for nid, b in blobs.items()
-            if "taxon" not in b and nid not in skip
-        ]
-        if not unnamed:
-            return
-        reps = (
-            representative_names(self.store.paths, self.store.nodes)
-            .where(F.col("ancestor_id").isin(unnamed))
-            .collect()
-        )
-        rep_map = {
-            r["ancestor_id"]: [r["first_name"], r["last_name"]] for r in reps
-        }
-        for nid in unnamed:
-            if nid in rep_map:
-                blobs[nid]["descendant_name_list"] = rep_map[nid]
-
-    def _arguson_driver(self, qid: str, edges) -> dict:
-        """Driver-side nested-blob assembly (requests within the
-        reference's own working envelope; default depth 5)."""
-        rows = edges.select("child_id", "parent_id", "child_index").collect()
-        member = [r["child_id"] for r in rows] + [qid]
-        blobs = self._node_blobs(member)
-        self._fill_descendant_names(blobs)
-        return _nest_blobs(qid, rows, blobs)
 
     def _arguson_distributed(self, qid: str, edges, member) -> dict:
         """Arguson through exporters.newick_sink.anchored_fragments: each
@@ -667,8 +657,6 @@ class TreeOfLifeV3:
         Python blob building)."""
         import json
 
-        from treemachine_spark.graph.traversal import representative_names
-
         # rep names only for unnamed members (pre-filter paths so the T9
         # aggregate runs over the request's subtree, not the whole store)
         unnamed_members = (
@@ -676,7 +664,7 @@ class TreeOfLifeV3:
             .select("node_id")
             .join(member, "node_id", "left_semi")
         )
-        reps = representative_names(
+        reps = T.representative_names(
             self.store.paths.join(
                 unnamed_members.withColumnRenamed("node_id", "ancestor_id"),
                 "ancestor_id",
@@ -719,9 +707,10 @@ class TreeOfLifeV3:
             asm,
             info,
         )
-        blobs = self._node_blobs([r["child_id"] for r in rows] + [qid])
-        # anchors' blobs (incl. their descendant_name_list) live in frags
-        self._fill_descendant_names(blobs, skip=frags)
+        # the anchors' blobs (their descendant_name_list included) are the
+        # fragments; the driver fetches the levels above them
+        top = [r["child_id"] for r in rows if r["child_id"] not in frags] + [qid]
+        blobs = self._node_blobs(self.index.lookup(top), descendant_names=True)
         blobs.update({a: json.loads(f) for a, f in frags.items()})
         return _nest_blobs(qid, rows, blobs)
 
@@ -744,7 +733,7 @@ class TreeOfLifeV3:
         id_of = dict(zip(members, self.index.ids(members)))
         rows = [(id_of[c], id_of[p]) for c, p in kept_edges]
 
-        pick = _ids_in("node_id", list(id_of.values()))
+        pick = T.ids_in("node_id", list(id_of.values()))
         fetched = (
             self.store.nodes.where(pick)
             .select(

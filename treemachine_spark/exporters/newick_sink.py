@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from treemachine_spark.graph.traversal import ids_in
+
 MIN_BRANCHLENGTH = 0.0000000000000000000001
 
 # characters that force quoting per the newick standard (the reference
@@ -255,7 +257,7 @@ def distributed_newick(
     if labels is not None:
         top_ids = [r["child_id"] for r in top_rows] + [root_id]
         top_labels = dict(
-            labels.where(F.col("node_id").isin(top_ids)).select("node_id", "label").collect()
+            labels.where(ids_in("node_id", top_ids)).select("node_id", "label").collect()
         )
     return assemble_newick(
         top_rows, root_id, top_labels, include_branch_lengths, leaf_overrides=frags

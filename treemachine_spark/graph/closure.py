@@ -22,9 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def build_closure(
-    edges: DataFrame, checkpoint: bool = True, weight_col: str | None = None
-) -> DataFrame:
+def build_closure(edges: DataFrame, weight_col: str | None = None) -> DataFrame:
     """paths(node_id, ancestor_id, depth>=1) for a child->parent edge table.
 
     Replaces the reference's per-request rootward walks
@@ -46,8 +44,7 @@ def build_closure(
     ]
     if weight_col:
         cols.append(F.col(weight_col).cast("double").alias("w_sum"))
-    paths = edges.select(*cols)
-    full = paths.localCheckpoint(eager=True) if checkpoint else paths
+    full = edges.select(*cols).localCheckpoint(eager=True)
     k = 1
     while True:
         top = full.where(F.col("depth") == k)
@@ -63,56 +60,15 @@ def build_closure(
             .join(full.alias("b"), F.col("a.ancestor_id") == F.col("b.node_id"))
             .select(*ext_cols)
         )
-        if checkpoint:
-            # materialize the (small) extension once; isEmpty and the union
-            # below then reuse it instead of re-running the join, and `full`
-            # stays a shallow union of checkpointed segments — the whole
-            # closure is never re-materialized per iteration.
-            ext = ext.localCheckpoint(eager=True)
+        # materialize the (small) extension once; isEmpty and the union
+        # below then reuse it instead of re-running the join, and `full`
+        # stays a shallow union of checkpointed segments — the whole
+        # closure is never re-materialized per iteration.
+        ext = ext.localCheckpoint(eager=True)
         if ext.isEmpty():
             return full
         full = full.unionByName(ext)
         k *= 2
-
-
-def extend_closure(old_paths: DataFrame, new_edges: DataFrame) -> DataFrame:
-    """Incrementally extend a closure with an appended batch of edges whose
-    CHILDREN are all new nodes (the append-only ingest case: attaching new
-    subtrees under existing nodes).
-
-    The reference re-ingests the whole database to change the tree
-    (IngestSynthesisData rebuilds from scratch); at 100 TB an incremental
-    maintenance path matters. Derivation: build the (small) closure of the
-    new edge batch alone — its paths that end at a PRE-EXISTING node (any
-    ancestor that is not itself a new child) are the boundary crossings;
-    joining those against the old closure splices the new nodes onto every
-    deeper ancestor. The old closure is scanned once (one join keyed on
-    node_id) and never rewritten.
-
-        result = old ∪ closure(new) ∪ (boundary ⋈ old, depths added)
-
-    ``old_paths`` must be a RAW closure (depth >= 1, no depth-0 self paths —
-    i.e. not the output of :func:`with_self_paths`): a self row at a boundary
-    attach point would make the splice join re-derive paths that
-    ``closure(new)`` already contributed, duplicating them. Guarded below by
-    filtering the splice side to depth > 0, which makes the call safe either
-    way (self paths, if present, still flow through the ``old_paths`` union
-    term untouched).
-    """
-    newc = build_closure(new_edges)
-    new_children = new_edges.select(F.col("child_id").alias("ancestor_id")).distinct()
-    boundary = newc.join(F.broadcast(new_children), "ancestor_id", "left_anti")
-    spliceable = old_paths.where(F.col("depth") > 0)
-    ext = (
-        boundary.alias("b")
-        .join(spliceable.alias("o"), F.col("b.ancestor_id") == F.col("o.node_id"))
-        .select(
-            F.col("b.node_id").alias("node_id"),
-            F.col("o.ancestor_id").alias("ancestor_id"),
-            (F.col("b.depth") + F.col("o.depth")).alias("depth"),
-        )
-    )
-    return old_paths.unionByName(newc).unionByName(ext)
 
 
 def with_self_paths(paths: DataFrame, nodes: DataFrame) -> DataFrame:

@@ -1,5 +1,5 @@
-"""Driver-side topology index of one served tree (SURVEY.md §2.4 T1-T3,
-T5, T6 answered without Spark).
+"""Driver-side topology index of one served tree (SURVEY.md §2.4 T1-T6
+answered without Spark).
 
 A tree of n nodes fits in a few int32 arrays. Every node is numbered by its
 preorder rank, so the subtree of ``v`` is the rank range
@@ -8,7 +8,13 @@ answers lineage, MRCA and induced-subtree questions by walking parent
 pointers over its embedded graph (GraphExplorer.getPathToRoot,
 GraphExplorer.java:795-814; getDraftTreeMRCA, :617-650; getInducedSubtree,
 :704-785); this index makes the same walks in one process, so a served
-request needs Spark only to fetch the rows of the ids in its answer.
+request needs Spark only to fetch the rows of the ids in its answer. A
+subtree's shape comes from it too, as the reference rebuilds a
+depth-limited subtree in one process
+(GraphExplorer.reconstructDepthLimitedSubtree, GraphExplorer.java:539-574).
+
+Siblings are ordered as newick answers print them, by (``child_index``,
+node id), so a node's preorder range is also its subtree in answer order.
 
 ``TreeIndex.from_store`` is the only Spark work: one Arrow collect of
 ``nodes`` and one of ``edges``. Everything after it is numpy over whole
@@ -116,10 +122,13 @@ class TreeIndex:
     maps. Node 0 is the root. Immutable once built: a new store snapshot
     gets a new index."""
 
-    def __init__(self, node_ids, ott_ids, named, child_ids, parent_ids, tip_descendants):
+    def __init__(
+        self, node_ids, ott_ids, named, child_ids, parent_ids, child_index, tip_descendants
+    ):
         """Build from the node columns (node_id, ott_id, named) and the edge
-        columns (child_id, parent_id, tip_descendants), each an Arrow array
-        or a plain sequence. A null ott_id or tip_descendants means none."""
+        columns (child_id, parent_id, child_index, tip_descendants), each an
+        Arrow array or a plain sequence. A null ott_id or tip_descendants
+        means none; a null child_index counts as 0."""
         node_ids = _arrow(node_ids, pa.string())
         n = len(node_ids)
         if n == 0:
@@ -144,7 +153,11 @@ class TreeIndex:
         parent[child] = ends[len(child_ids) :]
         if len(child) != n - 1 or np.bincount(child, minlength=n).max() > 1:
             raise ValueError("every node but the root needs exactly one parent edge")
-        pre, depth, size = _euler_preorder(parent, key_rank)
+        sibling_key = np.zeros(n, np.int64)
+        sibling_key[child] = _arrow(child_index, pa.int64()).fill_null(0).to_numpy()
+        rank = np.empty(n, np.int64)
+        rank[np.lexsort((key_rank, sibling_key))] = np.arange(n)
+        pre, depth, size = _euler_preorder(parent, rank)
         row_of = np.empty(n, np.int64)
         row_of[pre] = np.arange(n)
 
@@ -184,11 +197,13 @@ class TreeIndex:
         edges = store.edges.select(
             "child_id",
             "parent_id",
+            F.col("child_index").cast("long").alias("child_index"),
             F.col("tip_descendants").cast("long").alias("tip_descendants"),
         ).toArrow()
         return cls(
             nodes["node_id"], nodes["ott_id"], nodes["named"],
-            edges["child_id"], edges["parent_id"], edges["tip_descendants"],
+            edges["child_id"], edges["parent_id"], edges["child_index"],
+            edges["tip_descendants"],
         )
 
     # -- id maps ----------------------------------------------------------
@@ -278,15 +293,16 @@ class TreeIndex:
             stack.append(v)
         return order[0], edges
 
-    # -- depth-limited range counts ------------------------------------------
+    # -- depth-limited subtrees ----------------------------------------------
 
-    def subtree_size(self, v: int, limit: int = -1) -> int:
-        """T5 — nodes in ``v``'s subtree at most ``limit`` levels below it
-        (all of them when ``limit`` < 0), ``v`` included."""
+    def members(self, v: int, limit: int = -1) -> np.ndarray:
+        """T4/T5 — the nodes of ``v``'s subtree at most ``limit`` levels
+        below it (all of them when ``limit`` < 0) in preorder, ``v`` first:
+        the shape and the print order of a subtree answer."""
+        nodes = np.arange(v, v + int(self.size[v]), dtype=np.int64)
         if limit < 0:
-            return int(self.size[v])
-        seg = self.depth[v : v + int(self.size[v])]
-        return int(np.count_nonzero(seg <= self.depth[v] + limit))
+            return nodes
+        return nodes[self.depth[nodes] <= self.depth[v] + limit]
 
     def leaves_within(self, v: int, limit: int) -> int:
         """T5 — tips of ``v``'s subtree cut ``limit`` >= 0 levels below it:

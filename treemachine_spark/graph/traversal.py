@@ -9,7 +9,7 @@ for bulk) and the whole thing distributes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -30,6 +30,14 @@ def local_df(spark, rows: list[tuple], ddl: str) -> DataFrame:
         pd.DataFrame(rows, columns=[f.split()[0] for f in ddl.split(",")]), ddl
     )
 
+
+def ids_in(col: str, ids) -> Column:
+    """``col IN (ids)`` as one parsed expression, the one literal-IN rule
+    of the served path. ``Column.isin`` makes a JVM literal per id through
+    py4j, so its plan cost grows with the request by far more than the
+    parser's does."""
+    quoted = ("'" + i.replace("\\", "\\\\").replace("'", "\\'") + "'" for i in ids)
+    return F.expr(f"{col} IN ({','.join(quoted)})")
 
 
 def path_to_root(paths: DataFrame, node_id: str) -> DataFrame:
