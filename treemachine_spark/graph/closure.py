@@ -6,20 +6,43 @@ question by pointer-chasing Neo4j relationships one hop at a time
 substitute is a precomputed ``paths(node_id, ancestor_id, depth)`` table,
 after which MRCA / subtree / induced-subtree are single joins + aggregations.
 
-Construction uses **binary path-doubling**: O(log depth) self-joins instead
-of O(depth) sequential hops. On a tree, a path of length d > k decomposes
-uniquely into (first k hops) + (remaining d-k hops), so extending only the
-max-depth frontier produces no duplicates and needs no ``distinct()`` — at
-100 TB that saves one full shuffle+dedup per iteration. Lineage is cut with
-localCheckpoint each round so the plan stays flat; on a cluster use
-``spark.sparkContext.setCheckpointDir`` + ``checkpoint()`` for fault
-tolerance instead.
+Construction is **one driver pass plus one map-only job**. A tree's
+topology fits in O(n) driver arrays (as the reference builds its graph in
+one postorder pass over the in-memory tree, IngestSynthesisData.java:
+367-457, and ``graph/topology.TreeIndex`` holds it for serving), so the
+driver collects the edge list once, maps it to a parent array and computes
+every node's depth. The closure then has exactly sum(depth) rows, known
+before any job runs. The O(n * depth) rows themselves are made on the
+executors: each task climbs the ancestors of one slice of the nodes,
+sliced so every task emits about the same number of rows. No shuffle, no
+checkpoint, and nothing stays in Spark storage unless the caller caches
+the frame.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from treemachine_spark.graph.topology import parent_array
+
+
+def _depths(parent: np.ndarray) -> np.ndarray:
+    """The number of proper ancestors of every row of the parent array
+    ``parent`` (-1 at each root; a forest is fine), by pointer jumping:
+    ceil(log2(n)) vectorized rounds whatever the height. Raises
+    ValueError when the parent links contain a cycle."""
+    depth = (parent >= 0).astype(np.int64)
+    up = parent.copy()
+    for _ in range(len(parent).bit_length() + 1):
+        live = np.flatnonzero(up >= 0)
+        if not len(live):
+            return depth
+        depth[live] += depth[up[live]]
+        up[live] = up[up[live]]
+    raise ValueError("the parent links contain a cycle")
 
 
 def build_closure(edges: DataFrame, weight_col: str | None = None) -> DataFrame:
@@ -29,46 +52,67 @@ def build_closure(edges: DataFrame, weight_col: str | None = None) -> DataFrame:
     (GraphExplorer.getPathToRoot, opentree/GraphExplorer.java:795-814) and its
     precomputed long[] mrca arrays (opentree/GraphBase.java:28-43).
 
-    Invariant per iteration k (a power of two): ``full`` holds every path of
-    depth 1..k. ``top ⋈ full`` yields exactly the paths of depth k+1..2k.
+    One Arrow collect of the edges gives the parent array and the depths;
+    one ``mapInArrow`` job over ``defaultParallelism`` slices of the nodes
+    emits the rows, each task climbing its slice one level at a time. The
+    parent array, the ids and the weights travel once, as one broadcast.
+    Raises ValueError on a child with two parents, a cycle or a NULL id.
 
     ``weight_col`` (optional): an edge weight column (e.g. branch_length);
     the closure then also carries ``w_sum``, the per-path weight total,
-    accumulated by the same doubling joins — this is what turns hop
-    distance into true patristic distance on trees with branch lengths.
+    summed as the climb goes (NULL if any edge on the path has a NULL
+    weight) — this is what turns hop distance into true patristic distance
+    on trees with branch lengths.
     """
-    cols = [
-        F.col("child_id").alias("node_id"),
-        F.col("parent_id").alias("ancestor_id"),
-        F.lit(1).alias("depth"),
-    ]
+    spark = edges.sparkSession
+    cols = [F.col(c).cast("string").alias(c) for c in ("child_id", "parent_id")]
     if weight_col:
-        cols.append(F.col(weight_col).cast("double").alias("w_sum"))
-    full = edges.select(*cols).localCheckpoint(eager=True)
-    k = 1
-    while True:
-        top = full.where(F.col("depth") == k)
-        ext_cols = [
-            F.col("a.node_id").alias("node_id"),
-            F.col("b.ancestor_id").alias("ancestor_id"),
-            (F.col("a.depth") + F.col("b.depth")).alias("depth"),
-        ]
-        if weight_col:
-            ext_cols.append((F.col("a.w_sum") + F.col("b.w_sum")).alias("w_sum"))
-        ext = (
-            top.alias("a")
-            .join(full.alias("b"), F.col("a.ancestor_id") == F.col("b.node_id"))
-            .select(*ext_cols)
-        )
-        # materialize the (small) extension once; isEmpty and the union
-        # below then reuse it instead of re-running the join, and `full`
-        # stays a shallow union of checkpointed segments — the whole
-        # closure is never re-materialized per iteration.
-        ext = ext.localCheckpoint(eager=True)
-        if ext.isEmpty():
-            return full
-        full = full.unionByName(ext)
-        k *= 2
+        cols.append(F.col(weight_col).cast("double").alias("w"))
+    table = edges.select(*cols).toArrow()
+    ids, child, parent = parent_array(table["child_id"], table["parent_id"])
+    weight = valid = None  # per node: its parent edge's weight, and whether it is set
+    if weight_col:
+        w = table["w"].combine_chunks()
+        weight, valid = np.zeros(len(ids)), np.zeros(len(ids), bool)
+        weight[child] = w.fill_null(0.0).to_numpy()
+        valid[child] = w.is_valid().to_numpy(zero_copy_only=False)
+    # slices of consecutive nodes that each emit about total / n_slices rows
+    rows = np.cumsum(_depths(parent))
+    n_slices = spark.sparkContext.defaultParallelism
+    total = int(rows[-1]) if len(rows) else 0
+    cuts = np.searchsorted(rows, np.arange(1, n_slices) * total // n_slices, side="right")
+    cuts = np.concatenate([[0], cuts, [len(ids)]])
+    shared = spark.sparkContext.broadcast((parent.astype(np.int32), ids, weight, valid, cuts))
+
+    schema = "node_id string, ancestor_id string, depth int not null" + (
+        ", w_sum double" if weight_col else ""
+    )
+
+    def emit(batches):
+        parent, ids, weight, valid, cuts = shared.value
+        for batch in batches:
+            for part in batch.column(0).to_numpy():
+                node = np.arange(cuts[part], cuts[part + 1])
+                up = parent[node]
+                node, up = node[up >= 0], up[up >= 0]
+                if weight is not None:
+                    w_sum, w_ok = weight[node], valid[node]
+                depth = 1
+                while len(node):
+                    cols = [ids.take(node), ids.take(up), pa.array(np.full(len(node), depth, np.int32))]
+                    if weight is not None:
+                        cols.append(pa.array(w_sum, mask=~w_ok))
+                    names = ["node_id", "ancestor_id", "depth", "w_sum"][: len(cols)]
+                    yield pa.RecordBatch.from_arrays(cols, names=names)
+                    nxt = parent[up]
+                    keep = nxt >= 0
+                    if weight is not None:
+                        w_sum = (w_sum + weight[up])[keep]
+                        w_ok = (w_ok & valid[up])[keep]
+                    node, up = node[keep], nxt[keep]
+                    depth += 1
+
+    return spark.range(n_slices, numPartitions=n_slices).mapInArrow(emit, schema)
 
 
 def with_self_paths(paths: DataFrame, nodes: DataFrame) -> DataFrame:
@@ -82,4 +126,3 @@ def with_self_paths(paths: DataFrame, nodes: DataFrame) -> DataFrame:
         F.lit(0).alias("depth"),
     )
     return paths.unionByName(self_paths)
-

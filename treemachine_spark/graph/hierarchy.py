@@ -77,16 +77,17 @@ def hierarchy_closure(tables: dict[str, DataFrame]) -> DataFrame:
     """Ancestor closure (node_id, ancestor_id, depth>=1) of the leveled
     hierarchy, built WITHOUT iteration.
 
-    The generic ``graph/closure.build_closure`` (log-doubling self-joins)
-    handles arbitrary trees — newick ingest still uses it. But this hierarchy
-    has a statically known level structure, so its closure is exactly the
-    star-schema denormalization every warehouse does: prepend each level's
-    parent key to the parent level's ancestor array (a chain of dimension
-    joins), then ``posexplode`` the array into (ancestor, depth) rows.
+    The generic ``graph/closure.build_closure`` (a driver-side parent array
+    and one map-only emission job) handles arbitrary trees — newick ingest
+    still uses it. But this hierarchy has a statically known level
+    structure, so its closure is exactly the star-schema denormalization
+    every warehouse does: prepend each level's parent key to the parent
+    level's ancestor array (a chain of dimension joins), then
+    ``posexplode`` the array into (ancestor, depth) rows.
 
-    Cost model vs doubling, at any scale:
-      - doubling: 4 iterations x (self-join over the growing closure +
-        materialization barrier) — the closure itself is shuffled repeatedly.
+    Cost model vs the generic build, at any scale:
+      - generic: one collect of every edge to the driver, whose memory
+        bounds the tree size — fine for a tree, not for the fact tables.
       - here: region/nation ancestors need NO join (the parent key is in the
         row); customer and orders join a strictly-smaller dimension (Catalyst
         broadcasts under the threshold, AQE decides above it); the single

@@ -62,6 +62,32 @@ def _fixed_width(strings: pa.Array, width: int | None = None):
     return out.view(f"S{width}").ravel(), lens > width
 
 
+def parent_array(child_ids, parent_ids, node_ids=None):
+    """The node ids, the node row of each edge's child, and the parent
+    array of a child -> parent edge list: ``parent[v]`` is the row of
+    ``v``'s parent, -1 where ``v`` has no parent edge. Ids are Arrow
+    (chunked) arrays or plain sequences, mapped to rows with
+    ``pc.index_in``; ``node_ids`` defaults to the distinct edge ids,
+    children first. Raises ValueError on a NULL edge id, an edge id not
+    in ``node_ids`` or a child with two parent edges."""
+    child_ids = _arrow(child_ids, pa.string())
+    parent_ids = _arrow(parent_ids, pa.string())
+    if child_ids.null_count or parent_ids.null_count:
+        raise ValueError("edge ids must not be null")
+    ends = pa.concat_arrays([child_ids, parent_ids])
+    node_ids = pc.unique(ends) if node_ids is None else _arrow(node_ids, pa.string())
+    ends = pc.index_in(ends, value_set=node_ids)
+    if ends.null_count:
+        raise ValueError("an edge names a node that is not in the node table")
+    ends = ends.to_numpy().astype(np.int64)
+    child = ends[: len(child_ids)]
+    parent = np.full(len(node_ids), -1, np.int64)
+    parent[child] = ends[len(child_ids) :]
+    if np.bincount(child, minlength=len(node_ids)).max(initial=0) > 1:
+        raise ValueError("a child has two parent edges; each node has exactly one parent")
+    return node_ids, child, parent
+
+
 def _euler_preorder(parent: np.ndarray, rank: np.ndarray):
     """Preorder rank, depth and subtree size of every row of the parent
     array ``parent`` (-1 at the root); siblings are visited in ``rank``
@@ -140,18 +166,8 @@ class TreeIndex:
         key_rank = np.empty(n, np.int64)
         key_rank[by_key] = np.arange(n)
 
-        child_ids = _arrow(child_ids, pa.string())
-        ends = pc.index_in(
-            pa.concat_arrays([child_ids, _arrow(parent_ids, pa.string())]),
-            value_set=node_ids,
-        )
-        if ends.null_count:
-            raise ValueError("an edge names a node that is not in the node table")
-        ends = ends.to_numpy().astype(np.int64)
-        child = ends[: len(child_ids)]
-        parent = np.full(n, -1, np.int64)
-        parent[child] = ends[len(child_ids) :]
-        if len(child) != n - 1 or np.bincount(child, minlength=n).max() > 1:
+        _, child, parent = parent_array(child_ids, parent_ids, node_ids)
+        if len(child) != n - 1:
             raise ValueError("every node but the root needs exactly one parent edge")
         sibling_key = np.zeros(n, np.int64)
         sibling_key[child] = _arrow(child_index, pa.int64()).fill_null(0).to_numpy()

@@ -19,6 +19,12 @@ def get_spark(app_name: str = "treemachine-spark") -> SparkSession:
     only once AQE is on).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # Python workers import the package by name, whatever the driver's
+    # working directory: put the directory that holds it first on their path
+    package_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    worker_path = os.pathsep.join(
+        p for p in (package_parent, os.environ.get("PYTHONPATH")) if p
+    )
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -38,5 +44,6 @@ def get_spark(app_name: str = "treemachine-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
         .getOrCreate()
     )

@@ -358,12 +358,11 @@ def _rf_fingerprints(tables) -> tuple[DataFrame, DataFrame]:
     # r14 (guide §2.4, ingest): both trees have a STATICALLY KNOWN depth
     # (T1: c->n->r->root, T2: c->r->root), so their closures are analytic
     # level-frame unions (the hierarchy_closure recipe) instead of the
-    # generic log-doubling build — build_closure pays an eager
-    # localCheckpoint barrier + isEmpty probe per doubling round (2-3
-    # rounds x 2 trees of serialized materialization on the ingest
-    # critical path). The frame closure is one lazy union of projections;
-    # the only join is customer ⋈ broadcast(nation frame) for T1's
-    # grandparent — fingerprint values are identical (same path sets).
+    # generic build — build_closure collects every edge to the driver
+    # before its emission job (a serialized driver round trip per tree on
+    # the ingest critical path). The frame closure is one lazy union of
+    # projections; the only join is customer ⋈ broadcast(nation frame) for
+    # T1's grandparent — fingerprint values are identical (same path sets).
     root_arr = F.array(F.lit("root"))
     p_reg = reg.select(F.col("child_id").alias("node_id"), root_arr.alias("anc"))
     p_nat = nat.select(
