@@ -3,9 +3,9 @@
 Serves the complete nested-blob arguson for a synthetic tree at the
 production size (default 2.42M tips — 97x the reference's 25k arguson
 cap, tree_of_life_v3.java:592,711-716) through the distributed fragment
-path with the fanout-aware anchor pick
-(exporters/newick_sink.pick_anchor_depth), and reports which anchor depth
-the shape analysis chose plus the per-level profile it chose from.
+path with the fanout-aware anchor pick on the topology index
+(graph/topology.TreeIndex.anchor_depth), and reports which anchor depth
+it chose and how long the pick took.
 
 Run: python bench_arguson.py [n_tips] — prints one JSON line.
 """
@@ -21,10 +21,7 @@ from bench_http import build_synth_store
 
 def main() -> None:
     n_tips = int(sys.argv[1]) if len(sys.argv) > 1 else 2_420_000
-    from pyspark.sql import functions as F
-
     from treemachine_spark.api.v3 import TreeOfLifeV3
-    from treemachine_spark.exporters.newick_sink import pick_anchor_depth
     from treemachine_spark.session import get_spark
 
     spark = get_spark("treemachine-arguson-bench")
@@ -32,14 +29,9 @@ def main() -> None:
     store, _tips, n_edges, build_sec = build_synth_store(spark, n_tips)
     api = TreeOfLifeV3(store)
 
-    # report the shape analysis the serving path will run
-    member = store.edges.select(F.col("child_id").alias("node_id"))
-    rd = (
-        store.paths.where(F.col("ancestor_id") == "n0")
-        .select("node_id", "depth")
-    ).localCheckpoint(eager=True)
+    # report the pick the serving path will make (n0 is index node 0)
     t0 = time.time()
-    chosen = pick_anchor_depth(rd, member, store.paths)
+    chosen = api.index.anchor_depth(api.index.members(0, 999))
     pick_sec = round(time.time() - t0, 2)
 
     t0 = time.time()

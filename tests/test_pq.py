@@ -218,21 +218,57 @@ def test_codes_without_codebook_rejected(ctx, spark):
         pq.ivf_pq_topk(emb, q, k=5, codes=codes)
 
 
-def test_mismatched_codes_shape_rejected(ctx, spark):
-    """Codes encoded with different m / n_codes than the supplied codebook
-    are caught by the shape probe, not silently mis-scored."""
+def _persisted(out, codebook, codes) -> str:
+    """An index directory holding ``codebook`` and ``codes`` in
+    write_pq_index's layout."""
+    import json
+    import os
+
+    codes.write.mode("overwrite").parquet(os.path.join(out, "codes.parquet"))
+    with open(os.path.join(out, "codebook.json"), "w") as fh:
+        json.dump({"m": len(codebook), "n_codes": len(codebook[0]), "codebook": codebook}, fh)
+    return str(out)
+
+
+def test_mismatched_codes_shape_rejected(ctx, spark, tmp_path):
+    """Codes encoded with different m / n_codes than the persisted codebook
+    are caught by the shape probe when the index is loaded, not silently
+    mis-scored."""
     emb = ctx["emb"]
-    q = emb.where(F.col("vec_id") < 2)
     # m=4 codes vs the m=8 ctx codebook
     cb4 = pq.pq_train(emb, m=4, n_codes=16, iters=1, train_rows=200)
     codes4 = pq.pq_encode(emb, cb4)
     with pytest.raises(ValueError, match="does not match codebook"):
-        pq.ivf_pq_topk(emb, q, k=5, codebook=ctx["codebook"], codes=codes4)
+        pq.read_pq_index(spark, _persisted(tmp_path / "m4", ctx["codebook"], codes4))
     # out-of-range code values vs a narrower codebook
     cb8_small = [sub[:8] for sub in ctx["codebook"]]
     codes16 = pq.pq_encode(emb, ctx["codebook"])
     with pytest.raises(ValueError, match="does not match codebook"):
-        pq.ivf_pq_topk(emb, q, k=5, codebook=cb8_small, codes=codes16)
+        pq.read_pq_index(spark, _persisted(tmp_path / "c8", cb8_small, codes16))
+
+
+def test_loaded_codes_plan_starts_no_job(ctx, spark, tmp_path):
+    """The shape probe runs once, where codes come in from disk: building
+    the ivf_pq_topk plan that api/ann.AnnIndex builds for every pq request
+    (loaded codes, precomputed cells, a local query frame) starts no Spark
+    job."""
+    emb = ctx["emb"]
+    codebook, codes, rotation = pq.read_pq_index(
+        spark, _persisted(tmp_path, ctx["codebook"], pq.pq_encode(emb, ctx["codebook"]))
+    )
+    cells = similarity.ivf_cells(emb, 4)
+    sel = emb.select("vec_id", "embedding")
+    q = spark.createDataFrame(sel.limit(2).toPandas(), sel.schema)
+    sc = spark.sparkContext
+    sc.setJobGroup("pq-plan", "ivf_pq_topk plan over loaded codes")
+    try:
+        pq.ivf_pq_topk(
+            emb, q, k=5, codebook=codebook, codes=codes, rotation=rotation,
+            rerank=True, cells=cells,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("pq-plan")) == []
 
 
 def test_rotation_without_codebook_rejected(ctx, spark):
@@ -246,20 +282,19 @@ def test_rotation_without_codebook_rejected(ctx, spark):
         pq.ivf_pq_topk(emb, q, k=5, rotation=ident)
 
 
-def test_degenerate_codes_rows_get_clean_diagnostic(ctx, spark):
+def test_degenerate_codes_rows_get_clean_diagnostic(ctx, spark, tmp_path):
     """ADVICE r7: an empty codes array used to crash the probe's error
     formatting with 'max() arg is an empty sequence', and a NULL codes
     value with a TypeError — both must surface the shape diagnostic."""
     emb = ctx["emb"]
-    q = emb.where(F.col("vec_id") < 2)
     empty = emb.select("vec_id", F.array().cast("array<int>").alias("codes"))
     with pytest.raises(ValueError, match="codes empty"):
-        pq.ivf_pq_topk(emb, q, k=5, codebook=ctx["codebook"], codes=empty)
+        pq.read_pq_index(spark, _persisted(tmp_path / "empty", ctx["codebook"], empty))
     nulls = emb.select(
         "vec_id", F.lit(None).cast("array<int>").alias("codes")
     )
     with pytest.raises(ValueError, match="codes=NULL"):
-        pq.ivf_pq_topk(emb, q, k=5, codebook=ctx["codebook"], codes=nulls)
+        pq.read_pq_index(spark, _persisted(tmp_path / "nulls", ctx["codebook"], nulls))
 
 
 def test_opq_undersized_training_sample_rejected(ctx, spark):

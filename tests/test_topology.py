@@ -10,6 +10,7 @@ import random
 
 import pytest
 
+from treemachine_spark.graph import topology
 from treemachine_spark.graph.topology import TreeIndex
 
 # -- Spark-free: random trees against a brute-force parent map ---------------
@@ -89,6 +90,25 @@ class Brute:
         (root,) = kept - {c for c, _ in edges}
         return root, edges
 
+    def anchor_depth(self, v, limit, target, top) -> int:
+        """The fragment tier's cut of ``v``'s subtree within ``limit``:
+        level by level, the cumulative width and the largest fragment (an
+        anchor plus its descendants within the limit)."""
+        within = {u: self.dist(u, v) for u in self.below(v)}
+        within = {u: d for u, d in within.items() if limit < 0 or d <= limit}
+        cum, best = 0, None
+        for d in range(1, max(within.values()) + 1):
+            level = [u for u, k in within.items() if k == d]
+            cum += len(level)
+            if cum > top:
+                break
+            largest = max(len(self.below(u) & within.keys()) for u in level)
+            if best is None or largest < best[0]:
+                best = (largest, d)
+            if largest <= target:
+                return d
+        return best[1] if best else 1
+
 
 def index_of(parent: dict[int, int], n: int, named: set, rng: random.Random):
     """The TreeIndex of a parent map, rows handed over in a shuffled order.
@@ -133,7 +153,7 @@ TREES = [
 
 @pytest.mark.parametrize("shape", [t[0] for t in TREES])
 @pytest.mark.parametrize("seed", [1, 2, 3])
-def test_index_matches_brute_force(shape, seed):
+def test_index_matches_brute_force(shape, seed, monkeypatch):
     rng = random.Random(seed)
     parent, n = dict(TREES)[shape](rng)
     named = {v for v in range(n) if rng.random() < 0.4}
@@ -178,6 +198,14 @@ def test_index_matches_brute_force(shape, seed):
         want_root, want_edges = bf.induced(nodes)
         assert back[root] == want_root
         assert {(back[c], back[p]) for c, p in edges} == want_edges
+
+    for v in {0, *rng.sample(range(n), min(n, 4))}:
+        for limit in (-1, 2):
+            for target, top in ((0, 10**6), (3, 12), (10, 10**6)):
+                monkeypatch.setattr(topology, "FRAGMENT_TARGET", target)
+                monkeypatch.setattr(topology, "TOP_MAX", top)
+                got = ix.anchor_depth(ix.members(node[v], limit))
+                assert got == bf.anchor_depth(v, limit, target, top), (v, limit, target, top)
 
 
 def test_index_id_maps():

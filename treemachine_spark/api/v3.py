@@ -26,16 +26,19 @@ Subtree answers, newick and arguson alike, take one flow: the opt-in size
 guard, then the node's members within the height limit as one preorder
 walk on the index (``TreeIndex.members``), whose length is the one size
 gate (``FRAGMENT_TIER_EDGES``). Both tiers select members by one rule
-(``_member``: the closure rows below the node within the limit). Below
-the gate the index gives the parent links and child order, and Spark runs
-one union fetch over the member frame: newick fetches the members' labels
-and their distinct supported_by keys, arguson their blob fields and the T9
-names of the unnamed ones; the lineage blobs are a second fetch. Past the
-gate ``exporters.newick_sink.anchored_fragments`` assembles one fragment
-per anchor executor-side from the member edges and the driver stitches the
-top levels. Every newick answer shares one label rule (``_label_col``);
-both subtree tiers share one nesting rule (``_nest_blobs``) and one blob
-constructor (``_blob_from_dict``).
+(``_member``: the closure rows below the node within the limit), and the
+index gives the parent links and child order of every printed node
+(``_shape``). Below the gate Spark runs one union fetch over the member
+frame: newick fetches the members' labels and their distinct supported_by
+keys, arguson their blob fields and the T9 names of the unnamed ones; the
+lineage blobs are a second fetch. Past the gate the index also picks the
+anchor depth (``TreeIndex.anchor_depth``);
+``exporters.newick_sink.anchored_fragments`` assembles one fragment per
+anchor executor-side, reading the closure only to map each member to its
+anchor, and the driver fetches and stitches the levels above the anchors.
+Every newick answer shares one label rule (``_label_col``); both subtree
+tiers share one nesting rule (``_nest_blobs``) and one blob constructor
+(``_blob_from_dict``).
 """
 
 from __future__ import annotations
@@ -47,11 +50,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from treemachine_spark.api.errors import BadIdsError, BadInputError, TreeTooBigError
-from treemachine_spark.exporters.newick_sink import (
-    anchored_fragments,
-    assemble_newick,
-    distributed_newick,
-)
+from treemachine_spark.exporters.newick_sink import anchored_fragments, assemble_newick
 from treemachine_spark.graph import traversal as T
 from treemachine_spark.graph.topology import TreeIndex
 from treemachine_spark.ingest import GraphStore
@@ -177,6 +176,20 @@ def _make_arguson_asm(default_num_tips: int):
         return pd.DataFrame({"anchor": [anchor], "frag": [json.dumps(frag)]})
 
     return asm
+
+
+def _newick_asm(pdf):
+    """Per-fragment assembler of the newick fragment tier: one call per
+    anchor, assembling the anchor's fragment (its own label included) from
+    its (child_id, parent_id, child_index, label) rows; the driver stitches
+    it in as a leaf override."""
+    import pandas as pd
+
+    anchor = pdf["anchor"].iloc[0]
+    order = pdf["child_index"].fillna(0).astype(int)
+    rows = zip(pdf["child_id"], pdf["parent_id"], [None] * len(pdf), order)
+    labels = {c: lab for c, lab in zip(pdf["child_id"], pdf["label"]) if isinstance(lab, str)}
+    return pd.DataFrame({"anchor": [anchor], "frag": [assemble_newick(rows, anchor, labels)[:-1]]})
 
 
 # The reference's static files host for preprocessed source trees
@@ -400,12 +413,6 @@ class TreeOfLifeV3:
         unnamed = F.col("node_id") if ids_for_unnamed else F.lit("")
         return F.when(F.col("name").isNotNull(), named).otherwise(unnamed)
 
-    def _labels_df(self, member, label_format: str, ids_for_unnamed: bool):
-        """(node_id, label) of the ``member`` nodes under ``_label_col``."""
-        return self.store.nodes.join(member, "node_id", "left_semi").select(
-            "node_id", self._label_col(label_format, ids_for_unnamed).alias("label")
-        )
-
     @staticmethod
     def _check_label_format(label_format: str | None) -> str:
         if label_format is None:
@@ -556,12 +563,22 @@ class TreeOfLifeV3:
         me = self.store.nodes.where(F.col("node_id") == qid).select("node_id")
         return member, member.unionByName(me)
 
-    def _member_edges(self, member: DataFrame) -> DataFrame:
-        """The edges of the fragment tier: every member's edge to its
-        parent, which is a member or the subtree's root."""
-        return self.store.edges.join(
+    def _fragments(self, nodes, member: DataFrame, assemble, node_cols) -> tuple[dict, int]:
+        """The fragment tier of the ``TreeIndex.members`` walk ``nodes``:
+        the index picks the anchor depth, and
+        ``exporters.newick_sink.anchored_fragments`` runs ``assemble`` per
+        anchor over every member's edge to its parent (a member or the
+        subtree's root), joined with ``node_cols``. Returns the fragments
+        by anchor id and the anchor depth."""
+        anchor_depth = self.index.anchor_depth(nodes)
+        edges = self.store.edges.join(
             member.withColumnRenamed("node_id", "child_id"), "child_id", "left_semi"
+        ).select("child_id", "parent_id", "child_index")
+        qid = self.index.ids(nodes[:1])[0]
+        frags = anchored_fragments(
+            edges, self.store.paths, qid, anchor_depth, assemble, node_cols
         )
+        return frags, anchor_depth
 
     def _shape(self, nodes) -> list[tuple]:
         """The (child_id, parent_id, rank) rows of a ``TreeIndex.members``
@@ -590,28 +607,37 @@ class TreeOfLifeV3:
             )
 
     def _subtree_newick(self, nodes, depth, label_format, ids_for_unnamed) -> dict:
-        """T4/T7 newick. Below the gate the shape comes from the index and
-        one job fetches the members' labels (``qid``'s too) and their
-        distinct supported_by keys; past it the fragment tier assembles the
-        member edges executor-side."""
-        qid = self.index.ids(nodes[:1])[0]
+        """T4/T7 newick. The shape comes from the index and one job fetches
+        the labels of the printed nodes (``qid``'s too) and the members'
+        distinct supported_by keys. Below the gate every member is printed;
+        past it the index cuts the subtree at an anchor depth, the fragment
+        tier assembles each anchor's fragment (labels joined in
+        executor-side) and the driver prints the levels above the
+        anchors."""
+        v = int(nodes[0])
+        qid = self.index.ids([v])[0]
         member, member_plus = self._member(qid, depth)
-        labels_df = self._labels_df(member_plus, label_format, ids_for_unnamed)
-        sources_df = self._distinct_sources_df(member)
+        label = self._label_col(label_format, ids_for_unnamed).alias("label")
+        frags = None
         if len(nodes) - 1 > FRAGMENT_TIER_EDGES:
-            sources = {r["s"] for r in sources_df.collect()}
-            newick = distributed_newick(
-                self._member_edges(member), self.store.paths, qid, labels_df
+            frags, anchor_depth = self._fragments(
+                nodes, member, _newick_asm, self.store.nodes.select("node_id", label)
             )
+            nodes = self.index.members(v, anchor_depth)
+            above = self.index.ids(self.index.members(v, anchor_depth - 1))
+            labels_df = self.store.nodes.where(T.ids_in("node_id", above))
         else:
-            fetched = labels_df.unionByName(sources_df, allowMissingColumns=True).toArrow()
-            ids, labs, keys = (fetched[c].to_pylist() for c in ("node_id", "label", "s"))
-            labels = {i: lab for i, lab in zip(ids, labs) if i is not None}
-            sources = {k for i, k in zip(ids, keys) if i is None}
-            rows = self._shape(nodes)
-            newick = assemble_newick([(c, p, None, k) for c, p, k in rows], qid, labels)
+            labels_df = self.store.nodes.join(member_plus, "node_id", "left_semi")
+        labels_df = labels_df.select("node_id", label)
+        fetched = labels_df.unionByName(
+            self._distinct_sources_df(member), allowMissingColumns=True
+        ).toArrow()
+        ids, labs, keys = (fetched[c].to_pylist() for c in ("node_id", "label", "s"))
+        labels = {i: lab for i, lab in zip(ids, labs) if i is not None}
+        sources = {k for i, k in zip(ids, keys) if i is None}
+        rows = [(c, p, None, k) for c, p, k in self._shape(nodes)]
         return {
-            "newick": newick,
+            "newick": assemble_newick(rows, qid, labels, leaf_overrides=frags),
             "supporting_studies": self._supporting_studies(sources),
         }
 
@@ -635,7 +661,7 @@ class TreeOfLifeV3:
                 r["s"]
                 for r in self._distinct_sources_df(member_plus, tuple(_ANN_FIELDS)).collect()
             }
-            top = self._arguson_distributed(qid, self._member_edges(member), member)
+            top = self._arguson_distributed(nodes, member)
         else:
             rows = self._shape(nodes)
             blobs = self._node_blobs(nodes, member_plus, descendant_names=True)
@@ -648,15 +674,17 @@ class TreeOfLifeV3:
         top["source_id_map"] = self._source_id_map(sources)
         return top
 
-    def _arguson_distributed(self, qid: str, edges, member) -> dict:
-        """Arguson through exporters.newick_sink.anchored_fragments: each
-        member's blob fields are serialized executor-side (to_json struct),
-        each anchor's nested blob is built by one applyInPandas call, and
-        the driver nests only the top levels above the anchors — so driver
-        work is O(result dict), never O(edge rows collected + per-row
-        Python blob building)."""
+    def _arguson_distributed(self, nodes, member) -> dict:
+        """Arguson through the fragment tier (``_fragments``): each member's
+        blob fields are serialized executor-side (to_json struct), each
+        anchor's nested blob is built by one applyInPandas call, and the
+        driver fetches and nests only the levels above the anchors, whose
+        shape comes from the index — so driver work is O(result dict),
+        never O(edge rows collected + per-row Python blob building)."""
         import json
 
+        v = int(nodes[0])
+        qid = self.index.ids([v])[0]
         # rep names only for unnamed members (pre-filter paths so the T9
         # aggregate runs over the request's subtree, not the whole store)
         unnamed_members = (
@@ -700,19 +728,12 @@ class TreeOfLifeV3:
             )
         )
         asm = _make_arguson_asm(int(self.store.tree_meta.get("num_tips", 0)))
-        frags, rows = anchored_fragments(
-            edges.select("child_id", "parent_id", "child_index"),
-            self.store.paths,
-            qid,
-            asm,
-            info,
-        )
+        frags, anchor_depth = self._fragments(nodes, member, asm, info)
         # the anchors' blobs (their descendant_name_list included) are the
         # fragments; the driver fetches the levels above them
-        top = [r["child_id"] for r in rows if r["child_id"] not in frags] + [qid]
-        blobs = self._node_blobs(self.index.lookup(top), descendant_names=True)
+        blobs = self._node_blobs(self.index.members(v, anchor_depth - 1), descendant_names=True)
         blobs.update({a: json.loads(f) for a, f in frags.items()})
-        return _nest_blobs(qid, rows, blobs)
+        return _nest_blobs(qid, self._shape(self.index.members(v, anchor_depth)), blobs)
 
     def induced_subtree(self, node_ids=None, ott_ids=None, label_format=None) -> dict:
         """doInducedSubtree (tree_of_life_v3.java:411-518): T6 on the index

@@ -325,8 +325,9 @@ def ivf_pq_topk(
     PQ codes per candidate and sums m LUT entries (``adc_score``).
 
     ``codebook``/``codes`` accept a pre-trained codebook and a
-    pre-encoded (id, codes) table — the ingest-artifact deployment; both
-    are derived on the fly when omitted. ``rotation`` is the OPQ matrix
+    pre-encoded (id, codes) table — the ingest-artifact deployment, whose
+    shapes read_pq_index checks once at load; both are derived on the fly
+    when omitted. ``rotation`` is the OPQ matrix
     the codebook was trained with (opq_train): it rotates the on-the-fly
     encode and the query LUT; coarse cells and the exact re-rank use the
     ORIGINAL vectors (rotation is orthogonal — rankings are invariant).
@@ -371,33 +372,6 @@ def ivf_pq_topk(
         )
     if codes is None:
         codes = pq_encode(embeddings, codebook, id_col, vec_col, rotation)
-    else:
-        # LIMIT-bounded shape probe (the v4 guard discipline): never a
-        # full-table scan, but enough rows to catch out-of-range codes
-        probe = [
-            r["c"]
-            for r in codes.select(F.col("codes").alias("c")).limit(256).collect()
-        ]
-        # a NULL codes value is itself the offense — len()/iteration on it
-        # (or max() of an empty array) would mask the diagnostic with a
-        # TypeError / 'max() arg is an empty sequence' (ADVICE r7)
-        def _row_shape(row):
-            if row is None:
-                return "codes=NULL"
-            if len(row) != len(codebook) or any(
-                c < 0 or c >= len(codebook[0]) for c in row
-            ):
-                return f"m={len(row)}" + (
-                    f", max_code={max(row)}" if row else ", codes empty"
-                )
-            return None
-
-        bad = next((s for s in map(_row_shape, probe) if s is not None), None)
-        if bad is not None:
-            raise ValueError(
-                f"ivf_pq_topk: codes shape ({bad}) does not match "
-                f"codebook (m={len(codebook)}, n_codes={len(codebook[0])})"
-            )
     n_codes = len(codebook[0])
 
     # coarse cells: a precomputed similarity.ivf_cells artifact when the
@@ -620,7 +594,33 @@ def read_pq_index(spark, out_dir: str):
     # file listing (r12 sharded-soak lesson)
     spark.catalog.refreshByPath(os.path.join(out_dir, "codes.parquet"))
     codes = spark.read.parquet(os.path.join(out_dir, "codes.parquet"))
+    _check_codes(blob["codebook"], codes)
     return blob["codebook"], codes, blob.get("rotation")
+
+
+def _check_codes(codebook, codes: DataFrame) -> None:
+    """LIMIT-bounded shape probe of loaded codes against their codebook
+    (the v4 guard discipline): never a full-table scan, but enough rows to
+    catch codes encoded with another m or n_codes. It runs once per load,
+    so serving a request over the loaded codes starts no job for it."""
+    probe = [r["c"] for r in codes.select(F.col("codes").alias("c")).limit(256).collect()]
+
+    # a NULL codes value is itself the offense — len()/iteration on it
+    # (or max() of an empty array) would mask the diagnostic with a
+    # TypeError / 'max() arg is an empty sequence' (ADVICE r7)
+    def _row_shape(row):
+        if row is None:
+            return "codes=NULL"
+        if len(row) != len(codebook) or any(c < 0 or c >= len(codebook[0]) for c in row):
+            return f"m={len(row)}" + (f", max_code={max(row)}" if row else ", codes empty")
+        return None
+
+    bad = next((s for s in map(_row_shape, probe) if s is not None), None)
+    if bad is not None:
+        raise ValueError(
+            f"read_pq_index: codes shape ({bad}) does not match "
+            f"codebook (m={len(codebook)}, n_codes={len(codebook[0])})"
+        )
 
 
 def pq_append(

@@ -11,7 +11,8 @@ GraphExplorer.java:795-814; getDraftTreeMRCA, :617-650; getInducedSubtree,
 request needs Spark only to fetch the rows of the ids in its answer. A
 subtree's shape comes from it too, as the reference rebuilds a
 depth-limited subtree in one process
-(GraphExplorer.reconstructDepthLimitedSubtree, GraphExplorer.java:539-574).
+(GraphExplorer.reconstructDepthLimitedSubtree, GraphExplorer.java:539-574),
+and so does the cut of a large subtree into executor-side fragments.
 
 Siblings are ordered as newick answers print them, by (``child_index``,
 node id), so a node's preorder range is also its subtree in answer order.
@@ -29,6 +30,13 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+
+# anchor-depth bounds of the fragment tier, read at call time: a fragment
+# is one applyInPandas group, so its size is executor-memory-bound; the
+# levels above the anchors are stitched on the driver, so their cumulative
+# width is driver-bound
+FRAGMENT_TARGET = 100_000
+TOP_MAX = 200_000
 
 
 def _arrow(values, type_) -> pa.Array:
@@ -319,6 +327,37 @@ class TreeIndex:
         if limit < 0:
             return nodes
         return nodes[self.depth[nodes] <= self.depth[v] + limit]
+
+    def anchor_depth(self, nodes) -> int:
+        """The fragment tier's cut of the ``members`` walk ``nodes``: the
+        shallowest level below its root whose largest fragment fits
+        ``FRAGMENT_TARGET``, never letting levels 1..d exceed ``TOP_MAX``
+        nodes; when no level fits, the level with the smallest largest
+        fragment. A fragment is an anchor plus its descendants among
+        ``nodes``, ``searchsorted(nodes, u + size[u]) - rank(u)``, so a
+        depth-limited walk counts only its members.
+
+        On a balanced fanout-f tree this is the smallest d with
+        n/f^d <= FRAGMENT_TARGET; on a caterpillar every level has one
+        giant fragment, so it is the deepest level the driver stitch can
+        afford. The largest fragment strictly shrinks with depth, so
+        ``FRAGMENT_TARGET = 0`` with ``TOP_MAX`` set to the node count of
+        levels 1..d forces depth d."""
+        nodes = np.asarray(nodes, np.int64)
+        level = (self.depth[nodes] - self.depth[nodes[0]])[1:]
+        frag = (np.searchsorted(nodes, nodes + self.size[nodes]) - np.arange(len(nodes)))[1:]
+        cum = np.cumsum(np.bincount(level))
+        largest = np.zeros(len(cum), np.int64)
+        np.maximum.at(largest, level, frag)
+        best = None
+        for d in range(1, len(cum)):
+            if cum[d] > TOP_MAX:
+                break
+            if best is None or largest[d] < largest[best]:
+                best = d
+            if largest[d] <= FRAGMENT_TARGET:
+                return d
+        return best or 1
 
     def leaves_within(self, v: int, limit: int) -> int:
         """T5 — tips of ``v``'s subtree cut ``limit`` >= 0 levels below it:
