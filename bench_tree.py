@@ -65,7 +65,7 @@ def synthetic_tree_edges(spark, n_tips: int, fanout: int = 10):
 
 def main() -> None:
     n_tips = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
-    from treemachine_spark.api.v3 import FRAGMENT_TIER_EDGES
+    from treemachine_spark.graph.topology import FRAGMENT_TIER_EDGES
     from treemachine_spark.exporters.newick_sink import assemble_newick
     from treemachine_spark.graph import traversal as T
     from treemachine_spark.graph.closure import build_closure, with_self_paths

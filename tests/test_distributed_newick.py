@@ -37,7 +37,7 @@ def _check_tree(spark, monkeypatch, pairs, labels: dict, anchor_depths):
             return picked[-1]
 
         with monkeypatch.context() as m:
-            m.setattr(v3, "FRAGMENT_TIER_EDGES", 0)
+            m.setattr(topology, "FRAGMENT_TIER_EDGES", 0)
             if anchor_depth != "auto":
                 m.setattr(topology, "FRAGMENT_TARGET", 0)
                 m.setattr(topology, "TOP_MAX", sum(depth(c) <= anchor_depth for c in parent))

@@ -9,8 +9,8 @@ from pathlib import Path
 import pytest
 
 from treemachine_spark.api.errors import BadIdsError, BadInputError
-from treemachine_spark.api import v3
 from treemachine_spark.api.v3 import TreeOfLifeV3
+from treemachine_spark.graph import topology
 from treemachine_spark.ingest import ingest_synthesis_data
 
 FIX = Path(__file__).parent / "fixtures"
@@ -189,7 +189,7 @@ def test_arguson_distributed_matches_driver(api, monkeypatch):
     (supported_by & co. via to_json → _blob_from_dict) byte-equal to the
     driver assembly, lineage and source_id_map included."""
     driver = api.subtree(ott_id=81461, tree_format="arguson")["arguson"]
-    monkeypatch.setattr(v3, "FRAGMENT_TIER_EDGES", 0)  # force the fragment tier
+    monkeypatch.setattr(topology, "FRAGMENT_TIER_EDGES", 0)  # force the fragment tier
     dist = api.subtree(ott_id=81461, tree_format="arguson")["arguson"]
     assert dist == driver
     assert dist["source_id_map"]  # real sources crossed the json boundary
@@ -230,7 +230,7 @@ def test_named_node_without_ott_id_keeps_its_name(store, monkeypatch):
     assert api.subtree(node_id="ott81461")["newick"] == want
     induced = api.induced_subtree(node_ids=["ott536234", "ott316878"])["newick"]
     assert induced == "(Gavia,Struthio_ott536234)Aves_ott81461;"
-    monkeypatch.setattr(v3, "FRAGMENT_TIER_EDGES", 0)  # force the fragment tier
+    monkeypatch.setattr(topology, "FRAGMENT_TIER_EDGES", 0)  # force the fragment tier
     assert api.subtree(node_id="ott81461")["newick"] == want
     for taxon in gavia_taxa():
         assert {f: taxon[f] for f in want_taxon} == want_taxon

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from treemachine_spark.api import v3
+from treemachine_spark.graph import topology
 
 
 @pytest.fixture(scope="module")
@@ -84,7 +84,7 @@ def test_distributed_equals_driver_assembly(big_api, monkeypatch):
         for include_all in (False, True)
     ]
     driver = [big_api.subtree(**kw)["newick"] for kw in cases]
-    monkeypatch.setattr(v3, "FRAGMENT_TIER_EDGES", 10)  # force the fragment tier
+    monkeypatch.setattr(topology, "FRAGMENT_TIER_EDGES", 10)  # force the fragment tier
     for kw, want in zip(cases, driver):
         assert big_api.subtree(**kw)["newick"] == want, kw
 
@@ -127,7 +127,7 @@ def test_distributed_arguson_equals_driver(big_api, monkeypatch):
     for the fixture's unnamed nodes)."""
     api = big_api
     driver = api.subtree(node_id="n1", tree_format="arguson")["arguson"]
-    monkeypatch.setattr(v3, "FRAGMENT_TIER_EDGES", 10)  # force the fragment tier
+    monkeypatch.setattr(topology, "FRAGMENT_TIER_EDGES", 10)  # force the fragment tier
     dist = api.subtree(node_id="n1", tree_format="arguson")["arguson"]
     assert dist == driver
     # the blob tree is real: nested children + num_tips + lineage present
@@ -143,7 +143,6 @@ def test_anchor_depth_auto_balanced_vs_caterpillar(monkeypatch):
     small fragments — it goes as deep as the driver-stitch budget allows
     instead of pinning a near-root anchor that owns the whole tree; on a
     height-limited member set a fragment counts only members."""
-    from treemachine_spark.graph import topology
     from treemachine_spark.graph.topology import TreeIndex
 
     def index_of(edge_list):
@@ -162,7 +161,9 @@ def test_anchor_depth_auto_balanced_vs_caterpillar(monkeypatch):
             bal.append((f"b{i}_{j}", f"a{i}"))
             bal.extend((f"c{i}_{j}_{k}", f"b{i}_{j}") for k in range(10))
     ix = index_of(bal)
-    # depth-1 fragments hold 111 nodes, depth-2 fragments 11
+    # depth-1 fragments hold 111 nodes, depth-2 fragments 11; every walk
+    # here passes a gate of 0 edges
+    monkeypatch.setattr(topology, "FRAGMENT_TIER_EDGES", 0)
     monkeypatch.setattr(topology, "FRAGMENT_TARGET", 200)
     assert ix.anchor_depth(ix.members(0)) == 1
     monkeypatch.setattr(topology, "FRAGMENT_TARGET", 50)
@@ -192,14 +193,14 @@ def test_fragment_tier_takes_its_shape_from_the_index(big_api, spark, monkeypatc
     """A fragment-tier newick and arguson pick their anchor depth and top
     levels on the index: a request leaves no RDD in Spark storage (a
     checkpoint held there outlives the request until the driver JVM
-    collects it) and starts at most 17 jobs for the newick and 24 for the
-    arguson — 8 fewer, the cost of a closure-based pick, than the 25 and
-    32 those requests took with one."""
-    monkeypatch.setattr(v3, "FRAGMENT_TIER_EDGES", 10)
+    collects it) and starts at most 9 jobs for the newick and 16 for the
+    arguson. The arguson's 16 are 2 fewer than with a blob frame built
+    over the whole store and a separate source-key job (18)."""
+    monkeypatch.setattr(topology, "FRAGMENT_TIER_EDGES", 10)
     sc = spark.sparkContext
     budget = [
-        (dict(node_id="n1", label_format="id"), 25 - 8),
-        (dict(node_id="n1", tree_format="arguson"), 32 - 8),
+        (dict(node_id="n1", label_format="id"), 9),
+        (dict(node_id="n1", tree_format="arguson"), 16),
     ]
 
     def held():
@@ -225,7 +226,7 @@ def test_arguson_full_tree_beyond_reference_cap(big_api, monkeypatch):
     """The reference 400s arguson past 25k tips (tree_of_life_v3.java:592);
     the distributed fragment path serves the FULL ~111k-node fixture tree
     (4.4x that cap; measured ~12 s cold on local[32])."""
-    monkeypatch.setattr(v3, "FRAGMENT_TIER_EDGES", 10)
+    monkeypatch.setattr(topology, "FRAGMENT_TIER_EDGES", 10)
     arg = big_api.subtree(node_id="n0", tree_format="arguson", height_limit=99)["arguson"]
     n, stack = 0, [arg]
     while stack:

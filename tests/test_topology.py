@@ -90,12 +90,15 @@ class Brute:
         (root,) = kept - {c for c, _ in edges}
         return root, edges
 
-    def anchor_depth(self, v, limit, target, top) -> int:
+    def anchor_depth(self, v, limit, gate, target, top) -> int | None:
         """The fragment tier's cut of ``v``'s subtree within ``limit``:
-        level by level, the cumulative width and the largest fragment (an
-        anchor plus its descendants within the limit)."""
+        none up to ``gate`` edges, else level by level, the cumulative
+        width and the largest fragment (an anchor plus its descendants
+        within the limit)."""
         within = {u: self.dist(u, v) for u in self.below(v)}
         within = {u: d for u, d in within.items() if limit < 0 or d <= limit}
+        if len(within) - 1 <= gate:
+            return None
         cum, best = 0, None
         for d in range(1, max(within.values()) + 1):
             level = [u for u, k in within.items() if k == d]
@@ -178,12 +181,6 @@ def test_index_matches_brute_force(shape, seed, monkeypatch):
             got = ix.members(w, limit).tolist()
             assert got[0] == w and got == sorted(got)
             assert {back[u] for u in got} == set(within) and len(got) == len(within)
-            if limit >= 0:
-                cut = [
-                    u for u in within
-                    if u != v and (bf.dist(u, v) == limit or u not in bf.kids)
-                ]
-                assert ix.leaves_within(w, limit) == len(cut)
         if v:
             assert ix.num_tips(w) == len([u for u in below if u not in bf.kids])
     assert ix.nearest_named(0) is None and ix.num_tips(0) is None
@@ -201,11 +198,16 @@ def test_index_matches_brute_force(shape, seed, monkeypatch):
 
     for v in {0, *rng.sample(range(n), min(n, 4))}:
         for limit in (-1, 2):
-            for target, top in ((0, 10**6), (3, 12), (10, 10**6)):
+            edges = len(ix.members(node[v], limit)) - 1
+            for gate, target, top in (
+                (0, 0, 10**6), (0, 3, 12), (0, 10, 10**6), (edges - 1, 0, 10**6), (edges, 0, 10**6)
+            ):
+                monkeypatch.setattr(topology, "FRAGMENT_TIER_EDGES", gate)
                 monkeypatch.setattr(topology, "FRAGMENT_TARGET", target)
                 monkeypatch.setattr(topology, "TOP_MAX", top)
                 got = ix.anchor_depth(ix.members(node[v], limit))
-                assert got == bf.anchor_depth(v, limit, target, top), (v, limit, target, top)
+                want = bf.anchor_depth(v, limit, gate, target, top)
+                assert got == want, (v, limit, gate, target, top)
 
 
 def test_index_id_maps():
@@ -458,6 +460,28 @@ def test_subtree_newick_matches_parent_map(generated):
                     assert got == {"newick": want, "supporting_studies": []}, (v, fmt, height)
 
 
+def check_arguson(bf: Brute, names, child_index, blob, u, left) -> int:
+    """Check the arguson blob of ``u`` cut ``left`` levels below it against
+    the parent map; returns the number of blobs seen."""
+    assert blob["node_id"] == f"g{u}"
+    assert blob["num_tips"] == len([x for x in bf.below(u) if x not in bf.kids])
+    assert ("taxon" in blob) == (names[f"g{u}"] is not None)
+    below = sorted(names[f"g{x}"] for x in bf.below(u) - {u} if names[f"g{x}"])
+    if "taxon" not in blob and below:
+        assert blob["descendant_name_list"] == [below[0], below[-1]]
+    else:
+        assert "descendant_name_list" not in blob
+    kids = sorted(bf.kids.get(u, ()), key=lambda c: (child_index[f"g{c}"] or 0, f"g{c}"))
+    if left == 0 or not kids:
+        assert "children" not in blob
+        return 1
+    assert [c["node_id"] for c in blob["children"]] == [f"g{c}" for c in kids]
+    return 1 + sum(
+        check_arguson(bf, names, child_index, b, c, left - 1)
+        for b, c in zip(blob["children"], kids)
+    )
+
+
 def test_subtree_arguson_matches_parent_map(generated):
     """Arguson answers at heights 0-3: each blob's children in (child_index,
     id) order down to the height, its stored tip count (the tree's for the
@@ -467,26 +491,42 @@ def test_subtree_arguson_matches_parent_map(generated):
 
     store, parent, names, _, child_index = generated
     api, bf = TreeOfLifeV3(store), Brute(parent, 400)
-
-    def check(blob, u, left):
-        assert blob["node_id"] == f"g{u}"
-        assert blob["num_tips"] == len([x for x in bf.below(u) if x not in bf.kids])
-        assert ("taxon" in blob) == (names[f"g{u}"] is not None)
-        below = sorted(names[f"g{x}"] for x in bf.below(u) - {u} if names[f"g{x}"])
-        if "taxon" not in blob and below:
-            assert blob["descendant_name_list"] == [below[0], below[-1]]
-        else:
-            assert "descendant_name_list" not in blob
-        kids = sorted(bf.kids.get(u, ()), key=lambda c: (child_index[f"g{c}"] or 0, f"g{c}"))
-        if left == 0 or not kids:
-            assert "children" not in blob
-            return 1
-        assert [c["node_id"] for c in blob["children"]] == [f"g{c}" for c in kids]
-        return 1 + sum(check(b, c, left - 1) for b, c in zip(blob["children"], kids))
-
     for v in subtree_nodes(parent):
         for height in range(4):
             arg = api.subtree(node_id=f"g{v}", tree_format="arguson", height_limit=height)["arguson"]
-            seen = check(arg, v, height)
+            seen = check_arguson(bf, names, child_index, arg, v, height)
             assert seen == len([u for u in bf.below(v) if bf.dist(u, v) <= height])
             assert [b["node_id"] for b in arg["lineage"]] == [f"g{a}" for a in bf.ancestors(v)]
+
+
+def test_fragment_tier_matches_parent_map(generated, monkeypatch):
+    """Past the gate (forced down to 0 edges) the fragment tier answers
+    the same as the parent map: newick whole and cut at height 2 in every
+    label format, with and without labels for unnamed nodes, and arguson
+    at heights 1 and 3, for the root and the widest polytomy."""
+    from treemachine_spark.api.v3 import TreeOfLifeV3
+
+    store, parent, names, _, child_index = generated
+    api, bf = TreeOfLifeV3(store), Brute(parent, 400)
+    monkeypatch.setattr(topology, "FRAGMENT_TIER_EDGES", 0)
+    calls = []
+    fragments = TreeOfLifeV3._fragments
+    monkeypatch.setattr(
+        TreeOfLifeV3, "_fragments", lambda *a: calls.append(1) or fragments(*a)
+    )
+    for v in subtree_nodes(parent)[:2]:
+        for fmt in ("name", "id", "name_and_id"):
+            for include_all in (False, True):
+                for height in (-1, 2):
+                    got = api.subtree(
+                        node_id=f"g{v}", label_format=fmt, height_limit=height,
+                        include_all_node_labels=include_all,
+                    )
+                    want = want_newick(bf, names, child_index, v, fmt, include_all, height)
+                    assert got == {"newick": want, "supporting_studies": []}, (v, fmt, height)
+        for height in (1, 3):
+            arg = api.subtree(node_id=f"g{v}", tree_format="arguson", height_limit=height)["arguson"]
+            seen = check_arguson(bf, names, child_index, arg, v, height)
+            assert seen == len([u for u in bf.below(v) if bf.dist(u, v) <= height])
+            assert [b["node_id"] for b in arg["lineage"]] == [f"g{a}" for a in bf.ancestors(v)]
+    assert len(calls) == 2 * (12 + 2)

@@ -173,31 +173,6 @@ def test_induced_subtree_too_few(api):
         api.induced_subtree(ott_ids=[536234, 99999999])
 
 
-# O3 size-guard parity (tree_of_life_v3.java:685-700) ------------------------
-
-
-def test_tree_too_big_with_caps_enforced(spark):
-    from pathlib import Path
-
-    from treemachine_spark.api.errors import TreeTooBigError
-    from treemachine_spark.api.v3 import TreeOfLifeV3
-    from treemachine_spark.ingest import ingest_synthesis_data
-
-    fix = Path(__file__).parent / "fixtures"
-    store = ingest_synthesis_data(
-        spark,
-        str(fix / "labelled_supertree.tre"),
-        str(fix / "annotations.json"),
-        str(fix / "taxonomy.tsv"),
-    )
-    capped = TreeOfLifeV3(store, max_tips_newick=2, max_tips_arguson=1, enforce_caps=True)
-    with pytest.raises(TreeTooBigError):
-        capped.subtree(ott_id=81461)  # 4 tips > cap of 2
-    with pytest.raises(TreeTooBigError):
-        capped.subtree(ott_id=81461, tree_format="arguson", height_limit=2)
-    # small subtree passes under the cap
-    assert "newick" in capped.subtree(ott_id=5839486, height_limit=0)
-
 
 # ws-tests source_tree parity (tree_of_life_v3.java:822-907) -----------------
 

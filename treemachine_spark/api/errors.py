@@ -19,9 +19,3 @@ class BadIdsError(ValueError):
     def __init__(self, message: str, payload: dict):
         super().__init__(message)
         self.payload = payload
-
-
-class TreeTooBigError(ValueError):
-    """Result-size guard tripped (treeTooBigError, tree_of_life_v3.java:
-    726-731). The rebuild keeps the guard OPTIONAL (max_tips=None disables):
-    Spark removes the reason for the cap, but API parity needs the error."""

@@ -14,7 +14,7 @@ scripts at this process and run every query they run today —
   POST /v2/tree_of_life/{about,mrca,induced_tree,subtree,node_info}
   POST /v3/stats/quantiles        (beyond-reference: streaming sketch stats)
 
-Error semantics match the reference: BadInputError/TreeTooBigError → 400
+Error semantics match the reference: BadInputError → 400
 with {"message": ...}; BadIdsError → 400 carrying the partial response
 payload (BadIdsException.java:9-51, tree_of_life_v3.java:359-361).
 
@@ -32,7 +32,7 @@ import threading
 from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from treemachine_spark.api.errors import BadIdsError, BadInputError, TreeTooBigError
+from treemachine_spark.api.errors import BadIdsError, BadInputError
 
 
 class ResponseCache:
@@ -198,7 +198,7 @@ def _dispatch(apis: dict, path: str, body: dict) -> tuple[int, dict]:
         payload = dict(e.payload)
         payload["message"] = str(e)
         return 400, payload
-    except (BadInputError, TreeTooBigError) as e:
+    except BadInputError as e:
         return 400, {"message": str(e)}
 
 
@@ -426,7 +426,7 @@ class ServerCore:
         def run() -> tuple[int, dict]:
             try:
                 return compute(sketch, body)
-            except (BadInputError, TreeTooBigError) as e:
+            except BadInputError as e:
                 return 400, {"message": str(e)}
             except Exception as e:
                 return 500, {"message": f"{type(e).__name__}: {e}"}
@@ -465,7 +465,7 @@ class ServerCore:
                 if s2 != 200:
                     return s2, b2
                 return 200, {"quantiles": b1, "distinct": b2}
-            except (BadInputError, TreeTooBigError) as e:
+            except BadInputError as e:
                 return 400, {"message": str(e)}
             except Exception as e:
                 return 500, {"message": f"{type(e).__name__}: {e}"}

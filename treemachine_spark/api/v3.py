@@ -22,35 +22,36 @@ nearest taxon, about the root, induced_subtree the labels and annotation
 keys of its nodes, a subtree its members' rows. An unknown id is a 400
 before any job starts.
 
-Subtree answers, newick and arguson alike, take one flow: the opt-in size
-guard, then the node's members within the height limit as one preorder
-walk on the index (``TreeIndex.members``), whose length is the one size
-gate (``FRAGMENT_TIER_EDGES``). Both tiers select members by one rule
-(``_member``: the closure rows below the node within the limit), and the
-index gives the parent links and child order of every printed node
-(``_shape``). Below the gate Spark runs one union fetch over the member
-frame: newick fetches the members' labels and their distinct supported_by
-keys, arguson their blob fields and the T9 names of the unnamed ones; the
-lineage blobs are a second fetch. Past the gate the index also picks the
-anchor depth (``TreeIndex.anchor_depth``);
-``exporters.newick_sink.anchored_fragments`` assembles one fragment per
-anchor executor-side, reading the closure only to map each member to its
-anchor, and the driver fetches and stitches the levels above the anchors.
-Every newick answer shares one label rule (``_label_col``); both subtree
-tiers share one nesting rule (``_nest_blobs``) and one blob constructor
-(``_blob_from_dict``).
+Subtree answers, newick and arguson alike, take one flow: the node's
+members within the height limit as one preorder walk on the index
+(``TreeIndex.members``), which the index alone sizes and cuts
+(``TreeIndex.anchor_depth``: None up to ``topology.FRAGMENT_TIER_EDGES``
+edges, else the anchor depth). The driver prints one walk, all of it below
+the gate or the levels down to the anchors past it, with the parent links
+and child order from the index (``_shape``), and Spark fetches the printed
+levels' rows through one member frame (``_member``: the closure rows below
+the node within the limit) in one union job: newick fetches their labels
+and the members' distinct supported_by keys, arguson their blob fields and
+the T9 names of the unnamed ones (the lineage blobs are a second fetch).
+The one tier-specific step is the fragments (``_fragments``): past the gate
+each anchor's fragment is assembled executor-side by one grouped
+``applyInPandas`` over its members' rows and printed in the anchor's
+place. Every newick answer shares one label rule (``_label_col``); every
+arguson one nesting rule (``_nest_blobs``), one blob constructor
+(``_blob_from_dict``) and one source-key walk over the nested answer.
 """
 
 from __future__ import annotations
 
+import json
 from functools import reduce
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from treemachine_spark.api.errors import BadIdsError, BadInputError, TreeTooBigError
-from treemachine_spark.exporters.newick_sink import anchored_fragments, assemble_newick
+from treemachine_spark.api.errors import BadIdsError, BadInputError
+from treemachine_spark.exporters.newick_sink import assemble_newick
 from treemachine_spark.graph import traversal as T
 from treemachine_spark.graph.topology import TreeIndex
 from treemachine_spark.ingest import GraphStore
@@ -65,13 +66,6 @@ _ANN_FIELDS = [
 ]
 
 LABEL_FORMATS = ("name", "id", "name_and_id")
-
-# the one size gate between the subtree tiers: past this many subtree
-# edges, newick and arguson answers are assembled per anchor fragment
-# executor-side (exporters.newick_sink.anchored_fragments) instead of on the
-# driver — the reference instead refuses newick over 100k tips and arguson
-# over 25k (tree_of_life_v3.java:591-592)
-FRAGMENT_TIER_EDGES = 200_000
 
 
 def _blob_from_dict(d: dict, default_num_tips: int) -> dict:
@@ -112,6 +106,15 @@ def _blob_sources(blobs) -> set:
     """The annotation source keys of the given blobs (getSourceIDMap
     input)."""
     return {k for b in blobs for f in _ANN_FIELDS for k in b.get(f, ())}
+
+
+def _nested(blob: dict):
+    """Every blob of a nested arguson answer, ``blob`` first."""
+    stack = [blob]
+    while stack:
+        b = stack.pop()
+        yield b
+        stack.extend(b.get("children", ()))
 
 
 def _id_list(name: str, ids) -> list:
@@ -226,20 +229,11 @@ def fetch_source_newick(source: str, synth_id: str, base: str = DEFAULT_SOURCE_B
 
 
 class TreeOfLifeV3:
-    def __init__(
-        self,
-        store: GraphStore,
-        max_tips_newick: int | None = 100_000,
-        max_tips_arguson: int | None = 25_000,
-        enforce_caps: bool = False,
-    ):
-        """``enforce_caps=False`` by default: Spark removes the reason for
-        the reference's hard 100k/25k caps (tree_of_life_v3.java:591-592);
-        set True for byte-level API parity."""
+    def __init__(self, store: GraphStore):
+        """The reference's hard 100k/25k tip caps (tree_of_life_v3.java:
+        591-592) are not kept: past ``topology.FRAGMENT_TIER_EDGES`` a
+        subtree is assembled in fragments instead."""
         self.store = store
-        self.max_tips_newick = max_tips_newick
-        self.max_tips_arguson = max_tips_arguson
-        self.enforce_caps = enforce_caps
         # tiny dimension tables, kept driver-side (broadcast-equivalent)
         self._source_map = {
             r["source_id"]: {
@@ -360,28 +354,16 @@ class TreeOfLifeV3:
                 out[s] = {}
         return out
 
-    def _distinct_sources_df(
-        self, member: DataFrame, fields: tuple = ("supported_by",)
-    ) -> DataFrame:
-        """Vocabulary-scale distinct annotation source keys for a member
+    def _distinct_sources_df(self, member: DataFrame) -> DataFrame:
+        """Vocabulary-scale distinct supported_by source keys for a member
         node set (A2 input). The explode is subtree-scale (member edges ×
         annotation keys) but the DISTINCT runs executor-side, so the
         DataFrame this returns — the only thing collected — has one row
         per distinct source id (hundreds at most). VERDICT r6 #2:
         GraphExplorer.getSupportingStudies (GraphExplorer.java:358-399) is
-        a set union; distinct() is that union before the driver transfer.
-        ``fields`` widens the key scan to more annotation maps (arguson
-        collects keys from all of _ANN_FIELDS, getSourceIDMap input)."""
+        a set union; distinct() is that union before the driver transfer."""
         ann = self.store.node_annotations.join(member, "node_id", "left_semi")
-        keys = F.flatten(
-            F.array(
-                *[
-                    F.coalesce(F.map_keys(f), F.array().cast("array<string>"))
-                    for f in fields
-                ]
-            )
-        )
-        return ann.select(F.explode(keys).alias("s")).distinct()
+        return ann.select(F.explode(F.map_keys("supported_by")).alias("s")).distinct()
 
     def _supporting_studies(self, sources: set) -> list[str]:
         """A2 — GraphExplorer.getSupportingStudies (GraphExplorer.java:
@@ -545,15 +527,14 @@ class TreeOfLifeV3:
         v = self._resolve_one(node_id, ott_id)
         newick = tree_format == "newick"
         depth = height_limit if height_limit is not None else (-1 if newick else 5)
-        cap = self.max_tips_newick if newick else self.max_tips_arguson
-        self._guard(v, depth, cap if self.enforce_caps else None)
         nodes = self.index.members(v, depth)
+        cut = self.index.anchor_depth(nodes)
         if newick:
-            return self._subtree_newick(nodes, depth, label_format, include_all_node_labels)
-        return {"arguson": self._arguson(nodes, depth)}
+            return self._subtree_newick(nodes, depth, cut, label_format, include_all_node_labels)
+        return {"arguson": self._arguson(nodes, depth, cut)}
 
     def _member(self, qid: str, depth: int) -> tuple[DataFrame, DataFrame]:
-        """L5 — the one membership rule of both subtree tiers: the closure
+        """L5 — the one membership rule of a subtree answer: the closure
         rows below ``qid`` within ``depth`` levels. Returns the member frame
         (node_id) and the same frame plus ``qid`` itself."""
         sub = self.store.paths.where(F.col("ancestor_id") == qid)
@@ -563,22 +544,39 @@ class TreeOfLifeV3:
         me = self.store.nodes.where(F.col("node_id") == qid).select("node_id")
         return member, member.unionByName(me)
 
-    def _fragments(self, nodes, member: DataFrame, assemble, node_cols) -> tuple[dict, int]:
-        """The fragment tier of the ``TreeIndex.members`` walk ``nodes``:
-        the index picks the anchor depth, and
-        ``exporters.newick_sink.anchored_fragments`` runs ``assemble`` per
-        anchor over every member's edge to its parent (a member or the
-        subtree's root), joined with ``node_cols``. Returns the fragments
-        by anchor id and the anchor depth."""
-        anchor_depth = self.index.anchor_depth(nodes)
-        edges = self.store.edges.join(
-            member.withColumnRenamed("node_id", "child_id"), "child_id", "left_semi"
-        ).select("child_id", "parent_id", "child_index")
-        qid = self.index.ids(nodes[:1])[0]
-        frags = anchored_fragments(
-            edges, self.store.paths, qid, anchor_depth, assemble, node_cols
+    def _fragments(self, qid: str, cut: int, depth: int, assemble, payload, *node_frames) -> dict:
+        """The fragment tier of a subtree answer cut ``cut`` levels below
+        ``qid``: the anchors are the closure rows of that depth, and each
+        owns itself and its closure descendants within the answer's
+        ``depth`` (those at most ``depth - cut`` below it, the ``_member``
+        rule seen from the anchor). Every owned node's edge row (child_id,
+        parent_id, child_index, tip_descendants), tagged with its anchor and
+        left-joined in turn with each per-node frame of ``node_frames``
+        (keyed by node_id), goes as (anchor, child_id, parent_id,
+        child_index, ``payload``) through ONE grouped
+        ``applyInPandas(assemble)`` keyed by anchor. An anchor's own row
+        carries its parent link, which lies outside the fragment. Returns
+        the fragments by anchor id; the driver prints the levels above the
+        anchors, so it handles fanout^cut nodes and never the whole edge
+        list."""
+        paths = self.store.paths
+        anchors = paths.where(
+            (F.col("ancestor_id") == qid) & (F.col("depth") == cut)
+        ).select(F.col("node_id").alias("anchor"))
+        below = paths.join(anchors.withColumnRenamed("anchor", "ancestor_id"), "ancestor_id")
+        if depth >= 0:
+            below = below.where(F.col("depth") <= depth - cut)
+        owned = below.select(
+            F.col("node_id").alias("child_id"), F.col("ancestor_id").alias("anchor")
+        ).unionByName(anchors.select(F.col("anchor").alias("child_id"), "anchor"))
+        rows = self.store.edges.select("child_id", "parent_id", "child_index", "tip_descendants")
+        rows = rows.join(owned, "child_id")
+        for frame in node_frames:
+            rows = rows.join(frame.withColumnRenamed("node_id", "child_id"), "child_id", "left")
+        rows = rows.select("anchor", "child_id", "parent_id", "child_index", payload)
+        return dict(
+            rows.groupBy("anchor").applyInPandas(assemble, "anchor string, frag string").collect()
         )
-        return frags, anchor_depth
 
     def _shape(self, nodes) -> list[tuple]:
         """The (child_id, parent_id, rank) rows of a ``TreeIndex.members``
@@ -589,49 +587,30 @@ class TreeOfLifeV3:
         up = np.searchsorted(nodes, self.index.parent[nodes[1:]]).tolist()
         return [(ids[k], ids[p], k) for k, p in enumerate(up, start=1)]
 
-    def _guard(self, v: int, depth: int, cap: int | None) -> None:
-        """O3 — pre-flight size guard (tree_of_life_v3.java:685-700) on the
-        index: the stored tip_descendants when unbounded, the T5 tip count
-        of the depth-cut subtree when bounded."""
-        if cap is None:
-            return
-        if depth < 0:
-            n = self.index.num_tips(v)
-            if n is None:
-                n = int(self.store.tree_meta.get("num_tips", 0))
-        else:
-            n = self.index.leaves_within(v, depth)
-        if n > cap:
-            raise TreeTooBigError(
-                f"Requested tree ({n} tips) is larger than currently allowed ({cap} tips)."
-            )
-
-    def _subtree_newick(self, nodes, depth, label_format, ids_for_unnamed) -> dict:
+    def _subtree_newick(self, nodes, depth, cut, label_format, ids_for_unnamed) -> dict:
         """T4/T7 newick. The shape comes from the index and one job fetches
-        the labels of the printed nodes (``qid``'s too) and the members'
+        the labels of the printed levels (``qid``'s too) and the members'
         distinct supported_by keys. Below the gate every member is printed;
-        past it the index cuts the subtree at an anchor depth, the fragment
-        tier assembles each anchor's fragment (labels joined in
-        executor-side) and the driver prints the levels above the
-        anchors."""
+        past it the index cuts the subtree ``cut`` levels down, each anchor
+        is printed as its fragment (labels joined in executor-side) and the
+        driver prints the levels above the anchors."""
         v = int(nodes[0])
         qid = self.index.ids([v])[0]
-        member, member_plus = self._member(qid, depth)
+        member, printed = self._member(qid, depth)
         label = self._label_col(label_format, ids_for_unnamed).alias("label")
         frags = None
-        if len(nodes) - 1 > FRAGMENT_TIER_EDGES:
-            frags, anchor_depth = self._fragments(
-                nodes, member, _newick_asm, self.store.nodes.select("node_id", label)
+        if cut is not None:
+            frags = self._fragments(
+                qid, cut, depth, _newick_asm, "label", self.store.nodes.select("node_id", label)
             )
-            nodes = self.index.members(v, anchor_depth)
-            above = self.index.ids(self.index.members(v, anchor_depth - 1))
-            labels_df = self.store.nodes.where(T.ids_in("node_id", above))
-        else:
-            labels_df = self.store.nodes.join(member_plus, "node_id", "left_semi")
-        labels_df = labels_df.select("node_id", label)
-        fetched = labels_df.unionByName(
-            self._distinct_sources_df(member), allowMissingColumns=True
-        ).toArrow()
+            nodes = self.index.members(v, cut)
+            printed = self._member(qid, cut - 1)[1]
+        fetched = (
+            self.store.nodes.join(printed, "node_id", "left_semi")
+            .select("node_id", label)
+            .unionByName(self._distinct_sources_df(member), allowMissingColumns=True)
+            .toArrow()
+        )
         ids, labs, keys = (fetched[c].to_pylist() for c in ("node_id", "label", "s"))
         labels = {i: lab for i, lab in zip(ids, labs) if i is not None}
         sources = {k for i, k in zip(ids, keys) if i is None}
@@ -641,99 +620,48 @@ class TreeOfLifeV3:
             "supporting_studies": self._supporting_studies(sources),
         }
 
-    def _arguson(self, nodes, depth: int) -> dict:
+    def _arguson(self, nodes, depth: int, cut: int | None) -> dict:
         """S9 — getArgusonData (GraphExplorer.java:342-354,434-447): nested
         node blobs with children (depth-limited) + the lineage's blobs +
         source_id_map. Unnamed nodes get descendant_name_list
         (getNodeBlobArguson, GraphExplorer.java:415-429) via the T9
         min/max-named-descendant recipe — one batched aggregation instead
-        of per-node recursion. Below the gate the shape comes from the
-        index and the members' blobs from one fetch; past it the nested
-        blobs are assembled executor-side per anchor subtree (the cap the
-        reference hard-codes is opt-in, like newick's)."""
+        of per-node recursion. The shape comes from the index and the
+        printed levels' blobs from one fetch; past the gate each anchor's
+        nested blob is assembled executor-side from its members' blob
+        fields, serialized there (to_json struct) with the tip count of the
+        member's own edge row."""
         v = int(nodes[0])
         qid = self.index.ids([v])[0]
-        member, member_plus = self._member(qid, depth)
-        if len(nodes) - 1 > FRAGMENT_TIER_EDGES:
-            # arguson collects source keys from ALL annotation maps
-            # (getSourceIDMap input) — vocabulary-scale distinct, A2 discipline
-            sources = {
-                r["s"]
-                for r in self._distinct_sources_df(member_plus, tuple(_ANN_FIELDS)).collect()
-            }
-            top = self._arguson_distributed(nodes, member)
-        else:
-            rows = self._shape(nodes)
-            blobs = self._node_blobs(nodes, member_plus, descendant_names=True)
-            sources = _blob_sources(blobs.values())
-            top = _nest_blobs(qid, rows, blobs)
-        lineage = self.index.lineage(v)
-        lineage_blobs = self._node_blobs(lineage)
-        sources |= _blob_sources(lineage_blobs.values())
+        printed = depth if cut is None else cut - 1
+        blobs = self._node_blobs(
+            self.index.members(v, printed), self._member(qid, printed)[1], descendant_names=True
+        )
+        if cut is not None:
+            unnamed = self.store.nodes.where(F.col("name").isNull()).join(
+                self._member(qid, depth)[0], "node_id", "left_semi"
+            )
+            reps = T.representative_names(
+                self.store.paths.join(
+                    unnamed.select(F.col("node_id").alias("ancestor_id")), "ancestor_id", "left_semi"
+                ),
+                self.store.nodes,
+            ).withColumnRenamed("ancestor_id", "node_id")
+            fields = ("name", "unique_name", "rank", "ott_id", "tax_sources", "tip_descendants")
+            payload = F.to_json(F.struct(*fields, *_ANN_FIELDS, "first_name", "last_name"))
+            asm = _make_arguson_asm(int(self.store.tree_meta.get("num_tips", 0)))
+            frags = self._fragments(
+                qid, cut, depth, asm, payload.alias("blob_json"),
+                self.store.nodes, self.store.node_annotations, reps,
+            )
+            blobs.update({a: json.loads(f) for a, f in frags.items()})
+            nodes = self.index.members(v, cut)
+        top = _nest_blobs(qid, self._shape(nodes), blobs)
+        lineage_blobs = self._node_blobs(self.index.lineage(v))
         top["lineage"] = list(lineage_blobs.values())
+        sources = _blob_sources([*_nested(top), *lineage_blobs.values()])
         top["source_id_map"] = self._source_id_map(sources)
         return top
-
-    def _arguson_distributed(self, nodes, member) -> dict:
-        """Arguson through the fragment tier (``_fragments``): each member's
-        blob fields are serialized executor-side (to_json struct), each
-        anchor's nested blob is built by one applyInPandas call, and the
-        driver fetches and nests only the levels above the anchors, whose
-        shape comes from the index — so driver work is O(result dict),
-        never O(edge rows collected + per-row Python blob building)."""
-        import json
-
-        v = int(nodes[0])
-        qid = self.index.ids([v])[0]
-        # rep names only for unnamed members (pre-filter paths so the T9
-        # aggregate runs over the request's subtree, not the whole store)
-        unnamed_members = (
-            self.store.nodes.where(F.col("name").isNull())
-            .select("node_id")
-            .join(member, "node_id", "left_semi")
-        )
-        reps = T.representative_names(
-            self.store.paths.join(
-                unnamed_members.withColumnRenamed("node_id", "ancestor_id"),
-                "ancestor_id",
-                "left_semi",
-            ),
-            self.store.nodes,
-        ).withColumnRenamed("ancestor_id", "node_id")
-        info = (
-            self.store.nodes.join(self.store.node_annotations, "node_id", "left")
-            .join(
-                self.store.edges.select(
-                    F.col("child_id").alias("node_id"), "tip_descendants"
-                ),
-                "node_id",
-                "left",
-            )
-            .join(reps, "node_id", "left")
-            .select(
-                "node_id",
-                F.to_json(
-                    F.struct(
-                        "name",
-                        "unique_name",
-                        "rank",
-                        "ott_id",
-                        "tax_sources",
-                        "tip_descendants",
-                        *_ANN_FIELDS,
-                        "first_name",
-                        "last_name",
-                    )
-                ).alias("blob_json"),
-            )
-        )
-        asm = _make_arguson_asm(int(self.store.tree_meta.get("num_tips", 0)))
-        frags, anchor_depth = self._fragments(nodes, member, asm, info)
-        # the anchors' blobs (their descendant_name_list included) are the
-        # fragments; the driver fetches the levels above them
-        blobs = self._node_blobs(self.index.members(v, anchor_depth - 1), descendant_names=True)
-        blobs.update({a: json.loads(f) for a, f in frags.items()})
-        return _nest_blobs(qid, self._shape(self.index.members(v, anchor_depth)), blobs)
 
     def induced_subtree(self, node_ids=None, ott_ids=None, label_format=None) -> dict:
         """doInducedSubtree (tree_of_life_v3.java:411-518): T6 on the index

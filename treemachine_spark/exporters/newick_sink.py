@@ -1,8 +1,9 @@
 """Newick sink (S7) — reference: JadeNode.getNewick
 (jade/tree/deprecated/JadeNode.java:167-195), recursive StringBuffer append.
 
-Rebuild: the subtree's edge rows are computed distributed (closure filter),
-then assembled into the newick string with an **iterative** postorder
+Rebuild: the caller hands over the (child, parent) rows of the tree (a
+served subtree's come from the topology index), and they are assembled
+into the newick string with an **iterative** postorder
 (explicit stack — no recursion limit; the reference's recursion is a real
 failure mode at 2.4M tips). Children are emitted in (child_index, child_id)
 order, so output is byte-stable.
@@ -11,18 +12,13 @@ Branch length rule per the reference: when lengths are requested, 0 is
 replaced by MIN_BRANCHLENGTH (JadeNode.java:10, :176-177).
 
 Scale note: string assembly of one tree is inherently O(result) on a single
-machine. For subtrees past the reference's caps, :func:`anchored_fragments`
-is the one fragment decomposition of every subtree format: at the anchor
-depth the topology index picks (``graph.topology.TreeIndex.anchor_depth``),
-it assembles each anchor's fragment executor-side with the caller's
-per-fragment assembler; the driver stitches the levels above the anchors,
-whose shape also comes from the index. The v3 newick and arguson fragment
-tiers are its two callers.
+machine. Past the fragment-tier gate, v3 calls this once per anchor
+fragment executor-side and once more on the driver for the levels above
+the anchors, with each fragment passed in as a leaf override
+(``api.v3.TreeOfLifeV3._fragments``).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 MIN_BRANCHLENGTH = 0.0000000000000000000001
 
@@ -111,35 +107,3 @@ def assemble_newick(
                 out.append(bl_of(nid))
             stack.pop()
     return "".join(out) + ";"
-
-
-def anchored_fragments(edges, paths, root_id: str, anchor_depth: int, assemble, node_cols=None):
-    """The fragment tier shared by every subtree format: the subtree below
-    ``root_id`` (its ``edges`` rows: child_id, parent_id, child_index and
-    whatever else ``assemble`` reads) is cut at ``anchor_depth``, which the
-    caller reads off the topology index (``TreeIndex.anchor_depth``). The
-    anchors are the closure rows of that depth below ``root_id``; each owns
-    itself and its closure descendants. Their edge rows, left-joined with
-    the per-node ``node_cols`` (node_id plus assembler columns) and tagged
-    ``anchor``, go through ONE grouped ``applyInPandas(assemble)`` keyed by
-    anchor, which returns (anchor, frag) per anchor. The anchor's own row
-    carries its parent link, which lies outside the fragment.
-
-    Returns {anchor: frag string}; the caller stitches the levels above
-    the anchors from the index, so the driver handles fanout^anchor_depth
-    nodes and never the whole edge list.
-    """
-    anchors = paths.where(
-        (F.col("ancestor_id") == root_id) & (F.col("depth") == anchor_depth)
-    ).select(F.col("node_id").alias("anchor"))
-    owned = (
-        paths.join(anchors.withColumnRenamed("anchor", "ancestor_id"), "ancestor_id")
-        .select(F.col("node_id").alias("child_id"), F.col("ancestor_id").alias("anchor"))
-        .unionByName(anchors.select(F.col("anchor").alias("child_id"), "anchor"))
-    )
-    rows = edges.join(owned, "child_id")
-    if node_cols is not None:
-        rows = rows.join(node_cols.withColumnRenamed("node_id", "child_id"), "child_id", "left")
-    return dict(
-        rows.groupBy("anchor").applyInPandas(assemble, "anchor string, frag string").collect()
-    )

@@ -12,7 +12,8 @@ request needs Spark only to fetch the rows of the ids in its answer. A
 subtree's shape comes from it too, as the reference rebuilds a
 depth-limited subtree in one process
 (GraphExplorer.reconstructDepthLimitedSubtree, GraphExplorer.java:539-574),
-and so does the cut of a large subtree into executor-side fragments.
+and so do its tier and, past the gate, its cut into executor-side
+fragments (``anchor_depth``).
 
 Siblings are ordered as newick answers print them, by (``child_index``,
 node id), so a node's preorder range is also its subtree in answer order.
@@ -31,10 +32,14 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-# anchor-depth bounds of the fragment tier, read at call time: a fragment
-# is one applyInPandas group, so its size is executor-memory-bound; the
-# levels above the anchors are stitched on the driver, so their cumulative
-# width is driver-bound
+# the fragment tier's policy, read at call time. Past FRAGMENT_TIER_EDGES
+# subtree edges a subtree answer is cut into anchor fragments assembled
+# executor-side — the reference instead refuses newick over 100k tips and
+# arguson over 25k (tree_of_life_v3.java:591-592). A fragment is one
+# applyInPandas group, so its size is executor-memory-bound; the levels
+# above the anchors are printed on the driver, so their cumulative width
+# is driver-bound
+FRAGMENT_TIER_EDGES = 200_000
 FRAGMENT_TARGET = 100_000
 TOP_MAX = 200_000
 
@@ -328,14 +333,15 @@ class TreeIndex:
             return nodes
         return nodes[self.depth[nodes] <= self.depth[v] + limit]
 
-    def anchor_depth(self, nodes) -> int:
-        """The fragment tier's cut of the ``members`` walk ``nodes``: the
-        shallowest level below its root whose largest fragment fits
-        ``FRAGMENT_TARGET``, never letting levels 1..d exceed ``TOP_MAX``
-        nodes; when no level fits, the level with the smallest largest
-        fragment. A fragment is an anchor plus its descendants among
-        ``nodes``, ``searchsorted(nodes, u + size[u]) - rank(u)``, so a
-        depth-limited walk counts only its members.
+    def anchor_depth(self, nodes) -> int | None:
+        """The fragment tier's cut of the ``members`` walk ``nodes``: None
+        when the walk has at most ``FRAGMENT_TIER_EDGES`` edges, so the
+        driver prints it whole; otherwise the shallowest level below its
+        root whose largest fragment fits ``FRAGMENT_TARGET``, never letting
+        levels 1..d exceed ``TOP_MAX`` nodes; when no level fits, the level
+        with the smallest largest fragment. A fragment is an anchor plus its
+        descendants among ``nodes``, ``searchsorted(nodes, u + size[u]) -
+        rank(u)``, so a depth-limited walk counts only its members.
 
         On a balanced fanout-f tree this is the smallest d with
         n/f^d <= FRAGMENT_TARGET; on a caterpillar every level has one
@@ -343,6 +349,8 @@ class TreeIndex:
         afford. The largest fragment strictly shrinks with depth, so
         ``FRAGMENT_TARGET = 0`` with ``TOP_MAX`` set to the node count of
         levels 1..d forces depth d."""
+        if len(nodes) - 1 <= FRAGMENT_TIER_EDGES:
+            return None
         nodes = np.asarray(nodes, np.int64)
         level = (self.depth[nodes] - self.depth[nodes[0]])[1:]
         frag = (np.searchsorted(nodes, nodes + self.size[nodes]) - np.arange(len(nodes)))[1:]
@@ -358,10 +366,3 @@ class TreeIndex:
             if largest[d] <= FRAGMENT_TARGET:
                 return d
         return best or 1
-
-    def leaves_within(self, v: int, limit: int) -> int:
-        """T5 — tips of ``v``'s subtree cut ``limit`` >= 0 levels below it:
-        its descendants at exactly that depth plus the leaves above it."""
-        lo, hi = v + 1, v + int(self.size[v])
-        d = self.depth[lo:hi] - self.depth[v]
-        return int(np.count_nonzero((d == limit) | ((d < limit) & (self.size[lo:hi] == 1))))
